@@ -29,6 +29,7 @@ from converttovectordb_spark.embeddings import (
 )
 from converttovectordb_spark.operators.search import (
     DEFAULT_SCORE_THRESHOLD,
+    cosine_scores,
     knn_topk,
     truncate_content,
     validate_top_k,
@@ -650,13 +651,10 @@ class VectorEngine:
         corpus chunk is grouped by its cluster and tested only against
         the batch rows that PROBED that cluster (the IVF contract).
 
-        Float semantics: corpus rows are L2-normalized in NumPy with
-        the zero-norm→unchanged rule of `l2_normalize` (a zero vector
-        scores 0 and can never pass a positive threshold). This path
-        has no SQL oracle — the engine-level tests compare pruned vs
-        brute DECISIONS, which both use this scorer."""
-        import numpy as np
-
+        Float semantics: `cosine_scores` (a zero vector scores 0 and
+        can never pass a positive threshold). This path has no SQL
+        oracle — the engine-level tests compare pruned vs brute
+        DECISIONS, which both use this scorer."""
         qids = [r["_bid"] for r in batch_rows]
         qmat = np.array([r["_bq"] for r in batch_rows], dtype=np.float64)
 
@@ -694,10 +692,8 @@ class VectorEngine:
                             f"d={cmat.shape[1]} — re-embed or use a "
                             "matching VectorEngine dim"
                         )
-                    norms = np.linalg.norm(cmat, axis=1)
-                    norms[norms == 0.0] = 1.0
                     q = qmat if qidx is None else qmat[qidx]
-                    sims = (cmat / norms[:, None]) @ q.T
+                    sims = cosine_scores(cmat, None, q)
                     matched = (sims >= threshold).any(axis=0)
                     if qidx is None:
                         hit |= matched
@@ -750,8 +746,6 @@ class VectorEngine:
         cents = index.centroids().collect()  # C rows — tiny
         cids = np.array([int(r[CLUSTER_COL]) for r in cents])
         cmat = np.array([r["centroid"] for r in cents], dtype=np.float64)
-        cnorm = np.linalg.norm(cmat, axis=1)
-        cnorm[cnorm == 0.0] = 1.0  # zero-norm centroid → cosine 0
         qmat = np.array([r["_bq"] for r in batch_rows], dtype=np.float64)
         if qmat.shape[1] != cmat.shape[1]:
             raise ValueError(
@@ -760,7 +754,7 @@ class VectorEngine:
                 f"d={cmat.shape[1]} — rebuild the index or use a "
                 "matching VectorEngine dim"
             )
-        sims = qmat @ (cmat / cnorm[:, None]).T  # _bq is already unit
+        sims = cosine_scores(qmat, None, cmat)  # (batch, C)
         by_cluster: dict[int, list[int]] = {}
         k = min(int(nprobe), len(cents))
         for i in range(len(batch_rows)):
@@ -824,13 +818,9 @@ class VectorEngine:
         10k-chunk batch is 10⁸ interpreted folds. Block rows so the
         similarity matrix stays bounded (block × B), never a full
         B×B materialization."""
-        import numpy as np
-
         spark = batch.sparkSession
         if len(rows) < 2:
             return spark.createDataFrame([], "_bid string")
-        # _bq is unit-normalized (a zero-norm vector stays zero and
-        # scores 0 against everything — can never pass the threshold)
         vmat = np.array([r["_bq"] for r in rows], dtype=np.float64)
         keys = sorted(
             range(len(rows)),
@@ -841,7 +831,7 @@ class VectorEngine:
         dropped = []
         for start in range(0, len(rows), 2048):
             stop = min(start + 2048, len(rows))
-            sims = vmat[start:stop] @ vmat.T  # block × B
+            sims = cosine_scores(vmat[start:stop], None, vmat)  # block × B
             hit = (
                 (sims >= threshold) & (rank[None, :] < rank[start:stop, None])
             ).any(axis=1)
@@ -2983,9 +2973,11 @@ class VectorEngine:
                 "avg_chunks_per_file": None,
             }
         docs = self.store.load(require_embedding=False)
-        # Exactly TWO jobs at serving time: the fused one-pass aggregate
-        # (A1/A3/A4/avg-chars/A5 share one scan + one shuffle) and the
-        # per-extension groupBy. Was three scans before round 3.
+        # Two actions: the fused one-pass aggregate (A1/A3/A4/avg-chars/
+        # A5 share one scan + one shuffle) and the per-extension
+        # groupBy. Each re-runs the store's `load()` plan, so the Spark
+        # job count follows that plan: a transactional store after one
+        # upsert measured 12 jobs and 26 tasks per stats() call.
         base = corpus_stats_full(docs).collect()[0].asDict()
         base["documents_by_extension"] = {
             r["extension"]: r["n_docs"] for r in docs_by_extension(docs).collect()

@@ -25,6 +25,7 @@ Spark-first design notes:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -52,6 +53,67 @@ def validate_top_k(top_k: object) -> int:
     if not isinstance(top_k, int) or isinstance(top_k, bool) or top_k <= 0:
         return DEFAULT_TOP_K
     return top_k
+
+
+# -- the numpy scoring kernel -------------------------------------------
+# Every numpy scorer in the package (the matrix and bits serving
+# tiers, the BLAS and Arrow Spark-side scorers, ingest dedup) is built
+# from these three primitives, so the zero-norm rule, the fold
+# rounding and the boundary-tie cut each exist once.
+
+
+def cosine_scores(
+    M: np.ndarray, norms: np.ndarray | None, Q: np.ndarray
+) -> np.ndarray:
+    """(n, q) cosine of every row of ``M`` against every row of ``Q``
+    as ONE BLAS product, with the reference's zero-norm rule
+    (mock_vector_db_api.py:37-52): a pair with a zero vector on either
+    side scores 0.0. ``norms`` are ``M``'s cached row norms (the
+    serving matrix keeps them from its fill), or ``None`` to compute
+    them here.
+
+    BLAS sums in its own order, so scores sit within ~1e-16 of the
+    JVM fold's — callers that must bit-match an oracle's fold use
+    `fold_dot` instead."""
+    if norms is None:
+        norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+    denom = np.outer(norms, qn)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, 0.0, (M @ Q.T) / denom)
+
+
+def fold_dot(Q: np.ndarray, D: np.ndarray) -> np.ndarray:
+    """(q, n) dot products of every row of ``Q`` against every row of
+    ``D``, accumulated one dimension at a time, ascending:
+
+        acc += Q[:, i] ⊗ D[:, i]
+
+    Per pair that is exactly one rounded multiply and one rounded add
+    per dimension in index order — the rounding sequence of the JVM
+    left fold `aggregate(zip_with(a, b, x * y), 0.0, acc + x)`, so the
+    result is BIT-IDENTICAL to it (numpy elementwise ufuncs never fuse
+    into FMA; `np.dot`/BLAS would reorder and break oracle parity)."""
+    out = np.zeros((Q.shape[0], D.shape[0]))
+    for i in range(Q.shape[1]):
+        out += Q[:, i : i + 1] * D[:, i]
+    return out
+
+
+def topk_with_ties(scores: np.ndarray, k: int) -> np.ndarray:
+    """Ascending indices of every entry scoring at or above the k-th
+    highest score: the top ``k`` plus every entry tied with the k-th.
+    Keeping the boundary ties lets a later deterministic tie-break (id
+    ascending) pick among them; dropping one here could break it.
+    Smallest-first rankings (Hamming distance) pass the negated
+    distances."""
+    n = len(scores)
+    if k <= 0:
+        return np.zeros(0, dtype=np.int64)
+    if k >= n:
+        return np.arange(n)
+    kth = np.partition(scores, n - k)[n - k]
+    return np.flatnonzero(scores >= kth)
 
 
 def knn_topk(
@@ -448,20 +510,20 @@ def knn_join_blas(
     Why not `knn_join` here: its per-pair score is an interpreted
     `F.aggregate`/`zip_with` fold — fine where a DuckDB oracle must
     bit-match the fold (every graded query keeps it), ~0.9 ms per
-    pair-core where it doesn't (tools/batch_scoring_probe.py: the
-    Q=16 × N=13,515 × d=384 candidate stage costs 5.8 s wall at 32-way
-    parallelism and grows linearly in Q, vs 0.47 s FLAT here — one
-    matmul per Arrow chunk; inside the /diverse_batch POST the fold
-    measured 11.2 s on the serving cache's narrower partitioning). Same tradeoff as the ingest-dedup
-    scorer (`VectorEngine._dup_hits_map`), serving edition.
+    pair-core where it doesn't (measured on the Q=16 × N=13,515 ×
+    d=384 candidate stage: 5.8 s wall at 32-way parallelism, growing
+    linearly in Q, vs 0.47 s FLAT here — one matmul per Arrow chunk;
+    inside the /diverse_batch POST the fold measured 11.2 s on the
+    serving cache's narrower partitioning). Same tradeoff as the
+    ingest-dedup scorer (`VectorEngine._dup_hits_map`), serving
+    edition.
 
-    Semantics match `knn_join` to float-ulp: both sides L2-normalized
-    first (zero-norm rows pass through, so they dot to 0.0), per-query
-    top-k with (score desc, ``order_cols`` asc) ties, threshold AFTER
-    the limit. Only the dot's summation order differs (pairwise BLAS
-    vs sequential fold) — callers comparing against fold-scored
-    results compare to ~1e-9, the established /query vs /query_batch
-    contract.
+    Semantics match `knn_join` to float-ulp: `cosine_scores` (zero-
+    norm rows score 0.0), per-query top-k with (score desc,
+    ``order_cols`` asc) ties, threshold AFTER the limit. Only the
+    dot's summation order differs (pairwise BLAS vs sequential fold) —
+    callers comparing against fold-scored results compare to ~1e-9,
+    the established /query vs /query_batch contract.
 
     Scale shape: the chunk-local prune emits ≤ Q·(k + boundary ties)
     rows per chunk — boundary ties are KEPT (duplicate embeddings
@@ -472,8 +534,6 @@ def knn_join_blas(
     row that scored — the duplicate-identity contract `knn_join`'s
     carry established); ``order_cols`` (default: all carry cols) are
     the deterministic tie-break and must be carried."""
-    import numpy as np
-
     top_k = validate_top_k(top_k)
     carry = list(carry_cols or [])
     order = list(order_cols if order_cols is not None else carry)
@@ -490,17 +550,12 @@ def knn_join_blas(
         )
     qids = np.array([int(q) for q, _ in query_rows], dtype=np.int64)
     qmat = np.array([v for _, v in query_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0.0] = 1.0  # zero-norm query passes through → dots 0
-    qunit = qmat / qnorm[:, None]
-    k = top_k
 
     def score_chunks(chunks):
         import pandas as pd
 
         for pdf in chunks:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             vecs = list(pdf[doc_vec_col])
             # ragged embedding lengths make np.array raise (or collapse
@@ -513,22 +568,16 @@ def knn_join_blas(
                     f"lengths {lens} — re-embed or rebuild the corpus"
                 )
             cmat = np.array(vecs, dtype=np.float64)
-            if cmat.shape[1] != qunit.shape[1]:
+            if cmat.shape[1] != qmat.shape[1]:
                 raise ValueError(
-                    f"query dimension {qunit.shape[1]} != stored "
+                    f"query dimension {qmat.shape[1]} != stored "
                     f"dimension {cmat.shape[1]}"
                 )
-            norms = np.linalg.norm(cmat, axis=1)
-            norms[norms == 0.0] = 1.0
-            sims = (cmat / norms[:, None]) @ qunit.T  # (n, Q)
+            sims = cosine_scores(cmat, None, qmat)  # (n, Q)
             frames = []
             for qi in range(len(qids)):
                 s = sims[:, qi]
-                if n > k:
-                    kth = np.partition(s, n - k)[n - k]
-                    idx = np.flatnonzero(s >= kth)  # keep boundary ties
-                else:
-                    idx = np.arange(n)
+                idx = topk_with_ties(s, top_k)
                 sub = pdf.iloc[idx][carry].copy() if carry else pd.DataFrame(
                     index=range(len(idx))
                 )
@@ -703,7 +752,6 @@ def ivf_knn_join_shuffled(
     query_label_col: str | None = None,
     cluster_sizes: dict | None = None,
     n_queries: int | None = None,
-    scorer: str = "arrow",
 ) -> DataFrame:
     """IVF KNN join for CORPUS-SCALE query sets (self-join dedup,
     corpus-to-corpus linking, embedding-space audits, hard-negative
@@ -749,11 +797,10 @@ def ivf_knn_join_shuffled(
          sides as a cluster→S_c map. Only hot clusters pay probe
          replication; uniform-S replicates EVERY probe row S ways,
          which at 100 TB wastes shuffle volume on the cold tail.
-      3. Per-(query, cluster) partial top-k: the join output is already
-         hash-partitioned by the join key, which satisfies the window's
-         clustering requirement, so this prune costs a local sort and
-         NO exchange — at most nprobe·S·k rows per query survive into
-      	 the final per-query top-k window, keeping the last shuffle
+      3. Per-(cluster[, salt]) scoring + partial top-k in ONE cogrouped
+         Arrow stage (`_cogroup_score_topk`) over the two co-partitioned
+         sides — at most nprobe·S·k rows per query survive into the
+         final per-query top-k window, keeping the last shuffle
          O(Q·nprobe·S·k) regardless of cluster sizes.
 
     Scoring PRENORMALIZES both sides (the `knn_join` optimization: the
@@ -762,17 +809,26 @@ def ivf_knn_join_shuffled(
     pass through and dot to 0.0, preserving the zero-norm→0.0
     contract). Both join sides are explicitly repartitioned on the
     join key with the session's shuffle width: semantically free (the
-    join would shuffle on that key anyway) but it pins the scoring
+    cogroup would shuffle on that key anyway) but it pins the scoring
     stage's parallelism — AQE's coalescing is byte-based and would
     otherwise serialize this compute-dense/byte-light stage at small
     data sizes (measured 16.7 s → 1.9 s at sf0.1 on local[32]), and it
     never coalesces a user-specified partition count.
+
+    ``exclude_self`` compares query and doc ids in numpy, which has no
+    implicit cast: both id columns must have the same Spark type.
     """
     top_k = validate_top_k(top_k)
-    if scorer not in ("arrow", "fold"):
-        raise ValueError(
-            f'scorer must be "arrow" or "fold", got {scorer!r}'
-        )
+    if exclude_self:
+        qid_t = queries.schema[query_id_col].dataType
+        did_t = docs.schema[doc_id_col].dataType
+        if qid_t != did_t:
+            raise ValueError(
+                f"exclude_self compares {query_id_col!r} "
+                f"({qid_t.simpleString()}) with {doc_id_col!r} "
+                f"({did_t.simpleString()}) — cast one side so both ids "
+                "have the same type"
+            )
     if isinstance(salt_buckets, str):
         if salt_buckets != "auto":
             raise ValueError(
@@ -961,43 +1017,17 @@ def ivf_knn_join_shuffled(
     )
     docs_side = docs_side.repartition(nparts, *join_keys)
     probe = probe.repartition(nparts, *join_keys)
-    if scorer == "arrow":
-        pruned = _cogroup_score_topk(
-            probe,
-            docs_side,
-            join_keys,
-            top_k=top_k,
-            query_id_col=query_id_col,
-            doc_id_col=doc_id_col,
-            cluster_col=cluster_col,
-            exclude_self=exclude_self,
-            query_label_col=query_label_col,
-        )
-    else:
-        cand = probe.join(docs_side, on=join_keys, how="inner")
-        if exclude_self:
-            cand = cand.filter(F.col(query_id_col) != F.col(doc_id_col))
-        if query_label_col is not None:
-            # pre-top-k disqualifier: the joined row's doc cluster/label
-            # is the join key column, the query's own label rode the
-            # probe
-            cand = cand.filter(
-                F.col(query_label_col) != F.col(cluster_col)
-            )
-        scored = cand.withColumn(
-            "score", dot_product(F.col("_qvec"), F.col("_dvec"))
-        )
-        # Partial prune: same partitionBy prefix as the join key, so the
-        # join's output partitioning satisfies it — local sort, no
-        # exchange.
-        wp = Window.partitionBy(*join_keys, query_id_col).orderBy(
-            F.col("score").desc(), F.col(doc_id_col).asc()
-        )
-        pruned = (
-            scored.withColumn("_crank", F.row_number().over(wp))
-            .filter(F.col("_crank") <= top_k)
-            .drop("_crank")
-        )
+    pruned = _cogroup_score_topk(
+        probe,
+        docs_side,
+        join_keys,
+        top_k=top_k,
+        query_id_col=query_id_col,
+        doc_id_col=doc_id_col,
+        cluster_col=cluster_col,
+        exclude_self=exclude_self,
+        query_label_col=query_label_col,
+    )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("score").desc(), F.col(doc_id_col).asc()
     )
@@ -1027,33 +1057,31 @@ def _cogroup_score_topk(
     query_label_col: str | None,
 ) -> DataFrame:
     """Per-(cluster[, salt]) scoring + partial top-k as ONE cogrouped
-    Arrow stage (guide §4.2), replacing the fold path's equi-join +
-    interpreted `aggregate(zip_with(...))` dot + window prune.
+    Arrow stage (guide §4.2), in place of an equi-join + interpreted
+    `aggregate(zip_with(...))` dot + window prune.
 
-    Higher-order functions bypass whole-stage codegen, so the fold dot
+    Higher-order functions bypass whole-stage codegen, so a fold dot
     is the per-pair cost at every scale (r15 plan audit:
-    `vector_knn_selfjoin_ivf` spends its wall in the interpreted fold).
+    `vector_knn_selfjoin_ivf` spent its wall in the interpreted fold).
     Here each (cluster, salt) group ships BOTH sides to one Python
-    worker as Arrow batches and scores with a numpy column loop:
+    worker as Arrow batches and scores with `fold_dot`, whose rounding
+    sequence is the JVM left fold's — scores are BIT-IDENTICAL to the
+    fold plan the graded oracles replay (a property test pins this
+    against a test-local fold reference). Ties and pruning replicate
+    that plan's window exactly: docs sorted by id ascending, stable
+    argsort on score descending, top_k per (group, query).
 
-        acc += q[:, i] ⊗ d[:, i]          (i ascending)
-
-    which performs, per pair, exactly one rounded float64 multiply and
-    one rounded add per dimension in index order — the same rounding
-    sequence as the JVM left fold `acc + (a_i * b_i)`, so scores are
-    BIT-IDENTICAL to the fold path (numpy elementwise ufuncs never fuse
-    into FMA; `np.dot`/BLAS would reorder and break oracle parity).
-    Ties and pruning replicate the fold path's window exactly: docs
-    sorted by id ascending, stable argsort on score descending, top_k
-    per (group, query). Self-pairs and same-label pairs are dropped
-    BEFORE the prune, as in the fold path.
+    The equi-join's filters are replicated with Spark's NULL logic:
+    a NULL join key never matches (the cogroup would pair NULL keys),
+    self-pairs drop before the prune, and the label disqualifier keeps
+    a row only where ``label != cluster`` is TRUE — a NULL on either
+    side drops it, as Spark's filter does.
 
     Memory contract: a group holds O((|Q_g| + |D_g|)·d) vectors plus a
     chunk×|D_g| score block; salting already bounds |D_g| (that is its
     job), and probes are scored in `_ARROW_SCORE_CHUNK`-row blocks, so
     a hot cluster cannot OOM the worker.
     """
-    import numpy as np
     import pandas as pd
 
     qid_t = probe.schema[query_id_col].dataType.simpleString()
@@ -1070,15 +1098,17 @@ def _cogroup_score_topk(
                 "score": pd.Series([], dtype="float64"),
             }
         )
-        if query_label_col is not None and len(qpdf):
-            qpdf = qpdf[
-                qpdf[query_label_col].to_numpy()
-                != qpdf[cluster_col].to_numpy()
-            ]
         if not len(qpdf) or not len(dpdf):
             return empty
+        if pd.isna(qpdf[cluster_col].iloc[0]):
+            return empty  # a NULL join key matches nothing
+        if query_label_col is not None:
+            label = qpdf[query_label_col]
+            qpdf = qpdf[label.notna() & (label != qpdf[cluster_col])]
+            if not len(qpdf):
+                return empty
         # doc-id-ascending order makes the stable argsort's tie-break
-        # equal the fold path's (score desc, doc_id asc) window order
+        # equal the fold plan's (score desc, doc_id asc) window order
         dpdf = dpdf.sort_values(doc_id_col, kind="stable")
         dmat = np.stack(dpdf["_dvec"].to_numpy())  # (D, dim) float64
         dids = dpdf[doc_id_col].to_numpy()
@@ -1087,13 +1117,10 @@ def _cogroup_score_topk(
         k = min(top_k, len(dids))
         out_q, out_d, out_s = [], [], []
         for lo in range(0, len(qpdf), _ARROW_SCORE_CHUNK):
-            qmat = np.stack(qvecs[lo : lo + _ARROW_SCORE_CHUNK])
             qids = qids_all[lo : lo + _ARROW_SCORE_CHUNK]
-            scores = np.zeros((qmat.shape[0], dmat.shape[0]))
-            for i in range(qmat.shape[1]):
-                # one rounded multiply + one rounded add per element,
-                # ascending i — the JVM left fold's exact sequence
-                scores += qmat[:, i : i + 1] * dmat[:, i]
+            scores = fold_dot(
+                np.stack(qvecs[lo : lo + _ARROW_SCORE_CHUNK]), dmat
+            )
             neg = -scores
             if exclude_self:
                 # +inf sorts last, past every real candidate; surviving

@@ -37,6 +37,11 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
+from converttovectordb_spark.operators.search import (
+    cosine_scores,
+    topk_with_ties,
+)
+
 #: Default driver-memory budget for the matrix tier, in float64 cells
 #: (rows × dim). 200M cells = 1.6 GB — a broadcast-table-sized cache.
 #: Above this the server falls back to the distributed scan tier.
@@ -83,6 +88,22 @@ def _pack_bits64(bits_2d: np.ndarray) -> np.ndarray:
     if pad:
         packed = np.pad(packed, ((0, 0), (0, pad)))
     return np.ascontiguousarray(packed).view(np.uint64)
+
+
+def _hamming_distances(words: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """(n,) Hamming distance of every packed sign-bit row to query
+    vector ``q``'s sign bits. Blocked: the SWAR popcount allocates ~3
+    full-size temporaries of its input, so the scan runs
+    `BITS_SCAN_BLOCK_ROWS` rows at a time — the transient stays a
+    block's working set whatever the corpus size."""
+    qbits = _pack_bits64((q > 0).reshape(1, -1))
+    ham = np.empty(words.shape[0], dtype=np.int64)
+    for lo in range(0, words.shape[0], BITS_SCAN_BLOCK_ROWS):
+        hi = lo + BITS_SCAN_BLOCK_ROWS
+        ham[lo:hi] = _popcount64(np.bitwise_xor(words[lo:hi], qbits)).sum(
+            axis=1, dtype=np.int64
+        )
+    return ham
 
 #: Admission multiple of the bits tier over the float matrix tier:
 #: one packed sign bit per dimension vs one float64 cell — the SAME
@@ -244,12 +265,14 @@ def _size_probe(df: DataFrame, embedding_col: str):
     return n, first_dim, payload_bytes
 
 
-def _as_query_matrix(query_vectors) -> np.ndarray:
-    """(Q, d) float64 matrix from a batch of query vectors, with the
-    batch doors' shared validation: ragged input raises the intended
+def _as_query_matrix(query_vectors, dim: int) -> np.ndarray:
+    """(Q, d) float64 matrix from a batch of query vectors, with every
+    door's shared validation: ragged input raises the intended
     equal-length message (a bare ``np.asarray`` would surface numpy's
     inhomogeneous-shape text through the server's 400), non-finite
-    values raise the single-door message."""
+    values raise, and a width other than the corpus's ``dim`` raises
+    the Q5 message (``dim=0`` is an empty corpus: no guard, every query
+    answers with no rows)."""
     rows = [[float(x) for x in v] for v in query_vectors]
     if rows and len({len(r) for r in rows}) != 1:
         raise ValueError(
@@ -263,6 +286,10 @@ def _as_query_matrix(query_vectors) -> np.ndarray:
     if not np.all(np.isfinite(Q)):
         raise ValueError(
             "query embedding contains non-finite values (NaN/Infinity)"
+        )
+    if dim and Q.shape[1] != dim:
+        raise ValueError(
+            f"query dimension {Q.shape[1]} != stored dimension {dim}"
         )
     return Q
 
@@ -281,16 +308,8 @@ def select_among(
     candidates, then ascending ``id_cols`` break ties (Q3) — and the
     score threshold applied AFTER the limit (Q4). ``scores[j]`` scores
     ``payload[idx[j]]`` (``idx=None`` → ``payload[j]``)."""
-    m = len(scores)
-    k = min(int(top_k), m)
-    if k == 0:
-        return []
-    if k < m:
-        part = np.argpartition(-scores, k - 1)[:k]
-        kth = scores[part].min()
-        cand = np.nonzero(scores >= kth)[0]
-    else:
-        cand = np.arange(m)
+    k = min(int(top_k), len(scores))
+    cand = topk_with_ties(scores, k)
 
     def _row(j: int) -> dict:
         return payload[int(idx[j]) if idx is not None else j]
@@ -425,7 +444,8 @@ class DriverMatrixIndex:
     ) -> list[dict]:
         """Top-k rows as dicts with a ``score`` key — the same contract
         (and the same reference semantics Q1/Q3/Q4/Q5) as
-        ``knn_topk(...).collect()`` on this corpus.
+        ``knn_topk(...).collect()`` on this corpus. A batch of one
+        through :meth:`query_batch`, so the two doors cannot drift.
 
         ``mrl_dim=d'`` turns the Matryoshka truncation dial
         (`IVFIndex.search`'s prefix-score-then-rerank, matrix edition):
@@ -434,7 +454,7 @@ class DriverMatrixIndex:
         ``mrl_shortlist`` (default 4×top_k) survive, and only the
         survivors are re-scored at full dimension. ``hamming_shortlist
         =N`` is the sign-bit edition: vectors quantize to 1 bit/dim
-        (packed uint8 words, cached), candidates rank by Hamming
+        (packed uint64 words, cached), candidates rank by Hamming
         distance (xor + popcount — ~d/8 bytes touched per row instead
         of d float64s), and the N nearest rerank exactly. Latency
         note, measured (SCALING.md r13/r14): at matrix-tier N the
@@ -442,58 +462,76 @@ class DriverMatrixIndex:
         the dial exists here for cross-tier semantic parity; the
         regime where it pays is the corpus the matrix tier cannot
         admit, served by :class:`BitsMatrixIndex`. Both
-        prefilters keep ALL rows tied at the shortlist boundary (the
-        `knn_join_blas` tie rule), so results are deterministic and a
+        prefilters keep ALL rows tied at the shortlist boundary
+        (`topk_with_ties`), so results are deterministic and a
         d'=dim / N≥n setting reproduces the exact path by
         construction. Recall for both dials is a measured contract
         (`mrl_recall_curve` / `binary_quant_recall` grade them;
         `measure_mrl_curve` persists the resolvable curve). Mutually
         exclusive — stacked prefilters compound unmeasured loss."""
-        q = np.asarray([float(x) for x in query_vector], dtype=np.float64)
-        if not np.all(np.isfinite(q)):
-            raise ValueError(
-                "query embedding contains non-finite values (NaN/Infinity)"
-            )
-        if self.n == 0:
-            return []
-        if q.shape[0] != self.dim:
-            raise ValueError(
-                f"query dimension {q.shape[0]} != stored dimension {self.dim}"
-            )
-        cand = self._prefilter_candidates(
-            q,
-            top_k=top_k,
+        return self.query_batch(
+            [query_vector],
+            top_k,
+            score_threshold=score_threshold,
+            id_cols=id_cols,
             mrl_dim=mrl_dim,
             mrl_shortlist=mrl_shortlist,
             hamming_shortlist=hamming_shortlist,
-        )
-        qn = math.sqrt(float(np.dot(q, q)))
-        if cand is None:
-            if qn == 0.0:
-                scores = np.zeros(self.n)
-            else:
-                denom = self.norms * qn
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    scores = np.where(
-                        self.norms == 0.0, 0.0, (self.matrix @ q) / denom
-                    )
-            return self._select_topk(scores, top_k, score_threshold, id_cols)
-        # exact rerank over the shortlist only — the full-width matvec
-        # runs for |cand| rows, never the corpus
-        sub = self._exact_scores_among(cand, q, qn)
-        return self._select_among(cand, sub, top_k, score_threshold, id_cols)
+        )[0]
 
-    def _exact_scores_among(
-        self, idx: np.ndarray, q: np.ndarray, qn: float
-    ) -> np.ndarray:
-        """Full-dimension cosine for the given row indices only."""
-        if qn == 0.0:
-            return np.zeros(len(idx))
-        norms = self.norms[idx]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return np.where(
-                norms == 0.0, 0.0, (self.matrix[idx] @ q) / (norms * qn)
+    def query_batch(
+        self,
+        query_vectors: list[list[float]],
+        top_k: int,
+        *,
+        score_threshold: float = 0.1,
+        id_cols: list[str] | None = None,
+        mrl_dim: int | None = None,
+        mrl_shortlist: int | None = None,
+        hamming_shortlist: int | None = None,
+    ) -> list[list[dict]]:
+        """:meth:`query` for Q vectors: ONE GEMM scores all Q queries
+        against the corpus (``matrix @ Q.T``), then each query runs the
+        shared selection. Per-query cost amortizes the matrix traversal
+        — BLAS reuses each corpus row across all Q columns while it is
+        in cache, which a Q-times loop of matrix-vector products cannot.
+
+        With a prefilter dial turned (``mrl_dim`` /
+        ``hamming_shortlist``), the full-corpus GEMM is SKIPPED: each
+        query runs the prefix/Hamming prefilter (O(n·d') or O(n·d/8)
+        per query) and full-width arithmetic touches only its
+        shortlist rows."""
+        Q = _as_query_matrix(query_vectors, self.dim)
+        if self.n == 0:
+            return [[] for _ in range(Q.shape[0])]
+        dialed = mrl_dim is not None or hamming_shortlist is not None
+        if not dialed and mrl_shortlist is not None:
+            raise ValueError("mrl_shortlist requires mrl_dim")
+        full = None if dialed else cosine_scores(self.matrix, self.norms, Q)
+        out = []
+        for j in range(Q.shape[0]):
+            if full is not None:
+                cand, scores = None, np.ascontiguousarray(full[:, j])
+            else:
+                q = Q[j : j + 1]
+                cand = self._prefilter_candidates(
+                    q,
+                    top_k=top_k,
+                    mrl_dim=mrl_dim,
+                    mrl_shortlist=mrl_shortlist,
+                    hamming_shortlist=hamming_shortlist,
+                )
+                # exact rerank over the shortlist only — the full-width
+                # matvec runs for |cand| rows, never the corpus
+                scores = cosine_scores(
+                    self.matrix[cand], self.norms[cand], q
+                )[:, 0]
+            out.append(
+                select_among(
+                    self.payload, cand, scores, top_k, score_threshold, id_cols
+                )
             )
+        return out
 
     def _prefilter_candidates(
         self,
@@ -503,15 +541,9 @@ class DriverMatrixIndex:
         mrl_dim: int | None,
         mrl_shortlist: int | None,
         hamming_shortlist: int | None,
-    ) -> np.ndarray | None:
-        """Candidate row indices from the requested prefilter dial, or
-        None when no dial is turned (callers then run the exact path).
-        Shared validation + boundary-tie rule for single and batched
-        doors (they MUST not drift)."""
-        if mrl_dim is None and hamming_shortlist is None:
-            if mrl_shortlist is not None:
-                raise ValueError("mrl_shortlist requires mrl_dim")
-            return None
+    ) -> np.ndarray:
+        """Candidate row indices for one (1, d) query from the requested
+        prefilter dial — validation plus the boundary-tie shortlist."""
         if mrl_dim is not None and hamming_shortlist is not None:
             raise ValueError(
                 "mrl_dim and hamming_shortlist are mutually exclusive — "
@@ -530,38 +562,17 @@ class DriverMatrixIndex:
                     f"mrl_shortlist ({n_short}) must be >= top_k ({k})"
                 )
             d = min(int(mrl_dim), self.dim)
-            pnorms = self._prefix_norms(d)
-            qp = q[:d]
-            qpn = math.sqrt(float(np.dot(qp, qp)))
-            if qpn == 0.0:
-                pre = np.zeros(self.n)
-            else:
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    pre = np.where(
-                        pnorms == 0.0,
-                        0.0,
-                        (self.matrix[:, :d] @ qp) / (pnorms * qpn),
-                    )
-            if n_short >= self.n:
-                return np.arange(self.n)
-            part = np.argpartition(-pre, n_short - 1)[:n_short]
-            kth = pre[part].min()
-            return np.nonzero(pre >= kth)[0]
+            pre = cosine_scores(
+                self.matrix[:, :d], self._prefix_norms(d), q[:, :d]
+            )
+            return topk_with_ties(pre[:, 0], n_short)
         n_short = int(hamming_shortlist)
         if n_short < k:
             raise ValueError(
                 f"hamming_shortlist ({n_short}) must be >= top_k ({k})"
             )
-        bits = self._sign_bits()
-        qbits = _pack_bits64((q > 0).reshape(1, -1))
-        ham = _popcount64(np.bitwise_xor(bits, qbits)).sum(
-            axis=1, dtype=np.int64
-        )
-        if n_short >= self.n:
-            return np.arange(self.n)
-        part = np.argpartition(ham, n_short - 1)[:n_short]
-        kth = ham[part].max()
-        return np.nonzero(ham <= kth)[0]
+        ham = _hamming_distances(self._sign_bits(), q[0])
+        return topk_with_ties(-ham, n_short)
 
     def _prefix_norms(self, d: int) -> np.ndarray:
         """Cached ‖row[:d]‖ per corpus row (one O(n·d') pass per
@@ -588,124 +599,6 @@ class DriverMatrixIndex:
             if self._bits is None:
                 self._bits = bits
             return self._bits
-
-    def _select_topk(
-        self,
-        scores: np.ndarray,
-        top_k: int,
-        score_threshold: float,
-        id_cols: list[str] | None,
-    ) -> list[dict]:
-        """Shared per-query selection (single and batched doors MUST
-        not drift): top-k with the deterministic tie-break — ALL rows
-        tied with the k-th score stay candidates, then ascending
-        id_cols break ties — and the threshold applied AFTER the limit
-        (Q4)."""
-        return self._select_among(
-            None, scores, top_k, score_threshold, id_cols
-        )
-
-    def _select_among(
-        self,
-        idx: np.ndarray | None,
-        scores: np.ndarray,
-        top_k: int,
-        score_threshold: float,
-        id_cols: list[str] | None,
-    ) -> list[dict]:
-        """`_select_topk` over a candidate SUBSET: ``scores[j]`` scores
-        corpus row ``idx[j]`` (``idx=None`` → the full corpus, the
-        historical path). Delegates to the module-level
-        :func:`select_among` — ONE selection implementation shared
-        with the bits tier so no driver tier can drift on tie-breaks
-        or the threshold-after-limit rule."""
-        return select_among(
-            self.payload, idx, scores, top_k, score_threshold, id_cols
-        )
-
-    def query_batch(
-        self,
-        query_vectors: list[list[float]],
-        top_k: int,
-        *,
-        score_threshold: float = 0.1,
-        id_cols: list[str] | None = None,
-        mrl_dim: int | None = None,
-        mrl_shortlist: int | None = None,
-        hamming_shortlist: int | None = None,
-    ) -> list[list[dict]]:
-        """Batched twin of :meth:`query`: ONE GEMM scores all Q queries
-        against the corpus (``matrix @ Q.T``), then the per-query
-        selection reuses the single-query path exactly. Per-query cost
-        amortizes the matrix traversal — BLAS reuses each corpus row
-        across all Q columns while it is in cache, which a Q-times
-        loop of matrix-vector products cannot.
-
-        With a prefilter dial turned (``mrl_dim`` /
-        ``hamming_shortlist`` — :meth:`query`'s contract, validated by
-        the same shared code), the full-corpus GEMM is SKIPPED: each
-        query runs the prefix/Hamming prefilter (O(n·d') or O(n·d/8)
-        per query) and full-width arithmetic touches only its
-        shortlist rows — the per-query loop here is bounded by the
-        cheap prefilter, not the d-wide corpus pass."""
-        Q = _as_query_matrix(query_vectors)
-        if self.n == 0:
-            return [[] for _ in range(Q.shape[0])]
-        if Q.shape[1] != self.dim:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != stored dimension {self.dim}"
-            )
-        if mrl_dim is not None or hamming_shortlist is not None:
-            out = []
-            for j in range(Q.shape[0]):
-                q = np.ascontiguousarray(Q[j])
-                cand = self._prefilter_candidates(
-                    q,
-                    top_k=top_k,
-                    mrl_dim=mrl_dim,
-                    mrl_shortlist=mrl_shortlist,
-                    hamming_shortlist=hamming_shortlist,
-                )
-                # math.sqrt(dot), not the einsum norm: bit-identical to
-                # the single door (the batch/single parity tests pin it)
-                qn_j = math.sqrt(float(np.dot(q, q)))
-                sub = self._exact_scores_among(cand, q, qn_j)
-                out.append(
-                    self._select_among(
-                        cand, sub, top_k, score_threshold, id_cols
-                    )
-                )
-            return out
-        if mrl_shortlist is not None:
-            raise ValueError("mrl_shortlist requires mrl_dim")
-        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))  # (q,)
-        dots = self.matrix @ Q.T  # (n, q) — the one GEMM
-        denom = np.outer(self.norms, qn)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scores = np.where(denom == 0.0, 0.0, dots / denom)
-        return [
-            self._select_topk(
-                np.ascontiguousarray(scores[:, j]),
-                top_k,
-                score_threshold,
-                id_cols,
-            )
-            for j in range(Q.shape[0])
-        ]
-
-    def _scores(self, query_vector: list[float]) -> np.ndarray:
-        q = np.asarray([float(x) for x in query_vector], dtype=np.float64)
-        if q.shape[0] != self.dim:
-            raise ValueError(
-                f"query dimension {q.shape[0]} != stored dimension {self.dim}"
-            )
-        qn = math.sqrt(float(np.dot(q, q)))
-        if qn == 0.0:
-            return np.zeros(self.n)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return np.where(
-                self.norms == 0.0, 0.0, (self.matrix @ q) / (self.norms * qn)
-            )
 
     def _lex_cache(self, content_col: str):
         """Inverted-index BM25 cache: term → (doc-index array, tf
@@ -850,38 +743,22 @@ class DriverMatrixIndex:
         copy per rid in the display), without a Spark job. Duplicate-
         rid candidate rows collapse to one candidate per rid keeping
         the BEST score — the same deterministic rule the engine door
-        applies before its rerank.
+        applies before its rerank. A batch of one through
+        :meth:`diverse_query_batch`.
 
         The relevance scores come from the BLAS matvec, so they sit
         within the established ~1e-9 tier contract of the other
         matrix-tier doors; the MMR loop itself is the bit-identical
         shared kernel."""
-        from converttovectordb_spark.operators.search import validate_top_k
-
-        if not 0.0 <= lambda_ <= 1.0:
-            raise ValueError(f"lambda_ must be in [0, 1], got {lambda_}")
-        k = validate_top_k(top_k)
-        if self.n == 0:
-            return []
-        q = np.asarray([float(x) for x in query_vector], dtype=np.float64)
-        if not np.all(np.isfinite(q)):
-            # same guard (and message) as query()/query_batch: NaN
-            # scores would otherwise corrupt every greedy comparison
-            # AND survive the threshold (NaN < t is False), shipping
-            # RFC-invalid JSON
-            raise ValueError(
-                "query embedding contains non-finite values (NaN/Infinity)"
-            )
-        scores = self._scores(query_vector)  # Q5 dim guard lives here
-        return self._diverse_from_scores(
-            scores,
-            k,
+        return self.diverse_query_batch(
+            [query_vector],
+            top_k,
             fetch_k=fetch_k,
             lambda_=lambda_,
             id_cols=id_cols,
             score_threshold=score_threshold,
             timestamp_col=timestamp_col,
-        )
+        )[0]
 
     def diverse_query_batch(
         self,
@@ -894,28 +771,23 @@ class DriverMatrixIndex:
         score_threshold: float = 0.1,
         timestamp_col: str = "timestamp",
     ) -> list[list[dict]]:
-        """Batched twin of :meth:`diverse_query`: ONE GEMM scores all
-        Q queries (``matrix @ Q.T`` — the `query_batch` shape, where a
+        """:meth:`diverse_query` for Q vectors: ONE GEMM scores all Q
+        queries (``matrix @ Q.T`` — the `query_batch` shape, where a
         Q-times loop of matvecs re-traverses the corpus per query),
-        then each query's candidate cutoff + greedy MMR reuses the
-        single-query path exactly."""
+        then each query's candidate cutoff + greedy MMR runs the
+        shared per-query tail."""
         from converttovectordb_spark.operators.search import validate_top_k
 
         if not 0.0 <= lambda_ <= 1.0:
             raise ValueError(f"lambda_ must be in [0, 1], got {lambda_}")
         k = validate_top_k(top_k)
-        Q = _as_query_matrix(query_vectors)
+        # non-finite queries raise here: NaN scores would corrupt every
+        # greedy comparison AND survive the threshold (NaN < t is
+        # False), shipping RFC-invalid JSON
+        Q = _as_query_matrix(query_vectors, self.dim)
         if self.n == 0:
             return [[] for _ in range(Q.shape[0])]
-        if Q.shape[1] != self.dim:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != stored dimension {self.dim}"
-            )
-        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))  # (q,)
-        dots = self.matrix @ Q.T  # (n, q) — the one GEMM
-        denom = np.outer(self.norms, qn)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scores = np.where(denom == 0.0, 0.0, dots / denom)
+        scores = cosine_scores(self.matrix, self.norms, Q)
         return [
             self._diverse_from_scores(
                 np.ascontiguousarray(scores[:, j]),
@@ -1001,7 +873,8 @@ class DriverMatrixIndex:
         # — lexsort keys are reversed (last is primary), rid rank
         # breaks exact score ties ascending, C-speed instead of a
         # Python-key sort of the whole corpus per query
-        scores = self._scores(query_vector)
+        Q = _as_query_matrix([query_vector], self.dim)
+        scores = cosine_scores(self.matrix, self.norms, Q)[:, 0]
         sem_order = np.lexsort((rid_order, -scores))[
             : max(int(candidates), 1)
         ]
@@ -1690,19 +1563,9 @@ class BitsMatrixIndex:
             )
         if n_short >= self.n:
             return np.arange(self.n)
-        qbits = _pack_bits64((q > 0).reshape(1, -1))
-        # blocked scan: bounds the popcount temporaries to the block's
-        # working set (see BITS_SCAN_BLOCK_ROWS) — the distance array
-        # itself is n × 8 bytes, priced in bits_resident_cells
-        ham = np.empty(self.n, dtype=np.int64)
-        for lo in range(0, self.n, BITS_SCAN_BLOCK_ROWS):
-            hi = min(lo + BITS_SCAN_BLOCK_ROWS, self.n)
-            ham[lo:hi] = _popcount64(
-                np.bitwise_xor(self.words[lo:hi], qbits)
-            ).sum(axis=1, dtype=np.int64)
-        part = np.argpartition(ham, n_short - 1)[:n_short]
-        kth = ham[part].max()
-        cand = np.nonzero(ham <= kth)[0]
+        # the distance array is n × 8 bytes, priced in
+        # bits_resident_cells
+        cand = topk_with_ties(-_hamming_distances(self.words, q), n_short)
         if len(cand) > BITS_FETCH_MAX_ROWS:
             raise ValueError(
                 f"hamming_shortlist={n_short} keeps {len(cand)} "
@@ -1714,20 +1577,6 @@ class BitsMatrixIndex:
                 "slice needs the distributed exact door"
             )
         return cand
-
-    def _validate_query(self, query_vector: list[float]) -> np.ndarray:
-        q = np.asarray(
-            [float(x) for x in query_vector], dtype=np.float64
-        )
-        if not np.all(np.isfinite(q)):
-            raise ValueError(
-                "query embedding contains non-finite values (NaN/Infinity)"
-            )
-        if self.n and q.shape[0] != self.dim:
-            raise ValueError(
-                f"query dimension {q.shape[0]} != stored dimension {self.dim}"
-            )
-        return q
 
     def _fetch_rows(
         self, cand: np.ndarray
@@ -1778,28 +1627,6 @@ class BitsMatrixIndex:
         ]
         return vecs, payload
 
-    def _rerank(
-        self,
-        q: np.ndarray,
-        vecs: np.ndarray,
-        payload: list[dict],
-        top_k: int,
-        score_threshold: float,
-        id_cols: list[str] | None,
-    ) -> list[dict]:
-        qn = math.sqrt(float(np.dot(q, q)))
-        if qn == 0.0:
-            scores = np.zeros(len(payload))
-        else:
-            norms = np.sqrt(np.einsum("ij,ij->i", vecs, vecs))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.where(
-                    norms == 0.0, 0.0, (vecs @ q) / (norms * qn)
-                )
-        return select_among(
-            payload, None, scores, top_k, score_threshold, id_cols
-        )
-
     def query(
         self,
         query_vector: list[float],
@@ -1813,19 +1640,15 @@ class BitsMatrixIndex:
         ``DriverMatrixIndex.query(hamming_shortlist=...)`` contract
         served from the bits-resident layout: memory-speed Hamming
         shortlist, ONE bounded sidecar fetch (vectors + payload),
-        exact rerank, shared selection."""
-        q = self._validate_query(query_vector)
-        if self.n == 0:
-            return []
-        self._enter_serving()
-        try:
-            cand = self._shortlist(q, top_k, hamming_shortlist)
-            vecs, payload = self._fetch_rows(cand)
-            return self._rerank(
-                q, vecs, payload, top_k, score_threshold, id_cols
-            )
-        finally:
-            self._exit_serving()
+        exact rerank, shared selection. A batch of one through
+        :meth:`query_batch`."""
+        return self.query_batch(
+            [query_vector],
+            top_k,
+            score_threshold=score_threshold,
+            id_cols=id_cols,
+            hamming_shortlist=hamming_shortlist,
+        )[0]
 
     def query_batch(
         self,
@@ -1842,13 +1665,9 @@ class BitsMatrixIndex:
         not Q — then each query's exact rerank + shared selection.
         ``results[i]`` answers ``query_vectors[i]`` and equals the
         single door's answer exactly (same arithmetic, same rules)."""
-        Q = _as_query_matrix(query_vectors)
+        Q = _as_query_matrix(query_vectors, self.dim)
         if self.n == 0:
             return [[] for _ in range(Q.shape[0])]
-        if Q.shape[1] != self.dim:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != stored dimension {self.dim}"
-            )
         self._enter_serving()
         try:
             cands = [
@@ -1863,11 +1682,12 @@ class BitsMatrixIndex:
             out = []
             for j, cand in enumerate(cands):
                 sel = [pos[int(c)] for c in cand]
+                scores = cosine_scores(uvecs[sel], None, Q[j : j + 1])
                 out.append(
-                    self._rerank(
-                        np.ascontiguousarray(Q[j]),
-                        uvecs[sel],
+                    select_among(
                         [upayload[i] for i in sel],
+                        None,
+                        scores[:, 0],
                         top_k,
                         score_threshold,
                         id_cols,

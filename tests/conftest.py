@@ -99,7 +99,34 @@ SLOW_DEFERRED = {
 }
 
 
+def _stale_deferrals(config, items) -> list[str]:
+    """SLOW_DEFERRED entries that name no test: the file is gone, or it
+    was collected (so its tests are known) and holds no such node. A
+    run selecting single nodes (``file.py::test``) checks only the
+    missing-file case; files that failed to import are not judged."""
+    collected = {item.nodeid.split("/")[-1] for item in items}
+    files = {nodeid.split("::")[0] for nodeid in collected}
+    by_node = any("::" in str(a) for a in config.args)
+    tests_dir = os.path.dirname(__file__)
+    stale = []
+    for entry in sorted(SLOW_DEFERRED):
+        fname = entry.split("::")[0]
+        if not os.path.exists(os.path.join(tests_dir, fname)):
+            stale.append(entry)
+        elif fname in files and not by_node and entry not in collected:
+            stale.append(entry)
+    return stale
+
+
+# tryfirst: judge the full collection, before `-k`/`-m` deselect items
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
+    stale = _stale_deferrals(config, items)
+    if stale:
+        raise pytest.UsageError(
+            "SLOW_DEFERRED names tests that were not collected (renamed "
+            "or removed?) — update tests/conftest.py: " + ", ".join(stale)
+        )
     if os.environ.get("FULL_SUITE"):
         return
     skip = pytest.mark.skip(

@@ -1,8 +1,9 @@
 """ivf_knn_join_shuffled: the corpus-scale (non-broadcast-probe) IVF
 KNN join. Correctness is pinned against the broadcast variant (shared
-oracle semantics) and the plan shape against the 100 TB design:
-shuffled equi-join on (cluster, salt), zero-shuffle HOF centroid probe,
-partial top-k window that reuses the join's output partitioning.
+oracle semantics) and, bit for bit, against a test-local JVM-fold
+reference plan (`_fold_reference`); the plan shape against the 100 TB
+design: cogrouped (cluster, salt) scoring, zero-shuffle HOF centroid
+probe, one final per-query exchange.
 """
 
 from __future__ import annotations
@@ -10,6 +11,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from converttovectordb_spark.operators.search import (
@@ -24,6 +26,64 @@ def _rows(df):
     return sorted(
         (r.query_id, r.vec_id, round(r.score, 9), r.rank) for r in df.collect()
     )
+
+
+def _fold_reference(
+    queries, docs, *, top_k, nprobe, exclude_self=False, query_label_col=None
+):
+    """The plan the Arrow scorer must reproduce bit for bit, in plain
+    Spark: nprobe nearest centroids per (normalized) query with the
+    (csim desc, cluster asc) tie-break, equi-join on the cluster, the
+    self and label disqualifiers as Spark filters (three-valued NULL
+    logic), the `aggregate(zip_with)` left-fold dot over prenormalized
+    vectors, and the (score desc, vec_id asc) top-k window."""
+    from converttovectordb_spark.functions.vector import (
+        cosine_similarity,
+        dot_product,
+        l2_normalize,
+    )
+    from converttovectordb_spark.plans.ivf_index import mean_centroids
+
+    cents = mean_centroids(docs, cluster_col="label").select(
+        F.col("cluster_id").alias("label"),
+        F.col("centroid").cast("array<double>").alias("cvec"),
+    )
+    extra = [query_label_col] if query_label_col else []
+    q = queries.select(
+        "query_id", l2_normalize(F.col("query_vec")).alias("_qvec"), *extra
+    )
+    wc = Window.partitionBy("query_id").orderBy(
+        F.col("csim").desc(), F.col("label").asc()
+    )
+    probe = (
+        q.crossJoin(cents)
+        .withColumn("csim", cosine_similarity(F.col("_qvec"), F.col("cvec")))
+        .withColumn("crank", F.row_number().over(wc))
+        .filter(F.col("crank") <= nprobe)
+        .select("query_id", "_qvec", "label", *extra)
+    )
+    d = docs.select(
+        "label", "vec_id", l2_normalize(F.col("embedding")).alias("_dvec")
+    )
+    cand = probe.join(d, on="label")
+    if exclude_self:
+        cand = cand.filter(F.col("query_id") != F.col("vec_id"))
+    if query_label_col:
+        cand = cand.filter(F.col(query_label_col) != F.col("label"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
+    )
+    return (
+        cand.withColumn("score", dot_product(F.col("_qvec"), F.col("_dvec")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= top_k)
+        .select("query_id", "vec_id", "score", "rank")
+    )
+
+
+def _exact(df):
+    """Full-precision (score, rank) per (query, doc) — no rounding."""
+    return {(r.query_id, r.vec_id): (r.score, r.rank) for r in df.collect()}
 
 
 @pytest.fixture(scope="module")
@@ -71,11 +131,11 @@ def test_empty_query_side(emb, probes):
 
 
 def test_plan_arrow_cogroup_scorer_default(spark, emb, probes):
-    """The default (r16) scorer runs scoring + the partial per-group
-    top-k as ONE cogrouped Arrow stage over the (cluster, salt)
-    groups — the interpreted aggregate(zip_with) fold is gone from the
-    per-pair path; the only per-query exchange is the final pruned
-    one, fed by at most nprobe·S·k rows per query."""
+    """Scoring + the partial per-group top-k run as ONE cogrouped
+    Arrow stage over the (cluster, salt) groups — the interpreted
+    aggregate(zip_with) fold is gone from the per-pair path; the only
+    per-query exchange is the final pruned one, fed by at most
+    nprobe·S·k rows per query."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -98,60 +158,31 @@ def test_plan_arrow_cogroup_scorer_default(spark, emb, probes):
         spark.conf.unset("spark.sql.adaptive.enabled")
 
 
-def test_plan_fold_scorer_shuffled_join_and_free_partial_topk(
-    spark, emb, probes
-):
-    """The fold scorer (kept for deployments without Python workers)
-    retains
-    the r14 shape: shuffled equi-join on (cluster, salt), partial
-    per-(cluster, salt, query) top-k riding the join's partitioning
-    (NO exchange of its own), one final per-query exchange."""
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        df = ivf_knn_join_shuffled(
-            probes, emb, top_k=3, nprobe=2, salt_buckets=2, scorer="fold"
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-        # the partial window reuses the join partitioning: no exchange
-        # keyed by (label, _salt, query_id)
-        assert not any(
-            "_salt" in e and "query_id" in e for e in exchanges
-        ), exchanges
-        assert sum(e.startswith("query_id") for e in exchanges) == 1, exchanges
-        # map-side top-k pushdown below the final exchange
-        assert "WindowGroupLimit" in plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.enabled")
-
-
 def test_arrow_scorer_bit_identical_to_fold(spark, emb, probes):
     """The numpy column-loop dot must reproduce the JVM left fold's
     rounding sequence EXACTLY — full-precision float equality, not
     rounded: one multiply-round + one add-round per element, ascending
-    index, both paths."""
-    kw = dict(top_k=3, nprobe=2, salt_buckets=2, exclude_self=True)
-    fold = {
-        (r.query_id, r.vec_id): (r.score, r.rank)
-        for r in ivf_knn_join_shuffled(
-            probes, emb, scorer="fold", **kw
-        ).collect()
-    }
-    arrow = {
-        (r.query_id, r.vec_id): (r.score, r.rank)
-        for r in ivf_knn_join_shuffled(
-            probes, emb, scorer="arrow", **kw
-        ).collect()
-    }
+    index, both plans."""
+    fold = _exact(
+        _fold_reference(probes, emb, top_k=3, nprobe=2, exclude_self=True)
+    )
+    arrow = _exact(
+        ivf_knn_join_shuffled(
+            probes, emb, top_k=3, nprobe=2, salt_buckets=2, exclude_self=True
+        )
+    )
     assert fold == arrow  # exact float64 equality, no rounding
 
 
-def test_scorer_validated(emb, probes):
-    with pytest.raises(ValueError, match="scorer"):
-        ivf_knn_join_shuffled(probes, emb, scorer="blas")
+def test_exclude_self_rejects_mixed_id_types(emb, probes):
+    """numpy's == has no implicit cast: string query ids against long
+    doc ids would compare all-False and silently keep every self-pair.
+    The plan refuses the mix, naming both Spark types."""
+    mixed = probes.withColumn("query_id", F.col("query_id").cast("string"))
+    with pytest.raises(ValueError, match=r"string.*bigint"):
+        ivf_knn_join_shuffled(mixed, emb, exclude_self=True)
+    # without exclude_self the ids are never compared: no error
+    ivf_knn_join_shuffled(mixed, emb, top_k=1)
 
 
 def test_composes_with_materialized_index(spark, emb, probes, tmp_path):
@@ -410,8 +441,11 @@ def test_auto_salt_bounds_hot_cluster_and_matches_unsalted(spark):
 def test_arrow_scorer_property_random_ties_and_zeros(spark, seed):
     """Property guard for the bit-exactness claim: random corpora with
     DUPLICATED vectors (forced score ties → tie-break path), zero
-    vectors (norm-0 passthrough), and negative components must give
-    full-precision-identical (score, rank) sets on both scorers."""
+    vectors (norm-0 passthrough), negative components and NULL labels
+    (a NULL cluster key joins nothing; a NULL query label fails the
+    disqualifier) must give full-precision-identical (score, rank)
+    sets from the operator and the test-local fold reference — under
+    both the self-exclusion and the label disqualifier."""
     import random
 
     rng = random.Random(seed)
@@ -424,25 +458,22 @@ def test_arrow_scorer_property_random_ties_and_zeros(spark, seed):
             v = rows[i - 1][2]  # duplicate of previous: score ties
         else:
             v = [rng.uniform(-2, 2) for _ in range(d)]
-        rows.append((i, i % 3, v))
+        label = None if i % 11 == 4 else i % 3
+        rows.append((i, label, v))
     docs = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<double>"
     )
     probes = docs.select(
         F.col("vec_id").alias("query_id"),
+        F.col("label").alias("qlabel"),
         F.col("embedding").alias("query_vec"),
     )
-    kw = dict(top_k=4, nprobe=2, salt_buckets=3, exclude_self=True)
-    fold = {
-        (r.query_id, r.vec_id): (r.score, r.rank)
-        for r in ivf_knn_join_shuffled(
-            probes, docs, scorer="fold", **kw
-        ).collect()
-    }
-    arrow = {
-        (r.query_id, r.vec_id): (r.score, r.rank)
-        for r in ivf_knn_join_shuffled(
-            probes, docs, scorer="arrow", **kw
-        ).collect()
-    }
-    assert fold == arrow
+    for kw in (dict(exclude_self=True), dict(query_label_col="qlabel")):
+        fold = _exact(_fold_reference(probes, docs, top_k=4, nprobe=2, **kw))
+        arrow = _exact(
+            ivf_knn_join_shuffled(
+                probes, docs, top_k=4, nprobe=2, salt_buckets=3, **kw
+            )
+        )
+        assert fold, kw
+        assert fold == arrow, kw

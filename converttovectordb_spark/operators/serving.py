@@ -19,8 +19,9 @@ So serving is TIERED, exactly like Spark's own join strategy choice:
   which prunes to nprobe clusters (SCALING.md measures the crossover).
 
 Spark remains the system of record and the builder at every tier; the
-matrix is just a cache of the store's ``load()`` view, invalidated with
-it. Semantics match ``knn_topk`` bit-for-bit where it matters:
+matrix is just a cache of the store's ``load()`` view: refilled when the
+store moves, or extended row for row by a write-through append
+(``DriverMatrixIndex.extended``). Semantics match ``knn_topk`` bit-for-bit where it matters:
 zero-norm→0.0 (Q1), deterministic ascending-id tie-break (Q3),
 threshold AFTER limit (Q4), and the Q5 dimension-mismatch message.
 """
@@ -29,8 +30,10 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import threading
 import uuid
+from collections import Counter
 from contextlib import contextmanager
 
 import numpy as np
@@ -230,39 +233,49 @@ def point_query_mode(spark):
                     )
 
 
-def _size_probe(df: DataFrame, embedding_col: str):
-    """(n_rows, first_dim, payload_bytes) for the MATRIX tier's
-    admission (the bits tier keeps no payload resident — r15 — and
-    probes with its own single aggregate, `BitsMatrixIndex._probe`).
-    One combined count+bytes aggregate plus one first-row dim
-    probe, BEFORE any collect (the transfer itself is the OOM a
-    post-hoc check would arrive too late for). ``first_dim`` is 0 when
-    the corpus is empty."""
-    from pyspark.sql import functions as F
+def _var_width_cols(schema, embedding_col: str) -> list[str]:
+    """The string/binary payload columns the admission budget prices
+    by their serialized bytes."""
     from pyspark.sql import types as T
 
-    var_cols = [
+    return [
         f.name
-        for f in df.schema.fields
+        for f in schema.fields
         if f.name != embedding_col
         and isinstance(f.dataType, (T.StringType, T.BinaryType))
     ]
-    aggs = [F.count(F.lit(1)).alias("n")]
+
+
+def _size_probe(df: DataFrame, embedding_col: str):
+    """(n_rows, first_dim, payload_bytes, stored_rows) for the MATRIX
+    tier's admission (the bits tier keeps no payload resident — r15 —
+    and probes with its own single aggregate, `BitsMatrixIndex._probe`).
+    One combined count+bytes aggregate plus one first-row dim
+    probe, BEFORE any collect (the transfer itself is the OOM a
+    post-hoc check would arrive too late for). The first three figures
+    cover the rows that carry an embedding; ``stored_rows`` counts
+    every row of ``df`` in the same aggregate. ``first_dim`` is 0 when
+    no row carries an embedding."""
+    from pyspark.sql import functions as F
+
+    has_emb = F.col(embedding_col).isNotNull()
+    var_cols = _var_width_cols(df.schema, embedding_col)
+    aggs = [F.count(F.lit(1)).alias("n_all"), F.count(embedding_col).alias("n")]
     for c in var_cols:
         aggs.append(
-            F.sum(F.coalesce(F.octet_length(F.col(c)), F.lit(0))).alias(
-                f"_b_{c}"
-            )
+            F.sum(
+                F.when(has_emb, F.coalesce(F.octet_length(F.col(c)), F.lit(0)))
+            ).alias(f"_b_{c}")
         )
     sizes = df.agg(*aggs).first()
     n = sizes["n"]
     if n == 0:
-        return 0, 0, 0
-    first_dim = len(df.select(embedding_col).first()[0])
+        return 0, 0, 0, sizes["n_all"]
+    first_dim = len(df.filter(has_emb).select(embedding_col).first()[0])
     payload_bytes = n * _FIXED_WIDTH_ROW_BYTES + sum(
         int(sizes[f"_b_{c}"] or 0) for c in var_cols
     )
-    return n, first_dim, payload_bytes
+    return n, first_dim, payload_bytes, sizes["n_all"]
 
 
 def _as_query_matrix(query_vectors, dim: int) -> np.ndarray:
@@ -292,6 +305,78 @@ def _as_query_matrix(query_vectors, dim: int) -> np.ndarray:
             f"query dimension {Q.shape[1]} != stored dimension {dim}"
         )
     return Q
+
+
+_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _lex_postings(texts: list, first_doc: int = 0):
+    """BM25 postings of ``texts``, numbered from ``first_doc``: term →
+    (doc-index int64 array, tf float64 array), plus the per-doc token
+    counts. Tokenization mirrors functions/text.py's ASCII_WS split
+    exactly. The one tokenizer of both the fill-time build
+    (`DriverMatrixIndex._lex_cache`) and the write-through extension
+    (`DriverMatrixIndex.extended`). The (doc, term, tf) triples are
+    grouped by term with one stable argsort, so each term's arrays are
+    slices of two flat buffers, docs ascending."""
+    docs: list = []
+    terms: list = []
+    tfs: list = []
+    dl = np.zeros(len(texts), dtype=np.float64)
+    for i, text in enumerate(texts):
+        counts = Counter(t for t in _WS.split((text or "").lower()) if t)
+        dl[i] = sum(counts.values())
+        terms.extend(counts)
+        tfs.extend(counts.values())
+        docs.extend([first_doc + i] * len(counts))
+    vocab: dict = {}
+    tid = np.fromiter(
+        (vocab.setdefault(t, len(vocab)) for t in terms),
+        dtype=np.int64,
+        count=len(terms),
+    )
+    order = np.argsort(tid, kind="stable")
+    doc_arr = np.asarray(docs, dtype=np.int64)[order]
+    tf_arr = np.asarray(tfs, dtype=np.float64)[order]
+    bounds = np.zeros(len(vocab) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(tid, minlength=len(vocab)), out=bounds[1:])
+    postings = {
+        t: (doc_arr[bounds[k] : bounds[k + 1]], tf_arr[bounds[k] : bounds[k + 1]])
+        for k, t in enumerate(vocab)
+    }
+    return postings, dl
+
+
+#: Name Spark gives the directory of a NULL (or empty) partition value;
+#: the value itself would read back as NULL.
+_HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _infers_as_string(value) -> bool:
+    """True when partition type inference must keep ``value`` a string
+    on read: Spark tries int, long, decimal, double, timestamp and date
+    first. None of them parses without a digit except Java's
+    ``[+-]?(NaN|Infinity)`` (after trimming control characters), which
+    Python's float() accepts too (case-insensitively, a superset)."""
+    if not isinstance(value, str) or value == _HIVE_DEFAULT_PARTITION:
+        return False
+    if any(ch.isdigit() for ch in value):
+        return False
+    try:
+        float(value.strip("".join(map(chr, range(33)))))
+    except ValueError:
+        return True
+    return False
+
+
+def _octets(value) -> int:
+    """Serialized bytes of one payload value, as Spark's octet_length
+    counts them for the admission estimate (NULL → 0)."""
+    if isinstance(value, str):
+        return len(value.encode("utf-8", "surrogatepass"))
+    if isinstance(value, bytes):
+        return len(value)
+    return 0
 
 
 def select_among(
@@ -330,7 +415,10 @@ def select_among(
 
 
 class DriverMatrixIndex:
-    """An immutable, query-many snapshot of a corpus DataFrame.
+    """A query-many snapshot of a corpus DataFrame. Its rows never
+    change in place: :meth:`extended` returns a NEW index for a
+    write-through append, so readers holding this object keep a
+    consistent snapshot.
 
     Build with :meth:`from_dataframe` (returns ``None`` when the corpus
     exceeds the cell budget OR the payload-bytes budget — callers then
@@ -343,12 +431,25 @@ class DriverMatrixIndex:
         norms: np.ndarray,
         payload: list[dict],
         dim: int,
+        *,
+        schema=None,
+        embedding_col: str = "embedding",
+        payload_bytes: int = 0,
+        stored_rows: int | None = None,
     ):
         self.matrix = matrix  # (n, dim) float64
         self.norms = norms  # (n,) float64, 0.0 for zero vectors
         self.payload = payload  # row dicts WITHOUT the embedding column
         self.dim = dim
-        self._lex = None  # lazy BM25 cache: (postings, dl, avgdl)
+        # what `extended` needs to reproduce a refill: the source's
+        # Spark schema (None: unknown, never extended), the admission
+        # estimate of the resident payload, and the source's row count
+        # including rows without an embedding
+        self._schema = schema
+        self._embedding_col = embedding_col
+        self.payload_bytes = payload_bytes
+        self.stored_rows = self.n if stored_rows is None else stored_rows
+        self._lex = None  # lazy BM25 cache: (content_col, postings, dl, avgdl)
         self._rids = None  # lazy rid cache: (id_cols, rids, order)
         self._newest = None  # lazy display cache: (id_cols, rid -> idx)
         self._mrl_norms: dict[int, np.ndarray] = {}  # d' -> prefix norms
@@ -380,21 +481,29 @@ class DriverMatrixIndex:
         Admission is two-termed: embedding cells (``n × dim``) AND
         payload bytes (everything else the tier keeps driver-side).
         The payload term is estimated with a Spark aggregate BEFORE any
-        collect (`_size_probe` — shared with the bits tier) — the
+        collect (`_size_probe`) — the
         Arrow transfer itself is the OOM, so a post-hoc ``tbl.nbytes``
         check would arrive too late. One combined count+bytes
         aggregate + one Arrow collect — both at cache-fill time, never
         on the query path. Rows whose embedding length disagrees with
         the first row's are a corrupt store; they raise here (the
         distributed path raises the same Q5-shaped error lazily).
+        Rows without an embedding are not indexed; the same aggregate
+        counts them into ``stored_rows``.
         """
-        n, first_dim, payload_bytes = _size_probe(df, embedding_col)
+        n, first_dim, payload_bytes, stored_rows = _size_probe(
+            df, embedding_col
+        )
         if n == 0:
-            return cls(np.zeros((0, 0)), np.zeros(0), [], 0)
+            return cls(
+                np.zeros((0, 0)), np.zeros(0), [], 0, stored_rows=stored_rows
+            )
         if n * first_dim > max_cells:
             return None
         if payload_bytes > max_payload_bytes:
             return None
+        schema = df.schema
+        df = df.filter(df[embedding_col].isNotNull())
         try:
             # Arrow path: one batched transfer, vectors land as a flat
             # float buffer — ~10× faster fill than Row collection.
@@ -429,7 +538,118 @@ class DriverMatrixIndex:
                 vecs[i] = emb
                 payload.append(d)
         norms = np.sqrt(np.einsum("ij,ij->i", vecs, vecs))
-        return cls(vecs, norms, payload, first_dim)
+        return cls(
+            vecs,
+            norms,
+            payload,
+            first_dim,
+            schema=schema,
+            embedding_col=embedding_col,
+            payload_bytes=payload_bytes,
+            stored_rows=stored_rows,
+        )
+
+    def extended(
+        self,
+        rows: list[dict],
+        vectors,
+        *,
+        schema,
+        partition_cols: tuple[str, ...] = (),
+        max_cells: int = DEFAULT_MAX_CELLS,
+        max_payload_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
+    ) -> "DriverMatrixIndex | None":
+        """A NEW index: this one plus ``rows`` (payload dicts keyed by
+        ``schema``'s column names) with embeddings ``vectors``, just
+        appended to the source under ``schema`` — row for row what
+        :meth:`from_dataframe` over the grown source would read back.
+        ``None`` when that cannot be guaranteed, or when the grown
+        corpus would cross either admission budget; callers then
+        refill. Copy-on-write: this index is left as it was, so
+        in-flight readers keep their snapshot.
+
+        The read-back rules it mirrors:
+
+        - embeddings round through the stored element type (float32
+          for ``ArrayType(FloatType)``); norms use the fill's einsum;
+        - payload dicts take the fill's key order, which is ``schema``
+          with the partition columns last (partition discovery appends
+          them) — any other fill schema returns ``None``;
+        - a partition value of ``""`` or ``None`` reads back as
+          ``None`` (the hive default partition). Any other partition
+          value must be a string that partition type inference cannot
+          read as a number, date or timestamp (`_infers_as_string`):
+          a typed value could retype the column on read.
+
+        A built BM25 cache is extended: the new doc indices are
+        appended to each touched term's postings, and ``dl`` and
+        ``avgdl`` grow (`_lex_postings` tokenizes both builds). The
+        rid, newest, MRL-norm and sign-bit caches start empty and
+        rebuild lazily."""
+        emb_col = self._embedding_col
+        if self.n == 0 or self._schema is None or not rows:
+            return None
+        part = tuple(partition_cols)
+        fields = [f for f in schema.fields if f.name not in part] + [
+            schema[c] for c in part
+        ]
+        if [(f.name, f.dataType.simpleString()) for f in fields] != [
+            (f.name, f.dataType.simpleString()) for f in self._schema.fields
+        ]:
+            return None
+        keys = [f.name for f in fields if f.name != emb_col]
+        payload = []
+        for r in rows:
+            row = {c: r[c] for c in keys}
+            for c in part:
+                if row[c] in ("", None):
+                    row[c] = None
+                elif not _infers_as_string(row[c]):
+                    return None
+            payload.append(row)
+        if len(vectors) != len(rows) or any(
+            len(v) != self.dim for v in vectors
+        ):
+            return None
+        n = self.n + len(rows)
+        if n * self.dim > max_cells:
+            return None
+        payload_bytes = self.payload_bytes + len(rows) * _FIXED_WIDTH_ROW_BYTES
+        for c in _var_width_cols(self._schema, emb_col):
+            payload_bytes += sum(_octets(row[c]) for row in payload)
+        if payload_bytes > max_payload_bytes:
+            return None
+        stored = self._schema[emb_col].dataType.elementType.simpleString()
+        vecs = np.asarray(
+            vectors, dtype=np.float32 if stored == "float" else np.float64
+        ).astype(np.float64)
+        norms = np.sqrt(np.einsum("ij,ij->i", vecs, vecs))
+        out = DriverMatrixIndex(
+            np.concatenate([self.matrix, vecs]),
+            np.concatenate([self.norms, norms]),
+            self.payload + payload,
+            self.dim,
+            schema=self._schema,
+            embedding_col=emb_col,
+            payload_bytes=payload_bytes,
+            stored_rows=self.stored_rows + len(rows),
+        )
+        lex = self._lex
+        if lex is not None:
+            content_col, postings, dl, _ = lex
+            add, add_dl = _lex_postings(
+                [row.get(content_col) for row in payload], self.n
+            )
+            merged = dict(postings)
+            for t, (idx, tf) in add.items():
+                old = merged.get(t)
+                merged[t] = (idx, tf) if old is None else (
+                    np.concatenate([old[0], idx]),
+                    np.concatenate([old[1], tf]),
+                )
+            dl = np.concatenate([dl, add_dl])
+            out._lex = (content_col, merged, dl, float(dl.sum() / n))
+        return out
 
     def query(
         self,
@@ -602,59 +822,34 @@ class DriverMatrixIndex:
 
     def _lex_cache(self, content_col: str):
         """Inverted-index BM25 cache: term → (doc-index array, tf
-        array) postings, plus doc lengths and avgdl — built once, on
-        the first hybrid query (same lazy-fill contract as the matrix
-        itself). Tokenization mirrors functions/text.py's ASCII_WS
-        split exactly. Postings replace the r11 per-doc Counter list:
-        a hybrid query then touches only ITS terms' postings (document
-        frequency is len(idx), O(1)) instead of scanning every doc's
-        Counter per term — the loop shape the /hybrid_batch door would
-        otherwise pay Q times per POST. Note: keyed implicitly on the
-        FIRST content_col used (the REST door always passes 'content');
-        guarded by the shared cache lock like the rid caches."""
-        import re
-        from collections import Counter
-
+        array) postings, plus doc lengths and avgdl — built once per
+        ``content_col``, on the first hybrid query (same lazy-fill
+        contract as the matrix itself), and grown in place of a
+        rebuild by :meth:`extended`. Postings replace the r11 per-doc
+        Counter list: a hybrid query then touches only ITS terms'
+        postings (document frequency is len(idx), O(1)) instead of
+        scanning every doc's Counter per term — the loop shape the
+        /hybrid_batch door would otherwise pay Q times per POST.
+        Guarded by the shared cache lock like the rid caches."""
         with self._cache_lock:
-            if self._lex is None:
-                ws = re.compile(r"[ \t\n\x0b\f\r]+")
-                raw: dict = {}
-                dl = np.zeros(self.n, dtype=np.float64)
-                for i, row in enumerate(self.payload):
-                    toks = [
-                        t
-                        for t in ws.split(
-                            (row.get(content_col) or "").lower()
-                        )
-                        if t
-                    ]
-                    dl[i] = len(toks)
-                    for t, tf in Counter(toks).items():
-                        raw.setdefault(t, []).append((i, tf))
-                postings = {
-                    t: (
-                        np.fromiter(
-                            (i for i, _ in pl),
-                            dtype=np.int64,
-                            count=len(pl),
-                        ),
-                        np.fromiter(
-                            (tf for _, tf in pl),
-                            dtype=np.float64,
-                            count=len(pl),
-                        ),
-                    )
-                    for t, pl in raw.items()
-                }
+            if self._lex is None or self._lex[0] != content_col:
+                postings, dl = _lex_postings(
+                    [row.get(content_col) for row in self.payload]
+                )
                 avgdl = float(dl.sum() / self.n) if self.n else 0.0
-                self._lex = (postings, dl, avgdl)
+                self._lex = (content_col, postings, dl, avgdl)
             cached = self._lex
-        return cached
+        return cached[1:]
 
     def _rid_cache(self, id_cols: list[str]):
         """'#'-joined rid per row plus its ascending-order rank array
         (for C-speed lexsort tie-breaks) — cached per id_cols tuple;
-        the rid join used to be rebuilt O(n) per hybrid query."""
+        the rid join used to be rebuilt O(n) per hybrid query. Copies
+        of one rid (a blind re-push) rank by their other payload values
+        (NULL first), so a score tie between them does not depend on
+        where each copy sits in the matrix: a refill (file order) and a
+        write-through extension (write order) break it alike. Copies
+        equal in every payload value keep matrix order."""
         key = tuple(id_cols)
         with self._cache_lock:
             if self._rids is None or self._rids[0] != key:
@@ -662,13 +857,33 @@ class DriverMatrixIndex:
                     "#".join(str(self.payload[i][c]) for c in id_cols)
                     for i in range(self.n)
                 ]
+                ranked = np.array(rids, dtype=object)
+                perm = np.argsort(ranked, kind="stable")
+                ranked = ranked[perm]
+                if self.n > 1 and (ranked[1:] == ranked[:-1]).any():
+                    self._rank_copies(perm, ranked, key)
                 order = np.empty(self.n, dtype=np.int64)
-                order[
-                    np.argsort(np.array(rids, dtype=object), kind="stable")
-                ] = np.arange(self.n)
+                order[perm] = np.arange(self.n)
                 self._rids = (key, rids, order)
             cached = self._rids
         return cached[1], cached[2]
+
+    def _rank_copies(self, perm: np.ndarray, ranked: np.ndarray, id_cols):
+        """Re-order, in place, each run of ``perm`` (rows sorted by
+        rid, ``ranked`` their rids) that holds copies of one rid by the
+        copies' other payload values, NULL first."""
+        rest = [c for c in self.payload[0] if c not in id_cols]
+
+        def payload_key(i: int) -> tuple:
+            row = self.payload[i]
+            return tuple((row[c] is not None, row[c]) for c in rest)
+
+        lo = 0
+        for hi in range(1, len(perm) + 1):
+            if hi == len(perm) or ranked[hi] != ranked[lo]:
+                if hi - lo > 1:
+                    perm[lo:hi] = sorted(perm[lo:hi], key=payload_key)
+                lo = hi
 
     def _newest_cache(
         self,

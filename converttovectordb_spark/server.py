@@ -39,6 +39,8 @@ via the transactional manifest; appends go through the manifest commit).
 from __future__ import annotations
 
 import json
+import os
+import re
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -58,6 +60,34 @@ class _ApiError(Exception):
     def __init__(self, status: int, message: str):
         super().__init__(message)
         self.status = status
+
+
+#: A Spark write job names every data file ``part-<split>-<job uuid>``.
+_WRITE_JOB_FILE = re.compile(
+    r"part-\d+-([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})"
+)
+
+
+def _sole_write(before, after) -> bool:
+    """True when store token ``after`` differs from ``before`` by
+    exactly one write: on a transactional store the version advanced
+    by exactly 1 in the same store lifetime (uid); on a plain store no
+    data-file entry changed or disappeared, and every new entry carries
+    one write job's uuid."""
+    if before is None or after is None or before[0] != after[0]:
+        return False
+    if before[0] == "v":
+        return after[1] == before[1] + 1 and after[2] == before[2]
+    old, new = before[1], after[1]
+    if not old < new:
+        return False
+    jobs = set()
+    for rel, _, _ in new - old:
+        m = _WRITE_JOB_FILE.match(os.path.basename(rel))
+        if m is None:
+            return False
+        jobs.add(m.group(1))
+    return len(jobs) == 1
 
 
 def _rows_to_json(rows) -> list[dict]:
@@ -87,10 +117,13 @@ class VectorDBApi:
         # (with_query_norms + knn_topk) beyond it. The same condition
         # as the reference's long-running server (documents kept in
         # memory, :308) and as the bench's knn_matched_warm_sec.
-        # Invalidated on every API write (/add_documents, /clear) AND
-        # re-validated against a cheap store token on every reuse, so a
-        # store written out-of-band (CLI ingest into the same dir) is
-        # picked up on the next query instead of served stale.
+        # A plain /add_documents EXTENDS the matrix tier with the rows
+        # it wrote when the store tokens prove that write alone moved
+        # the store (`_extend_corpus`); every other write (/clear, the
+        # dedup flags, the df and bits tiers) drops the caches. Every
+        # reuse re-validates a cheap store token, so a store written
+        # out-of-band (CLI ingest into the same dir) is picked up on
+        # the next query instead of served stale.
         from converttovectordb_spark.operators.serving import (
             DEFAULT_MAX_CELLS,
             DEFAULT_MAX_PAYLOAD_BYTES,
@@ -159,9 +192,12 @@ class VectorDBApi:
                 DriverMatrixIndex,
             )
 
-            df = self.engine.store.load()
+            # rows without an embedding are not indexed, but the
+            # fill's probe counts them: that count is /add_documents'
+            # running total_documents
+            stored = self.engine.store.load(require_embedding=False)
             idx = DriverMatrixIndex.from_dataframe(
-                df,
+                stored,
                 max_cells=self._matrix_max_cells,
                 max_payload_bytes=self._matrix_max_payload_bytes,
             )
@@ -180,7 +216,9 @@ class VectorDBApi:
             )
 
             cached, _ = fill_serving_cache(
-                with_query_norms(df),
+                with_query_norms(
+                    stored.filter(F.col("embedding").isNotNull())
+                ),
                 self.engine.spark.sparkContext.defaultParallelism,
             )
             self._corpus = cached
@@ -246,6 +284,40 @@ class VectorDBApi:
         with self._corpus_lock:
             self._drop_cache_locked(keep_bits_artifact=keep_bits_artifact)
 
+    def _extend_corpus(self, records: list, written: int, before, after):
+        """Install the matrix tier extended by ``records`` (the
+        DOCUMENTS_SCHEMA rows this write appended, as dicts), when the
+        store tokens read before (``before``) and
+        after (``after``) ``store.append`` prove that write alone
+        moved the store since the cache was filled; returns the new
+        ``total_documents``. Otherwise drops the caches (the next
+        request refills) and returns ``None``: the df and bits tiers
+        (no matrix), a filled secondary embedding cache, and a batch
+        the matrix cannot take exactly or within its budgets."""
+        with self._corpus_lock:
+            idx = self._matrix
+            if (
+                idx is not None
+                and self._mmr_corpus is None
+                and before == self._corpus_token
+                and written == len(records)
+                and _sole_write(before, after)
+            ):
+                grown = idx.extended(
+                    records,
+                    [r["embedding"] for r in records],
+                    schema=DOCUMENTS_SCHEMA,
+                    partition_cols=self.engine.store.partition_by,
+                    max_cells=self._matrix_max_cells,
+                    max_payload_bytes=self._matrix_max_payload_bytes,
+                )
+                if grown is not None:
+                    self._matrix = grown
+                    self._corpus_token = after
+                    return grown.stored_rows
+            self._drop_cache_locked()
+        return None
+
     # -- POST /add_documents (reference :150-228) -----------------------
     def add_documents(self, body: dict) -> dict:
         start = time.time()
@@ -306,8 +378,20 @@ class VectorDBApi:
                 )
             raise _ApiError(400, "No valid documents provided")
 
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         eng = self.engine
-        df = eng.spark.createDataFrame(valid, schema=DOCUMENTS_SCHEMA)
+        # one Arrow-built partition: the append writes one file per
+        # store partition, so the per-request token walk grows slowly.
+        # Built from the Python values, not through pandas, which would
+        # read a pushed NaN (json.loads accepts it) as NULL.
+        records = [dict(zip(DOCUMENTS_SCHEMA.names, row)) for row in valid]
+        df = eng.spark.createDataFrame(
+            pa.Table.from_pylist(
+                records, schema=to_arrow_schema(DOCUMENTS_SCHEMA)
+            )
+        ).coalesce(1)
         # Optional dedup-on-arrival — the same flags the repo-ingest
         # door offers, so push-style producers get identical drop
         # semantics (an API extension; absent keys keep the
@@ -344,10 +428,20 @@ class VectorDBApi:
                 )
                 raise _ApiError(400, msg)
             skipped_dup = len(valid) - written
+            self._invalidate_corpus()
+            total = None
         else:
+            before = self._store_token()
             written = eng.store.append(df)
-        self._invalidate_corpus()
-        total = eng.store.load(require_embedding=False).count() if eng.store.exists() else 0
+            total = self._extend_corpus(
+                records, written, before, self._store_token()
+            )
+        if total is None:
+            total = (
+                eng.store.load(require_embedding=False).count()
+                if eng.store.exists()
+                else 0
+            )
         return {
             "success": True,
             "message": f"Added {written} documents to the database",

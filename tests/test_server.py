@@ -414,7 +414,7 @@ def test_stats_health_clear_lifecycle(server):
     assert status == 200 and out["results"] == []
 
 
-def test_query_corpus_cache_invalidation(server):
+def test_query_corpus_cache_invalidation(server, monkeypatch):
     def _add(tag, n):
         docs = [
             {
@@ -435,13 +435,33 @@ def test_query_corpus_cache_invalidation(server):
     # the first query (the distributed tier would set _corpus instead)
     assert server.api._matrix is not None
 
-    # a write invalidates the cache; the next query sees the new rows
-    _add("b", 4)
-    assert server.api._matrix is None
+    # a write extends the warm matrix in place of a refill: a NEW
+    # index object (readers of the old one keep their snapshot) that
+    # already holds the written rows, built without a store re-read;
+    # the next query sees all of them
+    from converttovectordb_spark.operators.serving import DriverMatrixIndex
+
+    before = server.api._matrix
+    fills = []
+    orig = DriverMatrixIndex.from_dataframe.__func__
+
+    def counting(cls, *a, **kw):
+        fills.append(1)
+        return orig(cls, *a, **kw)
+
+    monkeypatch.setattr(
+        DriverMatrixIndex, "from_dataframe", classmethod(counting)
+    )
+    status, out = _add("b", 4)
+    assert status == 200 and out["total_documents"] == 7
+    after = server.api._matrix
+    assert after is not None and after is not before
+    assert after.n == 7 and before.n == 3
     status, out = _call(
         server, "POST", "/query", {"query_embedding": _unit(0)}
     )
     assert status == 200 and out["total_documents_searched"] == 7
+    assert fills == []
 
     _call(server, "POST", "/clear")
     assert server.api._matrix is None and server.api._corpus is None

@@ -498,7 +498,7 @@ def main() -> int:
     import tempfile
 
     from converttovectordb_spark.embeddings import embed_column
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_embed
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -514,8 +514,7 @@ def main() -> int:
         ).write.mode("overwrite").parquet(f"{tmp}/warm")
     t0 = time.time()
     with tempfile.TemporaryDirectory(prefix="bench_ingest_") as tmp:
-        chunks = explode_chunks(docs, chunk_size=200, overlap=40)
-        embedded = embed_column(chunks, "content", "embedding", None, 64)
+        embedded = chunk_embed(docs, chunk_size=200, overlap=40, dim=64)
         embedded.write.mode("overwrite").parquet(f"{tmp}/store")
         n_chunks = spark.read.parquet(f"{tmp}/store").count()
         ingest_sec = time.time() - t0
@@ -653,10 +652,9 @@ def main() -> int:
 
         t0 = time.time()
         with tempfile.TemporaryDirectory(prefix="bench_ingest_real_") as tmp:
-            chunks = explode_chunks(docs, chunk_size=200, overlap=40)
-            embedded = embed_column(
-                chunks, "content", "embedding",
-                sentence_transformer_embedder(), DEFAULT_DIM,
+            embedded = chunk_embed(
+                docs, chunk_size=200, overlap=40,
+                embedder=sentence_transformer_embedder(), dim=DEFAULT_DIM,
             )
             embedded.write.mode("overwrite").parquet(f"{tmp}/store")
             n_real = spark.read.parquet(f"{tmp}/store").count()

@@ -1,10 +1,14 @@
 """Embedding generation — reference operator T3, Spark-first.
 
 The reference encodes chunks one at a time on the driver
-(repo_to_vector.py:341-343, ~32-74 chunks/s). Here embedding is an
-Arrow-batched ``pandas_udf`` so it runs data-parallel across executors
-with one model instance per Python worker (lazy singleton), which is
-the canonical Spark batch-inference pattern.
+(repo_to_vector.py:341-343, ~32-74 chunks/s). Here the repo-ingest and
+streaming doors embed inside the fused chunk → embed operator
+(`sources.chunker.chunk_embed`): one Arrow-batched Python pass per
+partition, one ``encode`` call per frame of at most
+``spark.sql.execution.arrow.maxRecordsPerBatch`` chunks, one model
+instance per Python worker (lazy singleton) — the canonical Spark
+batch-inference pattern. ``embed_column`` embeds a column that is
+already chunked (the CLI push door).
 
 The embedder is injectable (the reference hardcodes
 SentenceTransformer at repo_to_vector.py:78): tests and the oracle use
@@ -16,12 +20,10 @@ import is gated — this container does not ship sentence-transformers.
 from __future__ import annotations
 
 import hashlib
-import struct
 from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -30,32 +32,36 @@ DEFAULT_MODEL_NAME = "all-MiniLM-L6-v2"
 DEFAULT_DIM = 384
 
 
-def hash_embed_one(text: str, dim: int = DEFAULT_DIM) -> list[float]:
-    """Deterministic pseudo-embedding: md5-seeded floats in [-1, 1],
-    L2-normalized. Platform-independent (pure hashlib/struct), so test
-    goldens and oracle fixtures are stable everywhere."""
-    out = np.empty(dim, dtype=np.float64)
-    h = b""
-    counter = 0
-    buf = b""
-    while len(buf) < dim * 4:
-        h = hashlib.md5(f"{counter}|".encode() + text.encode("utf-8", "ignore")).digest()
-        buf += h
-        counter += 1
-    ints = struct.unpack(f"<{dim}I", buf[: dim * 4])
-    for i, v in enumerate(ints):
-        out[i] = (v / 2147483647.5) - 1.0
+def _hash_vector(text: str, dim: int) -> np.ndarray:
+    """``hash_embed_one`` as a float64 array: the text is encoded once,
+    the md5 blocks ``md5(b"<counter>|" + text)`` are joined once and
+    read as little-endian uint32 words."""
+    data = text.encode("utf-8", "ignore")
+    blocks = b"".join(
+        hashlib.md5(b"%d|" % counter + data).digest()
+        for counter in range(-(-dim // 4))
+    )
+    out = np.frombuffer(blocks, dtype="<u4", count=dim) / 2147483647.5 - 1.0
     n = float(np.sqrt((out * out).sum()))
     if n > 0:
         out /= n
-    return [float(x) for x in out]
+    return out
+
+
+def hash_embed_one(text: str, dim: int = DEFAULT_DIM) -> list[float]:
+    """Deterministic pseudo-embedding: md5-seeded floats in [-1, 1],
+    L2-normalized. Platform-independent (pure hashlib, explicit byte
+    order), so test goldens and oracle fixtures are stable everywhere."""
+    return _hash_vector(text, dim).tolist()
 
 
 def hash_embedder(dim: int = DEFAULT_DIM) -> Callable[[list[str]], np.ndarray]:
     """Batch interface: list[str] → (n, dim) float32 ndarray."""
 
     def encode(texts: list[str]) -> np.ndarray:
-        return np.array([hash_embed_one(t, dim) for t in texts], dtype=np.float32)
+        return np.array(
+            [_hash_vector(t, dim) for t in texts], dtype=np.float32
+        )
 
     return encode
 
@@ -84,45 +90,23 @@ def sentence_transformer_embedder(
     return encode
 
 
-def embed_udf(
-    embedder: Callable[[list[str]], np.ndarray] | None = None,
-    dim: int = DEFAULT_DIM,
-    time_acc=None,
-):
-    """Arrow-batched embedding UDF: string column → array<float>.
-
-    Each Arrow batch (spark.sql.execution.arrow.maxRecordsPerBatch rows)
-    becomes ONE model.encode call — batched inference, not per-row.
-
-    ``time_acc`` (a SparkContext accumulator) collects encode wall-time
-    per Arrow batch, summed across workers — the A9 ``embedding_time``
-    metric. Because encoding is data-parallel here, this is aggregate
-    worker CPU-seconds, not driver wall-clock as in the serial reference
-    (repo_to_vector.py:452-467) — the honest distributed analog.
-    """
-    import time as _time
-
-    enc = embedder or hash_embedder(dim)
-
-    @pandas_udf("array<float>")
-    def _embed(texts: pd.Series) -> pd.Series:
-        t0 = _time.perf_counter()
-        vals = enc(["" if t is None else t for t in texts.tolist()])
-        if time_acc is not None:
-            time_acc.add(_time.perf_counter() - t0)
-        return pd.Series([np.asarray(v, dtype=np.float32) for v in vals])
-
-    return _embed
-
-
 def embed_column(
     df,
     text_col: str = "content",
     out_col: str = "embedding",
     embedder=None,
     dim: int = DEFAULT_DIM,
-    time_acc=None,
 ):
-    return df.withColumn(
-        out_col, embed_udf(embedder, dim, time_acc)(F.col(text_col))
-    )
+    """Embed an already-chunked text column: string → array<float>.
+    Each Arrow batch (spark.sql.execution.arrow.maxRecordsPerBatch
+    rows) becomes ONE ``encode`` call — batched inference, not per-row.
+    A repo or streaming ingest chunks and embeds in one pass instead
+    (`sources.chunker.chunk_embed`)."""
+    enc = embedder or hash_embedder(dim)
+
+    @pandas_udf("array<float>")
+    def _embed(texts: pd.Series) -> pd.Series:
+        vals = enc(["" if t is None else t for t in texts.tolist()])
+        return pd.Series([np.asarray(v, dtype=np.float32) for v in vals])
+
+    return df.withColumn(out_col, _embed(F.col(text_col)))

@@ -22,11 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from converttovectordb_spark.embeddings import (
-    DEFAULT_DIM,
-    embed_column,
-    hash_embedder,
-)
+from converttovectordb_spark.embeddings import DEFAULT_DIM, hash_embedder
 from converttovectordb_spark.operators.search import (
     DEFAULT_SCORE_THRESHOLD,
     cosine_scores,
@@ -36,10 +32,9 @@ from converttovectordb_spark.operators.search import (
 )
 from converttovectordb_spark.operators.stats import (
     corpus_stats_full,
-    docs_by_extension,
     health as _health,
 )
-from converttovectordb_spark.sources.chunker import explode_chunks
+from converttovectordb_spark.sources.chunker import chunk_embed
 from converttovectordb_spark.sources.repo_scan import (
     clone_repository,
     count_repo_files,
@@ -124,12 +119,20 @@ class VectorEngine:
         semantic_dedup_within_batch: bool = False,
         lexical_dedup: float | None = None,
     ) -> DataFrame:
-        """scan → chunk → embed → append. Returns the written batch.
+        """scan → chunk + embed → append. Returns the written batch.
+
+        Chunking and embedding are ONE Arrow operator
+        (`sources.chunker.chunk_embed`): each file row is chunked and
+        its chunks embedded in the same Python worker, so the write job
+        runs one Python evaluation per task, not two with a
+        ``posexplode`` between them.
 
         ``replace=True`` upserts by file path (transactional store
         only): re-ingesting a changed repo replaces each file's old
         chunks via merge-on-read tombstones instead of duplicating
-        them — the incremental re-crawl story.
+        them — the incremental re-crawl story. The upsert reads its
+        tombstone key set back from the staged batch, so the
+        scan → chunk → embed lineage runs once here too.
 
         ``semantic_dedup=t`` drops batch rows whose nearest committed
         neighbor has cosine ≥ t BEFORE the write — dedup-on-arrival
@@ -246,12 +249,18 @@ class VectorEngine:
         files = scan_repo_files(self.spark, repo_path).observe(
             obs_files, F.count(F.lit(1)).alias("files_processed")
         )
-        chunks = explode_chunks(
-            files, chunk_size=self.chunk_size, overlap=self.overlap
-        ).observe(obs_chunks, F.count(F.lit(1)).alias("chunks_created"))
-        docs = embed_column(
-            chunks, "content", "embedding", self.embedder, self.dim, embed_acc
-        ).withColumn("timestamp", F.lit(time.time()))
+        docs = (
+            chunk_embed(
+                files,
+                chunk_size=self.chunk_size,
+                overlap=self.overlap,
+                embedder=self.embedder,
+                dim=self.dim,
+                time_acc=embed_acc,
+            )
+            .observe(obs_chunks, F.count(F.lit(1)).alias("chunks_created"))
+            .withColumn("timestamp", F.lit(time.time()))
+        )
         batch = docs.select(
             "path",
             "extension",
@@ -2972,17 +2981,11 @@ class VectorEngine:
                 "documents_by_extension": {},
                 "avg_chunks_per_file": None,
             }
-        docs = self.store.load(require_embedding=False)
-        # Two actions: the fused one-pass aggregate (A1/A3/A4/avg-chars/
-        # A5 share one scan + one shuffle) and the per-extension
-        # groupBy. Each re-runs the store's `load()` plan, so the Spark
-        # job count follows that plan: a transactional store after one
-        # upsert measured 12 jobs and 26 tasks per stats() call.
-        base = corpus_stats_full(docs).collect()[0].asDict()
-        base["documents_by_extension"] = {
-            r["extension"]: r["n_docs"] for r in docs_by_extension(docs).collect()
-        }
-        return base
+        # One action over the store's `load()` plan (see
+        # `corpus_stats_full`): the plan is built and run once, and the
+        # driver rolls up one collected row per extension plus one
+        # holding the per-path sums.
+        return corpus_stats_full(self.store.load(require_embedding=False))
 
     def fsck(self, *, heal: bool = False) -> list[dict]:
         """One integrity door over every persisted artifact this

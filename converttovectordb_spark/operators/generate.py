@@ -92,7 +92,7 @@ def generate_udf(generator: Callable[[list[str]], list[str]] | None = None):
 
     Each Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``
     rows) becomes ONE ``generator(prompts)`` call — batched inference,
-    the same shape as ``embed_udf``."""
+    the same shape as ``embed_column``."""
     gen = generator or fake_generator()
 
     @pandas_udf("string")

@@ -8,11 +8,13 @@ Reference (mock_vector_db_api.py:314-379) computes in one Python loop:
   A5 avg chunks per file: per-path last total_chunks, then mean
      (:337,353-360,370)
 
-Spark-first: A1/A3/A4 collapse into ONE hash-aggregate pass; A2 is one
-groupBy; A5 is a two-level aggregate (groupBy path → avg). Catalyst
-prunes the embedding column out of all of them automatically — the
-reference reads every full row. At 100 TB these are map-side partial
-aggregates + a single tiny shuffle of the partials.
+Spark-first: the whole suite is ONE action over the documents table —
+one aggregate over two grouping sets, per path and per extension, and
+a second that folds the per-path rows into one row beside the
+per-extension rows. Catalyst prunes the embedding column out of it —
+the reference reads every full row. At 100 TB these are map-side
+partial aggregates plus small shuffles of the partials, whose size
+follows the distinct paths and extensions, not the rows.
 """
 
 from __future__ import annotations
@@ -21,79 +23,76 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def corpus_stats(docs: DataFrame) -> DataFrame:
-    """A1+A3+A4 (+avg content length) in a single aggregate pass over the
-    engine's documents table (path/extension/content/total_chunks)."""
-    return docs.agg(
-        F.count(F.lit(1)).alias("total_documents"),
-        F.countDistinct(
-            F.when(F.col("path") != "", F.col("path"))
-        ).alias("unique_files"),
-        (F.sum(F.length("content")) / F.lit(1024.0)).alias(
-            "total_content_kb"
-        ),
-        F.avg(F.length("content")).alias("avg_content_chars"),
-    )
+def corpus_stats_full(docs: DataFrame) -> dict:
+    """A1–A5 and the average content length in ONE Spark action.
 
-
-def docs_by_extension(docs: DataFrame) -> DataFrame:
-    """A2: per-extension counts with the reference's 'unknown' default
-    for missing extensions (mock_vector_db_api.py:341)."""
-    return (
-        docs.groupBy(
-            F.coalesce(F.col("extension"), F.lit("unknown")).alias("extension")
-        )
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def avg_chunks_per_file(docs: DataFrame) -> DataFrame:
-    """A5: per-path total_chunks (constant per path — max==last), then
-    mean across paths."""
-    per_file = docs.groupBy("path").agg(
-        F.max("total_chunks").alias("chunks")
-    )
-    return per_file.agg(F.avg("chunks").alias("avg_chunks_per_file"))
-
-
-def corpus_stats_full(docs: DataFrame) -> DataFrame:
-    """A1+A3+A4+avg-chars+A5 in ONE action (one two-level aggregate).
-
-    A5 already forces a per-path groupBy; every global stat is
-    recoverable from those per-path partials, so the whole /stats
-    suite rides the SAME shuffle instead of three separate jobs
-    (reference computes all of it in one Python loop,
-    mock_vector_db_api.py:314-379 — one pass there, one job here):
-      total_documents   = sum of per-path row counts
+    A5 already forces a per-path groupBy, and every other statistic
+    but A2 is recoverable from per-path partials; A2 needs a group per
+    extension, and a path's rows may carry several extensions (REST
+    writes set ``extension`` freely). So one aggregate runs over the
+    grouping sets ``(path)`` and ``(extension)`` — one Expand, one
+    shuffle of partials — and a second folds the per-path rows into
+    one row, keeping the per-extension rows as they are:
+      total_documents   = sum of per-extension row counts
       unique_files      = count of non-empty path groups (path='' and
                           NULL-path groups excluded, matching
                           countDistinct(when(path != '', path)))
       total_content_kb  = sum of per-path content-length sums / 1024
-      avg_content_chars = global length sum / global row count
+      avg_content_chars = global length sum / non-NULL content rows
       avg_chunks_per_file = avg of per-path max(total_chunks), every
-                          path group included — identical to
-                          `avg_chunks_per_file` on its own.
-    At 100 TB: map-side partial agg on path, one small shuffle, then a
-    single-row reduce — no extra scan per statistic."""
-    per_file = docs.groupBy("path").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.count(F.length("content")).alias("_n_content"),
-        F.sum(F.length("content")).alias("_len"),
-        F.max("total_chunks").alias("_chunks"),
+                          path group included
+      documents_by_extension = rows per extension, NULL → 'unknown'
+    Exact: ``grouping(path)`` tells a NULL-path group from an
+    extension row, and the collected result is one row per extension
+    plus one."""
+    partials = (
+        docs.select(
+            "path",
+            F.coalesce(F.col("extension"), F.lit("unknown")).alias("extension"),
+            F.length("content").alias("_len"),
+            "total_chunks",
+        )
+        .groupingSets([["path"], ["extension"]], "path", "extension")
+        .agg(
+            F.grouping("path").alias("_by_ext"),
+            F.count(F.lit(1)).alias("_n"),
+            F.count("_len").alias("_n_content"),
+            F.sum("_len").alias("_len"),
+            F.max("total_chunks").alias("_chunks"),
+        )
     )
-    return per_file.agg(
-        # coalesce: sum over zero groups is NULL, but the empty-db stats
-        # shape must degrade to 0 like the reference's Python loop (and
-        # the pre-fusion single-level count() did).
-        F.coalesce(F.sum("_n"), F.lit(0)).alias("total_documents"),
-        F.count(F.when(F.col("path") != "", F.lit(1))).alias("unique_files"),
-        F.coalesce(F.sum("_len") / F.lit(1024.0), F.lit(0.0)).alias(
-            "total_content_kb"
+    rows = (
+        partials.groupBy("_by_ext", "extension")
+        .agg(
+            F.sum("_n").alias("n_docs"),
+            F.count(F.when(F.col("path") != "", 1)).alias("files"),
+            F.sum("_n_content").alias("n_content"),
+            F.sum("_len").alias("len"),
+            F.sum("_chunks").alias("chunks"),
+            F.count("_chunks").alias("n_chunks"),
+        )
+        .collect()
+    )
+    by_ext = [r for r in rows if r["_by_ext"]]
+    paths = next((r for r in rows if not r["_by_ext"]), None)
+
+    def total(c: str) -> int:
+        return (paths[c] or 0) if paths is not None else 0
+
+    length, n_content = total("len"), total("n_content")
+    n_chunks = total("n_chunks")
+    return {
+        "total_documents": sum(r["n_docs"] for r in by_ext),
+        "unique_files": total("files"),
+        "total_content_kb": length / 1024.0,
+        "avg_content_chars": length / n_content if n_content else None,
+        "avg_chunks_per_file": (
+            total("chunks") / n_chunks if n_chunks else None
         ),
-        # divide by non-null-content rows, matching avg(length(content))
-        (F.sum("_len") / F.sum("_n_content")).alias("avg_content_chars"),
-        F.avg("_chunks").alias("avg_chunks_per_file"),
-    )
+        "documents_by_extension": {
+            r["extension"]: r["n_docs"] for r in by_ext
+        },
+    }
 
 
 def health(docs: DataFrame) -> dict:

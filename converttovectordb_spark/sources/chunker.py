@@ -14,19 +14,33 @@ not copied):
     advance past ``start``, in which case it starts at ``end`` (:298).
 
 The function is pure Python (it is inherently sequential per document)
-and is applied distributedly as an Arrow-batched UDF + ``posexplode``:
-one input row fans out to N chunk rows, and the chunk index / total
-count come from the array position and size — no window function, no
-shuffle (reference operator T2 for free).
+and is applied distributedly by ``chunk_embed``: ONE Arrow pass per
+partition in which each file row is chunked and its chunks embedded in
+the same Python worker. One input row fans out to N chunk rows whose
+chunk index / total count come from the chunk list's positions and
+length — no window function, no shuffle (reference operator T2 for
+free), and no second Python evaluation for the embedder (the operator
+fusion FuseME argues for, applied to the ingest plan).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import time
+from typing import Callable
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from converttovectordb_spark.embeddings import DEFAULT_DIM, hash_embedder
 from converttovectordb_spark.schema import (
     DEFAULT_CHUNK_OVERLAP,
     DEFAULT_CHUNK_SIZE,
@@ -88,39 +102,90 @@ def chunk_fixed_expr(
     )
 
 
-def chunk_udf(
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    overlap: int = DEFAULT_CHUNK_OVERLAP,
-):
-    """Arrow-batched chunker UDF: string → array<string>."""
-
-    @pandas_udf("array<string>")
-    def _chunk(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: chunk_string(t if isinstance(t, str) else "", chunk_size, overlap)
-        )
-
-    return _chunk
-
-
-def explode_chunks(
+def chunk_embed(
     files: DataFrame,
     *,
     content_col: str = "content",
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     overlap: int = DEFAULT_CHUNK_OVERLAP,
+    embedder: Callable | None = None,
+    dim: int = DEFAULT_DIM,
+    time_acc=None,
 ) -> DataFrame:
-    """files(path, content, …) → one row per chunk with chunk_index /
-    total_chunks / content columns (reference T1+T2 as one flatMap)."""
-    chunked = files.withColumn(
-        "_chunks", chunk_udf(chunk_size, overlap)(F.col(content_col))
+    """files(path, content, …) → one row per chunk: every other input
+    column passed through, then ``total_chunks`` and ``chunk_index``
+    (int), the chunk ``content`` and its float32 ``embedding``.
+
+    One ``mapInArrow`` pass: each file row goes through
+    ``chunk_string`` and then the embedder in the same Python worker.
+    NULL or empty content yields no rows. Each ``embedder(texts)``
+    call and each emitted frame holds at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` chunks, the
+    batch bound Spark gives an Arrow UDF, so one huge file cannot
+    blow a worker's memory. ``time_acc`` (a SparkContext accumulator)
+    sums the encode wall time across workers — aggregate worker
+    seconds, the A9 ``embedding_time`` metric."""
+    import pyarrow as pa
+
+    enc = embedder or hash_embedder(dim)
+    keep = [c for c in files.columns if c != content_col]
+    schema = StructType(
+        [files.schema[c] for c in keep]
+        + [
+            StructField("total_chunks", IntegerType(), False),
+            StructField("chunk_index", IntegerType(), False),
+            StructField("content", StringType()),
+            StructField("embedding", ArrayType(FloatType())),
+        ]
     )
-    return (
-        chunked.withColumn("total_chunks", F.size("_chunks").cast("int"))
-        .select(
-            *[c for c in files.columns if c != content_col],
-            "total_chunks",
-            F.posexplode("_chunks").alias("chunk_index", "content"),
+    names = schema.fieldNames()
+    max_rows = int(
+        files.sparkSession.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
         )
-        .withColumn("chunk_index", F.col("chunk_index").cast("int"))
     )
+    if max_rows <= 0:  # Spark's "no limit"
+        max_rows = 1 << 62
+
+    def frame(rb, rows, index, total, chunks):
+        t0 = time.perf_counter()
+        vecs = np.asarray(enc(chunks), dtype=np.float32)
+        vecs = vecs.reshape(len(chunks), -1)
+        if time_acc is not None:
+            time_acc.add(time.perf_counter() - t0)
+        offsets = np.arange(len(chunks) + 1, dtype=np.int32) * vecs.shape[1]
+        embedding = pa.ListArray.from_arrays(offsets, vecs.reshape(-1))
+        return pa.RecordBatch.from_arrays(
+            rb.select(keep).take(pa.array(rows, type=pa.int64())).columns
+            + [
+                pa.array(total, type=pa.int32()),
+                pa.array(index, type=pa.int32()),
+                pa.array(chunks, type=rb.schema.field(content_col).type),
+                embedding,
+            ],
+            names=names,
+        )
+
+    def fused(batches):
+        for rb in batches:
+            rows, index, total, chunks = [], [], [], []
+            for i, text in enumerate(rb.column(content_col).to_pylist()):
+                cs = chunk_string(text or "", chunk_size, overlap)
+                rows += [i] * len(cs)
+                index += range(len(cs))
+                total += [len(cs)] * len(cs)
+                chunks += cs
+                while len(chunks) >= max_rows:
+                    yield frame(
+                        rb,
+                        rows[:max_rows],
+                        index[:max_rows],
+                        total[:max_rows],
+                        chunks[:max_rows],
+                    )
+                    del rows[:max_rows], index[:max_rows]
+                    del total[:max_rows], chunks[:max_rows]
+            if chunks:
+                yield frame(rb, rows, index, total, chunks)
+
+    return files.mapInArrow(fused, schema)

@@ -21,10 +21,34 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_APPEND_LOCKS: dict[str, threading.Lock] = {}
+_APPEND_LOCKS_GUARD = threading.Lock()
+
+
+def _append_lock(path: str) -> threading.Lock:
+    """The in-process lock of one plain store directory. Two append
+    jobs into one directory share Spark's ``<path>/_temporary``
+    committer dir, so one job's commit or cleanup breaks the other's
+    task writes; appends to a plain store are therefore serialized
+    per ``realpath``."""
+    with _APPEND_LOCKS_GUARD:
+        return _APPEND_LOCKS.setdefault(
+            os.path.realpath(path), threading.Lock()
+        )
+
+
+def _valid_rows(docs: DataFrame) -> DataFrame:
+    """The reference's append validation: rows must carry non-null
+    ``content`` and ``embedding`` (mock_vector_db_api.py:181-190)."""
+    return docs.filter(
+        F.col("content").isNotNull() & F.col("embedding").isNotNull()
+    )
 
 
 class DocumentStore:
@@ -42,33 +66,35 @@ class DocumentStore:
         reference ingest validation (mock_vector_db_api.py:181-190).
 
         The count rides the write job itself as a `df.observe` metric
-        (CollectMetrics) — no second pass over the data."""
+        (CollectMetrics) — no second pass over the data. Appends to one
+        store directory are serialized inside the process
+        (`_append_lock`); other processes need their own coordination
+        or a transactional store."""
         from pyspark.sql import Observation
 
         if validate:
-            docs = docs.filter(
-                F.col("content").isNotNull() & F.col("embedding").isNotNull()
-            )
+            docs = _valid_rows(docs)
         obs = Observation()
         docs = docs.observe(obs, F.count(F.lit(1)).alias("rows_written"))
         writer = docs.write.mode("append")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
-        rows = int(obs.get["rows_written"])
-        if rows == 0:
-            # a zero-row FIRST write leaves a dir holding only
-            # _SUCCESS: exists() then reads True while load() raises
-            # UNABLE_TO_INFER_SCHEMA — restore "absent" when the store
-            # holds no data files at all (an established store is
-            # untouched: append added nothing)
-            has_data = any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(self.path)
-                for f in files
-            )
-            if not has_data:
-                shutil.rmtree(self.path, ignore_errors=True)
+        with _append_lock(self.path):
+            writer.parquet(self.path)
+            rows = int(obs.get["rows_written"])
+            if rows == 0:
+                # a zero-row FIRST write leaves a dir holding only
+                # _SUCCESS: exists() then reads True while load()
+                # raises UNABLE_TO_INFER_SCHEMA — restore "absent"
+                # when the store holds no data files at all (an
+                # established store is untouched: append added nothing)
+                has_data = any(
+                    f.endswith(".parquet")
+                    for _, _, files in os.walk(self.path)
+                    for f in files
+                )
+                if not has_data:
+                    shutil.rmtree(self.path, ignore_errors=True)
         return rows
 
     def overwrite(self, docs: DataFrame) -> None:
@@ -292,7 +318,6 @@ class TransactionalDocumentStore(DocumentStore):
         *,
         validate: bool = True,
         txn_id: str | None = None,
-        _extra_commit: dict | None = None,
     ) -> int:
         """Stage the batch, then atomically publish it. Returns rows
         written. Raises ValueError when the batch schema diverges from
@@ -305,20 +330,36 @@ class TransactionalDocumentStore(DocumentStore):
         replayed after a sink-succeeded/checkpoint-failed crash dedupes
         instead of double-writing. Epochs of one streaming query are
         serialized, so the check-then-commit here needs no extra lock."""
-        import json
-        import uuid
-
-        from pyspark.sql import Observation
-
         if txn_id is not None and any(
             self._read_manifest(v).get("txn_id") == txn_id
             for v in self._versions()
         ):
             return 0
         if validate:
-            docs = docs.filter(
-                F.col("content").isNotNull() & F.col("embedding").isNotNull()
-            )
+            docs = _valid_rows(docs)
+        staged = self._stage(docs)
+        if staged is None:
+            return 0
+        extra = {} if txn_id is None else {"txn_id": txn_id}
+        return self._publish(*staged, extra)
+
+    def _stage(self, docs: DataFrame) -> tuple[str, int, list] | None:
+        """Write the batch to a fresh, unpublished batch dir (one
+        Spark job; the row count rides it as a `df.observe` metric).
+        Returns ``(batch_dir, rows, schema fingerprint)``, or None for
+        a zero-row batch, whose dir is removed. Raises ValueError when
+        the batch schema diverges from the one recorded at version 0.
+
+        NEVER commit a zero-row batch: with partition_by the staged
+        dir holds only _SUCCESS, and unioning it poisons every later
+        load() with UNABLE_TO_INFER_SCHEMA — a fully-deduped re-crawl
+        or empty streaming epoch used to brick the store permanently.
+        Nothing to replay either: a replayed zero-row epoch
+        re-produces zero rows."""
+        import uuid
+
+        from pyspark.sql import Observation
+
         fingerprint = self._schema_fingerprint(docs)
         versions = self._versions()
         if versions:
@@ -337,20 +378,17 @@ class TransactionalDocumentStore(DocumentStore):
         writer.parquet(batch_dir)
         rows = int(obs.get["rows_written"])
         if rows == 0:
-            # NEVER commit a zero-row batch: with partition_by the
-            # staged dir holds only _SUCCESS, and unioning it poisons
-            # every later load() with UNABLE_TO_INFER_SCHEMA — a
-            # fully-deduped re-crawl or empty streaming epoch used to
-            # brick the store permanently. Nothing to replay either: a
-            # replayed zero-row epoch re-produces zero rows.
             shutil.rmtree(batch_dir, ignore_errors=True)
-            return 0
+            return None
+        return batch_dir, rows, fingerprint
+
+    def _publish(
+        self, batch_dir: str, rows: int, fingerprint: list, extra: dict
+    ) -> int:
+        """Commit a staged batch dir as the next version; returns rows."""
         self._ensure_uid()
         commit = {"batch_dir": batch_dir, "rows": rows, "schema": fingerprint}
-        if txn_id is not None:
-            commit["txn_id"] = txn_id
-        if _extra_commit:
-            commit.update(_extra_commit)
+        commit.update(extra)
         self._commit_exclusive(commit, (self._versions() or [-1])[-1] + 1)
         self._maybe_auto_compact()
         return rows
@@ -574,27 +612,14 @@ class TransactionalDocumentStore(DocumentStore):
         tombstone debt; `load(at_version=...)` still time-travels to
         the pre-upsert rows.
 
-        Scale shape: the write is one batch append plus a tiny distinct
-        key parquet; the read-side anti-filter is a broadcast join
-        against accumulated LIVE tombstone keys (proportional to
-        replaced files, not corpus rows) — the compaction cadence is
-        what bounds it."""
+        Scale shape: the batch is staged once, a tiny distinct key
+        parquet is read back from the staged files' key columns, and
+        one manifest publishes both; the read-side anti-filter is a
+        broadcast join against accumulated LIVE tombstone keys
+        (proportional to replaced files, not corpus rows) — the
+        compaction cadence is what bounds it."""
         import uuid
 
-        # tombstone keys derive from the VALIDATED batch: validation's
-        # contract is "invalid rows are DROPPED" — a key whose every
-        # row fails validation must not tombstone (= silently delete)
-        # its committed rows with nothing written in their place
-        if validate:
-            docs = docs.filter(
-                F.col("content").isNotNull() & F.col("embedding").isNotNull()
-            )
-        keys_dir = os.path.join(
-            self.path, self.DATA_DIR, uuid.uuid4().hex + "_keys"
-        )
-        docs.select(*key_cols).distinct().write.mode("overwrite").parquet(
-            keys_dir
-        )
         for v in self._live_versions(self._versions()):
             m = self._read_manifest(v)
             if "key_cols" in m and m["key_cols"] != list(key_cols):
@@ -602,19 +627,35 @@ class TransactionalDocumentStore(DocumentStore):
                     f"upsert key_cols {list(key_cols)} != previously "
                     f"committed {m['key_cols']}"
                 )
-        written = self.append(
-            docs,
-            validate=False,  # already filtered above, keys match rows
-            _extra_commit={
-                "tombstone_keys": keys_dir,
-                "key_cols": list(key_cols),
-            },
+        # tombstone keys derive from the VALIDATED batch: validation's
+        # contract is "invalid rows are DROPPED" — a key whose every
+        # row fails validation must not tombstone (= silently delete)
+        # its committed rows with nothing written in their place
+        if validate:
+            docs = _valid_rows(docs)
+        staged = self._stage(docs)
+        if staged is None:
+            return 0  # zero valid rows: no commit, no key set
+        # a distinct over `docs` itself would re-run its whole lineage
+        # (scan → chunk → embed on a re-crawl); the staged parquet's
+        # key columns hold the same keys. The batch's own key schema
+        # skips a footer-inference job and keeps a partition key's type;
+        # the select drops the partition columns that discovery appends
+        # to a user schema, so the key set holds ``key_cols`` only.
+        from pyspark.sql.types import StructType
+
+        keys_dir = os.path.join(
+            self.path, self.DATA_DIR, uuid.uuid4().hex + "_keys"
         )
-        if written == 0:
-            # zero valid rows → append skipped the commit; the staged
-            # key parquet is unreferenced debris
-            shutil.rmtree(keys_dir, ignore_errors=True)
-        return written
+        keys = self.spark.read.schema(
+            StructType([docs.schema[c] for c in key_cols])
+        ).parquet(staged[0])
+        keys.select(*key_cols).distinct().write.mode("overwrite").parquet(
+            keys_dir
+        )
+        return self._publish(
+            *staged, {"tombstone_keys": keys_dir, "key_cols": list(key_cols)}
+        )
 
     def overwrite(self, docs: DataFrame) -> None:
         self.clear(backup=False)

@@ -35,8 +35,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from converttovectordb_spark.embeddings import embed_column
-from converttovectordb_spark.sources.chunker import explode_chunks
+from converttovectordb_spark.sources.chunker import chunk_embed
+from converttovectordb_spark.sources.store import DocumentStore
 
 
 def stream_txn_id(checkpoint_dir: str, epoch_id: int) -> str:
@@ -99,18 +99,21 @@ def stream_ingest_documents(
     )
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        chunks = explode_chunks(
-            batch_df, chunk_size=chunk_size, overlap=overlap
+        docs = chunk_embed(
+            batch_df,
+            chunk_size=chunk_size,
+            overlap=overlap,
+            embedder=embedder,
+            dim=dim,
         )
         # wall-clock stamp like every other write door (an epoch-id
         # stamp always LOSES the newest-copy race in _dedup_row_ids
         # against wall-clock-stamped pushes/ingests — a streamed
         # re-crawl could never supersede its old copy)
-        docs = embed_column(chunks, "content", "embedding", embedder, dim)
-        (
-            docs.withColumn("timestamp", F.lit(time.time()))
-            .write.mode("append")
-            .parquet(store_path)
+        # through DocumentStore.append: its per-store lock serializes
+        # this epoch's write with a REST append into the same directory
+        DocumentStore(spark, store_path).append(
+            docs.withColumn("timestamp", F.lit(time.time())), validate=False
         )
 
     writer = (
@@ -328,9 +331,6 @@ def stream_ingest_transactional(
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         index_ref["index"] = _resolve_current(index_ref["index"])
-        chunks = explode_chunks(
-            batch_df, chunk_size=chunk_size, overlap=overlap
-        )
         # wall-clock stamp, like every other write door: an epoch-id
         # stamp (the r12.0 behavior) always LOSES the newest-copy race
         # in _dedup_row_ids against wall-clock-stamped pushes/ingests,
@@ -338,8 +338,12 @@ def stream_ingest_transactional(
         # Replay-safe: a replayed epoch dedups on the manifest txn id
         # BEFORE any write, so the nondeterministic stamp is never
         # written twice (the stream_ingest_dedup door's argument).
-        docs = embed_column(
-            chunks, "content", "embedding", embedder, dim
+        docs = chunk_embed(
+            batch_df,
+            chunk_size=chunk_size,
+            overlap=overlap,
+            embedder=embedder,
+            dim=dim,
         ).withColumn("timestamp", F.lit(time.time()))
         txn = stream_txn_id(checkpoint_dir, epoch_id)
         if index_ref["index"] is None:
@@ -452,14 +456,13 @@ def stream_ingest_dedup(
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_mtime")
         )
-        chunks = explode_chunks(
-            latest,
-            chunk_size=engine.chunk_size,
-            overlap=engine.overlap,
-        )
         docs = (
-            embed_column(
-                chunks, "content", "embedding", engine.embedder, engine.dim
+            chunk_embed(
+                latest,
+                chunk_size=engine.chunk_size,
+                overlap=engine.overlap,
+                embedder=engine.embedder,
+                dim=engine.dim,
             )
             .withColumn("timestamp", F.lit(time.time()))
             .select(

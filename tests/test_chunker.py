@@ -10,7 +10,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from converttovectordb_spark.sources.chunker import chunk_string, explode_chunks
+from converttovectordb_spark.sources.chunker import chunk_embed, chunk_string
 
 
 def test_empty_text():
@@ -76,11 +76,11 @@ def test_property_coverage_and_bounds(text):
     assert reassembled == text
 
 
-def test_explode_chunks_indexes(spark):
+def test_chunk_embed_indexes(spark):
     df = spark.createDataFrame(
         [("a.py", "x" * 2500), ("b.py", "short")], ["path", "content"]
     )
-    out = explode_chunks(df, chunk_size=1000, overlap=200).collect()
+    out = chunk_embed(df, chunk_size=1000, overlap=200, dim=8).collect()
     by_path = {}
     for r in out:
         by_path.setdefault(r.path, []).append(r)

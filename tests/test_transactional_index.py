@@ -157,16 +157,14 @@ def test_stream_ingest_indexed_exactly_once(spark, tmp_path):
 
     store = TransactionalDocumentStore(spark, str(tmp_path / "store"))
     # seed the store+index with one batch so the index has a schema
-    from converttovectordb_spark.embeddings import embed_column
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_embed
 
     seed_raw = spark.createDataFrame(
         [("seed.txt", "txt", "initial corpus document " * 30)],
         "path string, extension string, content string",
     )
-    seed = embed_column(
-        explode_chunks(seed_raw, chunk_size=200, overlap=50),
-        "content", "embedding", None, 16,
+    seed = chunk_embed(
+        seed_raw, chunk_size=200, overlap=50, dim=16
     ).withColumn("timestamp", F.lit(0.0))
     store.append(seed)
     index = TransactionalIVFIndex.build(
@@ -184,15 +182,13 @@ def test_stream_ingest_indexed_exactly_once(spark, tmp_path):
     assert n_store == n_index > seed.count()
 
     # crash-replay simulation: re-apply epoch 0's sink by hand
-    docs = embed_column(
-        explode_chunks(
-            spark.read.schema(
-                "path string, extension string, content string"
-            ).json(str(drop)),
-            chunk_size=200,
-            overlap=50,
-        ),
-        "content", "embedding", None, 16,
+    docs = chunk_embed(
+        spark.read.schema(
+            "path string, extension string, content string"
+        ).json(str(drop)),
+        chunk_size=200,
+        overlap=50,
+        dim=16,
     ).withColumn("timestamp", F.lit(0.0))
     txn = stream_txn_id(ckpt, 0)
     assert store.append(docs, txn_id=txn) == 0
@@ -594,8 +590,7 @@ def test_stream_indexed_retrain_on_drift(spark, tmp_path):
     import json
     import os
 
-    from converttovectordb_spark.embeddings import embed_column
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_embed
     from converttovectordb_spark.sources.store import (
         TransactionalDocumentStore,
     )
@@ -631,9 +626,9 @@ def test_stream_indexed_retrain_on_drift(spark, tmp_path):
         [("a.txt", "txt", "AAA seed doc"), ("b.txt", "txt", "BBB seed doc")],
         "path string, extension string, content string",
     )
-    seed = embed_column(
-        explode_chunks(seed_raw, chunk_size=200, overlap=50),
-        "content", "embedding", _kw_embedder, 4,
+    seed = chunk_embed(
+        seed_raw, chunk_size=200, overlap=50,
+        embedder=_kw_embedder, dim=4,
     ).withColumn("timestamp", F.lit(0.0))
     store.append(seed)
     base = str(tmp_path / "tivf_base")
@@ -674,14 +669,12 @@ def test_stream_indexed_retrain_on_drift(spark, tmp_path):
     assert new_index.corpus().count() == n_store == 8
 
     # stale-epoch dedup preserved across the swap: replay epoch 0
-    docs = embed_column(
-        explode_chunks(
-            spark.read.schema(
-                "path string, extension string, content string"
-            ).json(str(drop)),
-            chunk_size=200, overlap=50,
-        ),
-        "content", "embedding", _kw_embedder, 4,
+    docs = chunk_embed(
+        spark.read.schema(
+            "path string, extension string, content string"
+        ).json(str(drop)),
+        chunk_size=200, overlap=50,
+        embedder=_kw_embedder, dim=4,
     ).withColumn("timestamp", F.lit(0.0))
     txn = stream_txn_id(ckpt, 0)
     assert store.append(docs, txn_id=txn) == 0
@@ -698,9 +691,8 @@ def test_engine_rebuild_carries_txn_ids(spark, tmp_path):
     `maybe_retrain`) carries the replaced index's txn ids exactly like
     the streaming retrain: after a forced retrain, a replay of a
     pre-rebuild epoch stays a no-op on the new manifest."""
-    from converttovectordb_spark.embeddings import embed_column
     from converttovectordb_spark.engine import VectorEngine
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_embed
 
     eng = VectorEngine(
         spark, str(tmp_path / "store"), dim=16, transactional=True
@@ -717,9 +709,9 @@ def test_engine_rebuild_carries_txn_ids(spark, tmp_path):
         [("c.txt", ".txt", "gamma streamed document " * 30)],
         "path string, extension string, content string",
     )
-    batch = embed_column(
-        explode_chunks(batch_raw, chunk_size=200, overlap=50),
-        "content", "embedding", eng.embedder, 16,
+    batch = chunk_embed(
+        batch_raw, chunk_size=200, overlap=50,
+        embedder=eng.embedder, dim=16,
     ).withColumn("timestamp", F.lit(1.0)).withColumn(
         "_row_id", F.concat_ws("#", F.col("path"), F.col("chunk_index"))
     )

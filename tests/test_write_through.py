@@ -366,6 +366,69 @@ def test_concurrent_writes_lose_no_rows(spark, tmp_path):
     assert out["total_documents_searched"] == stored
 
 
+def test_concurrent_plain_writes_lose_no_rows(spark, tmp_path):
+    """Six concurrent 3-document ``/add_documents`` on one PLAIN store:
+    appends into one directory are serialized per store path, so no
+    request fails in Spark's shared ``_temporary`` committer and every
+    row lands."""
+    import sys
+    import threading
+    import urllib.error
+    import urllib.request
+
+    from converttovectordb_spark.server import VectorDBServer
+
+    rng = np.random.default_rng(17)
+    eng = VectorEngine(
+        spark, str(tmp_path / "store"), embedder=hash_embedder(DIM), dim=DIM
+    )
+    srv = VectorDBServer(eng, port=0).start()
+    host, port = srv.address
+
+    def post(docs) -> int:
+        req = urllib.request.Request(
+            f"http://{host}:{port}/add_documents",
+            data=json.dumps({"documents": docs}).encode(),
+            headers={"Content-Type": "application/json"},
+            method="POST",
+        )
+        try:
+            with urllib.request.urlopen(req, timeout=120) as resp:
+                return resp.status
+        except urllib.error.HTTPError as e:
+            return e.code
+
+    old = sys.getswitchinterval()
+    try:
+        assert post(_docs(rng, "seed", 4)) == 200
+        batches = [_docs(rng, f"t{i}", 3) for i in range(6)]  # > cores
+        statuses = []
+        threads = [
+            threading.Thread(target=lambda b=b: statuses.append(post(b)))
+            for b in batches
+        ]
+        sys.setswitchinterval(1e-5)
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=180)
+    finally:
+        sys.setswitchinterval(old)
+        srv.stop()
+    assert not any(t.is_alive() for t in threads)
+    assert statuses == [200] * len(batches)
+    got = {
+        (r.path, r.chunk_index)
+        for r in eng.store.load().select("path", "chunk_index").collect()
+    }
+    want = {
+        (d["path"], d["chunk_index"])
+        for b in batches
+        for d in b
+    }
+    assert want <= got and len(got) == 4 + 3 * len(batches)
+
+
 def test_pushed_nan_is_stored_as_nan(spark, tmp_path):
     """json.loads accepts NaN: a pushed NaN is stored as NaN, not NULL,
     and the extended matrix holds what a refill reads back."""

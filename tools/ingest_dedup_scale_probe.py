@@ -38,11 +38,10 @@ THRESHOLD = 0.95
 def main() -> int:
     from pyspark.sql import SparkSession
 
-    from converttovectordb_spark.embeddings import embed_column
     from converttovectordb_spark.engine import VectorEngine
     from converttovectordb_spark.functions.vector import l2_normalize
     from converttovectordb_spark.plans.ivf_index import build_ivf_index
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_embed
 
     spark = (
         SparkSession.builder.appName("ingest-dedup-scale-probe")
@@ -62,10 +61,7 @@ def main() -> int:
         .repartition(32)
     )
     base = (
-        embed_column(
-            explode_chunks(docs, chunk_size=100, overlap=30),
-            "content", "embedding", None, 384,
-        )
+        chunk_embed(docs, chunk_size=100, overlap=30, dim=384)
         .select(F.monotonically_increasing_id().alias("vec_id"), "embedding")
         .cache()
     )

@@ -49,7 +49,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from converttovectordb_spark.engine import VectorEngine
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_string
     from converttovectordb_spark.sources.sigstore import token_digest
 
     spark = (
@@ -66,8 +66,21 @@ def main() -> int:
         .selectExpr("cast(doc_id as string) AS path", "text AS content")
         .repartition(32)
     )
-    chunks = explode_chunks(docs, chunk_size=200, overlap=0).select(
-        "path", "chunk_index", "total_chunks", "content"
+    # chunking only: `chunk_embed` would also run the embedder on every
+    # action over `chunks` (a mapInArrow output is not column-pruned)
+    @F.pandas_udf("array<string>")
+    def chunk(texts):
+        return texts.map(lambda t: chunk_string(t or "", 200, 0))
+
+    chunks = docs.select("path", chunk("content").alias("_c")).select(
+        "path",
+        F.posexplode("_c").alias("chunk_index", "content"),
+        F.size("_c").alias("total_chunks"),
+    ).select(
+        "path",
+        F.col("chunk_index").cast("int").alias("chunk_index"),
+        F.col("total_chunks").cast("int").alias("total_chunks"),
+        "content",
     )
     n_base = chunks.count()
 

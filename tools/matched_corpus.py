@@ -21,9 +21,8 @@ def matched_reference_corpus(spark, sf_dir: str, cpus: int):
     float64 embeddings). Caller picks partitioning and caches."""
     from pyspark.sql import functions as F
 
-    from converttovectordb_spark.embeddings import embed_column
     from converttovectordb_spark.functions.vector import with_query_norms
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_embed
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -31,9 +30,8 @@ def matched_reference_corpus(spark, sf_dir: str, cpus: int):
         .repartition(int(cpus))  # parallelize the embed stage
     )
     return with_query_norms(
-        embed_column(
-            explode_chunks(docs, chunk_size=CHUNK_SIZE, overlap=OVERLAP),
-            "content", "embedding", None, MATCHED_DIM,
+        chunk_embed(
+            docs, chunk_size=CHUNK_SIZE, overlap=OVERLAP, dim=MATCHED_DIM
         )
         .select(
             F.monotonically_increasing_id().alias("vec_id"),

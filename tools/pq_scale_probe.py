@@ -39,7 +39,6 @@ def _du(path: str) -> int:
 def main() -> int:
     from pyspark.sql import SparkSession, Window
 
-    from converttovectordb_spark.embeddings import embed_column
     from converttovectordb_spark.operators.search import knn_topk
     from converttovectordb_spark.plans.pq_index import (
         adc_lut,
@@ -48,7 +47,7 @@ def main() -> int:
         pq_encode,
         train_pq,
     )
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_embed
 
     spark = (
         SparkSession.builder.appName("pq-scale-probe")
@@ -67,10 +66,7 @@ def main() -> int:
         .repartition(32)
     )
     base = (
-        embed_column(
-            explode_chunks(docs, chunk_size=100, overlap=30),
-            "content", "embedding", None, 384,
-        )
+        chunk_embed(docs, chunk_size=100, overlap=30, dim=384)
         .select(F.monotonically_increasing_id().alias("vec_id"), "embedding")
         .cache()
     )

@@ -30,9 +30,8 @@ DIM = 64
 def main() -> int:
     from pyspark.sql import SparkSession
 
-    from converttovectordb_spark.embeddings import embed_column
     from converttovectordb_spark.plans.ivf_index import TransactionalIVFIndex
-    from converttovectordb_spark.sources.chunker import explode_chunks
+    from converttovectordb_spark.sources.chunker import chunk_embed
     from converttovectordb_spark.sources.store import (
         TransactionalDocumentStore,
     )
@@ -84,9 +83,8 @@ def main() -> int:
                     ],
                     "path string, extension string, content string",
                 )
-                seed = embed_column(
-                    explode_chunks(seed_raw, chunk_size=500, overlap=100),
-                    "content", "embedding", None, DIM,
+                seed = chunk_embed(
+                    seed_raw, chunk_size=500, overlap=100, dim=DIM
                 ).withColumn("timestamp", F.lit(0.0))
                 store.append(seed)
                 common = dict(

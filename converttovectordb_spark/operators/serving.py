@@ -893,7 +893,7 @@ class DriverMatrixIndex:
     ):
         """rid → payload index of the NEWEST copy — the matrix-tier
         twin of the engine's bounded post-join dedupe window in
-        `search_diverse` (a plain store can hold repeated
+        `search_diverse_batch` (a plain store can hold repeated
         (path, chunk_index) rows after a blind re-ingest). The rule is
         the SAME on both tiers so cross-tier parity survives duplicate
         stores: max timestamp, then MIN content among equal stamps

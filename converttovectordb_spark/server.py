@@ -39,6 +39,8 @@ via the transactional manifest; appends go through the manifest commit).
 from __future__ import annotations
 
 import json
+import logging
+import math
 import os
 import re
 import threading
@@ -52,6 +54,8 @@ from converttovectordb_spark.schema import (
     DimensionMismatch,
     normalize_push_row,
 )
+
+_log = logging.getLogger(__name__)
 
 
 class _ApiError(Exception):
@@ -668,6 +672,53 @@ class VectorDBApi:
             "total_documents_searched": bits.n,
         }
 
+    def _query_vector(self, emb, where: str = "") -> list[float]:
+        """One request query vector as floats; a 400 (``where`` names
+        its position in a batch) when it is not numeric, is empty,
+        holds a non-finite value (json.loads accepts Infinity/NaN) or
+        has the wrong width."""
+        try:
+            vec = [float(x) for x in emb]
+        except (TypeError, ValueError):
+            raise _ApiError(400, f"Invalid query embedding format{where}")
+        if not vec or not all(math.isfinite(x) for x in vec):
+            raise _ApiError(400, f"Invalid query embedding format{where}")
+        if self.engine.dim is not None and len(vec) != self.engine.dim:
+            raise _ApiError(
+                400, f"Query embedding dimension mismatch{where}"
+            )
+        return vec
+
+    def _snapshot(self, version, hamming_shortlist, *, batch_mrl_dim=None):
+        """Time travel: the corpus as of commit ``version``. It
+        bypasses the warm cache — snapshots are arbitrary and rare, and
+        caching every requested version would let history reads evict
+        the serving corpus. Snapshot reads serve distributed, so a dial
+        only an in-memory tier has is a 400, never a silently
+        undialled answer: the Hamming arm always, and ``mrl_dim`` on
+        /query_batch (``batch_mrl_dim``), whose distributed kernel has
+        no prefix arm."""
+        if not isinstance(version, int) or isinstance(version, bool):
+            raise _ApiError(400, "version must be an integer")
+        if batch_mrl_dim is not None:
+            raise _ApiError(
+                400,
+                "mrl_dim on /query_batch requires the matrix "
+                "serving tier; time-travel reads serve distributed",
+            )
+        if hamming_shortlist is not None:
+            raise _ApiError(
+                400,
+                "hamming_shortlist requires a driver-resident "
+                "tier; time-travel reads serve distributed",
+            )
+        try:
+            return self.engine.load_corpus(at_version=version)
+        except ValueError as e:  # non-transactional store
+            raise _ApiError(400, str(e))
+        except FileNotFoundError:
+            raise _ApiError(400, f"no committed version <= {version}")
+
     # -- POST /query (reference :230-312) -------------------------------
     def query(self, body: dict) -> dict:
         start = time.time()
@@ -686,41 +737,10 @@ class VectorDBApi:
             # (mock_vector_db_api.py:259-260 precedes :270-272)
             return {"results": [], "query_time": time.time() - start,
                     "total_documents_searched": 0}
-        try:
-            emb = [float(x) for x in emb]
-        except (TypeError, ValueError):
-            raise _ApiError(400, "Invalid query embedding format")
-        import math
-
-        if not all(math.isfinite(x) for x in emb):
-            # json.loads accepts Infinity/NaN; cosine_to_query rejects
-            # them with ValueError — surface that as a 400, not a 500.
-            raise _ApiError(400, "Invalid query embedding format")
-        if eng.dim is not None and len(emb) != eng.dim:
-            raise _ApiError(400, "Query embedding dimension mismatch")
-
+        emb = self._query_vector(emb)
         version = body.get("version")
         if version is not None:
-            if not isinstance(version, int) or isinstance(version, bool):
-                raise _ApiError(400, "version must be an integer")
-            if hamming_shortlist is not None:
-                # time-travel reads serve distributed, and the
-                # distributed scan has no Hamming arm — a silently
-                # undialled answer would misreport the dial as turned
-                raise _ApiError(
-                    400,
-                    "hamming_shortlist requires a driver-resident "
-                    "tier; time-travel reads serve distributed",
-                )
-            # Time travel bypasses the warm cache: snapshots are
-            # arbitrary and rare; caching every requested version would
-            # let history reads evict the serving corpus.
-            try:
-                docs = eng.load_corpus(at_version=version)
-            except ValueError as e:  # non-transactional store
-                raise _ApiError(400, str(e))
-            except FileNotFoundError:
-                raise _ApiError(400, f"no committed version <= {version}")
+            docs = self._snapshot(version, hamming_shortlist)
         else:
             handle = self._corpus_handle()
             if handle is None:  # store cleared between exists() and load
@@ -818,50 +838,15 @@ class VectorDBApi:
                 "query_time": time.time() - start,
                 "total_documents_searched": 0,
             }
-        clean = []
-        for i, emb in enumerate(embs):
-            try:
-                vec = [float(x) for x in emb]
-            except (TypeError, ValueError):
-                raise _ApiError(
-                    400, f"Invalid query embedding format at index {i}"
-                )
-            import math
-
-            if not vec or not all(math.isfinite(x) for x in vec):
-                raise _ApiError(
-                    400, f"Invalid query embedding format at index {i}"
-                )
-            if eng.dim is not None and len(vec) != eng.dim:
-                raise _ApiError(
-                    400, f"Query embedding dimension mismatch at index {i}"
-                )
-            clean.append(vec)
+        clean = [
+            self._query_vector(emb, f" at index {i}")
+            for i, emb in enumerate(embs)
+        ]
         version = body.get("version")
         if version is not None:
-            # time travel, same rules as /query: snapshot read, cache
-            # bypassed (arbitrary historical versions must not evict
-            # the serving corpus)
-            if not isinstance(version, int) or isinstance(version, bool):
-                raise _ApiError(400, "version must be an integer")
-            if mrl_dim is not None:
-                raise _ApiError(
-                    400,
-                    "mrl_dim on /query_batch requires the matrix "
-                    "serving tier; time-travel reads serve distributed",
-                )
-            if hamming_shortlist is not None:
-                raise _ApiError(
-                    400,
-                    "hamming_shortlist requires a driver-resident "
-                    "tier; time-travel reads serve distributed",
-                )
-            try:
-                snap = eng.load_corpus(at_version=version)
-            except ValueError as e:
-                raise _ApiError(400, str(e))
-            except FileNotFoundError:
-                raise _ApiError(400, f"no committed version <= {version}")
+            snap = self._snapshot(
+                version, hamming_shortlist, batch_mrl_dim=mrl_dim
+            )
             return self._query_batch_distributed(snap, clean, top_k, start)
         handle = self._corpus_handle()
         if handle is None:
@@ -1032,68 +1017,18 @@ class VectorDBApi:
                 "query_time": time.time() - start}
 
     def hybrid(self, body: dict) -> dict:
+        """One hybrid query: /hybrid_batch's path at Q=1."""
         start = time.time()
         query = body.get("query")
-        if not query:
+        if not query or not isinstance(query, str):
             raise _ApiError(400, "No query provided")
-        top_k = body.get("top_k", 5)
-        # Matrix-tier fast path (cosine + BM25 + RRF, no Spark job) —
-        # gated on the smaller hybrid doc budget because the lexical
-        # cache costs more per row than embedding cells.
-        handle = self._corpus_handle()
-        if handle is not None and handle[0] == "matrix":
-            from converttovectordb_spark.operators.serving import (
-                DEFAULT_HYBRID_MAX_DOCS,
-            )
-
-            idx = handle[1]
-            if idx.n <= DEFAULT_HYBRID_MAX_DOCS:
-                import numpy as np
-
-                from converttovectordb_spark.operators.search import (
-                    validate_top_k,
-                )
-
-                eng = self.engine
-                qv = np.asarray(
-                    eng.embedder([query]), dtype=np.float64
-                ).reshape(-1).tolist()
-                if eng.dim is not None and len(qv) != eng.dim:
-                    raise _ApiError(
-                        400, "Query embedding dimension mismatch"
-                    )
-                terms = [t for t in query.lower().split() if t]
-                try:
-                    rows = idx.hybrid_query(
-                        qv,
-                        terms,
-                        validate_top_k(top_k),
-                        id_cols=["path", "chunk_index"],
-                    )
-                except ValueError as e:
-                    raise _ApiError(400, str(e))
-                return {"results": rows,
-                        "query_time": time.time() - start}
-        # Distributed tier: reuse a cached prenormed corpus for both
-        # arms + the display join-back instead of three cold loads. A
-        # matrix tier ABOVE the hybrid doc budget reaches here too —
-        # the secondary embedding cache (r11) serves it warm instead
-        # of a cold store.load() per request.
-        corpus = self._embedding_corpus() if handle is not None else None
-        hits = self.engine.search_hybrid(query, top_k, corpus=corpus)
-        return {"results": _rows_to_json(hits.collect()),
-                "query_time": time.time() - start}
+        results = self._hybrid_results([query], body.get("top_k", 5))
+        return {"results": results[0], "query_time": time.time() - start}
 
     def hybrid_batch(self, body: dict) -> dict:
-        """Q hybrid queries per POST — the batch twin of the LAST
-        single-only serving verb (r11 verdict #2). Matrix tier (under
-        the hybrid doc budget): Q driver-side `hybrid_query` calls, no
-        Spark jobs. Distributed tier: `engine.search_hybrid_batch` —
-        one embed call, one BLAS candidate pass, one batched-BM25
-        tokenize for the whole batch, vs the reference client's only
-        option of looping singles. ``results[i]`` answers
-        ``queries[i]`` with /hybrid's semantics (scores within the
-        established ~1e-9 batch-door contract)."""
+        """Q hybrid queries per POST (BM25 + semantic RRF); the
+        reference client can only loop singles. ``results[i]`` answers
+        ``queries[i]``."""
         start = time.time()
         queries = body.get("queries")
         if (
@@ -1102,7 +1037,21 @@ class VectorDBApi:
             or not all(isinstance(q, str) and q for q in queries)
         ):
             raise _ApiError(400, "No queries provided")
-        top_k = body.get("top_k", 5)
+        return {
+            "results": self._hybrid_results(queries, body.get("top_k", 5)),
+            "query_time": time.time() - start,
+        }
+
+    def _hybrid_results(self, queries: list, top_k) -> list:
+        """Per-query hybrid rows, the one path behind /hybrid and
+        /hybrid_batch. Matrix tier (under the hybrid doc budget — the
+        lexical cache costs more per row than embedding cells): one
+        embedder call, then an in-memory `hybrid_query` per query
+        (cosine + BM25 + RRF, no Spark job). Otherwise
+        `engine.search_hybrid_batch` over a warm cached corpus for both
+        arms and the display join-back; a matrix tier ABOVE the hybrid
+        doc budget serves it from the secondary embedding cache instead
+        of a cold store.load() per request."""
         handle = self._corpus_handle()
         if handle is not None and handle[0] == "matrix":
             from converttovectordb_spark.operators.serving import (
@@ -1129,7 +1078,7 @@ class VectorDBApi:
                     )
                 try:
                     k = validate_top_k(top_k)
-                    results = [
+                    return [
                         idx.hybrid_query(
                             qvs[i].tolist(),
                             [t for t in q.lower().split() if t],
@@ -1140,31 +1089,31 @@ class VectorDBApi:
                     ]
                 except ValueError as e:
                     raise _ApiError(400, str(e))
-                return {"results": results,
-                        "query_time": time.time() - start}
         corpus = self._embedding_corpus() if handle is not None else None
-        from converttovectordb_spark.operators.serving import (
-            point_query_mode,
-        )
-
         try:
             hits = self.engine.search_hybrid_batch(
                 queries, top_k, corpus=corpus
             )
         except ValueError as e:
             raise _ApiError(400, str(e))
+        return self._rows_by_query(hits, len(queries))
+
+    def _rows_by_query(self, hits, n: int) -> list:
+        """Collect a batch door's rows into ``n`` per-query lists by
+        their ``query_index``, embeddings stripped (T5)."""
+        from converttovectordb_spark.operators.serving import (
+            point_query_mode,
+        )
+
         with point_query_mode(self.engine.spark):
             rows = hits.collect()
-        results: list = [[] for _ in queries]
+        results: list = [[] for _ in range(n)]
         for r in rows:
             d = r.asDict(recursive=True)
             qi = d.pop("query_index")
-            d.pop("embedding", None)  # T5: never ship embeddings back
+            d.pop("embedding", None)
             results[qi].append(d)
-        return {
-            "results": results,
-            "query_time": time.time() - start,
-        }
+        return results
 
     def answer(self, body: dict) -> dict:
         start = time.time()
@@ -1196,65 +1145,17 @@ class VectorDBApi:
 
 
     def diverse(self, body: dict) -> dict:
-        """MMR-diversified search. Matrix tier: candidate scoring is
-        the same BLAS matvec as /query and the greedy rerank is the
-        SHARED `mmr_greedy` kernel (`DriverMatrixIndex.diverse_query`)
-        — the tier keeps the embedding matrix, which is exactly what
-        cosine MMR needs, so no Spark job and no second greedy
-        implementation (r12; the single door used to pay a ~0.57 s
-        distributed job its batch twin had already amortized away).
-        Distributed tier: the relevance stage rides the warm df-tier
-        cache (prenormed corpus with embeddings, same reuse as
-        /search)."""
+        """One MMR-diversified query: /diverse_batch's path at Q=1."""
         start = time.time()
         query = body.get("query")
-        if not query:
+        if not query or not isinstance(query, str):
             raise _ApiError(400, "No query provided")
-        handle = self._corpus_handle()
-        if handle is not None and handle[0] == "matrix":
-            idx = handle[1]
-            qv = self.engine.embedder([query])
-            import numpy as np
-
-            qv = np.asarray(qv, dtype=np.float64).reshape(-1).tolist()
-            try:
-                rows = idx.diverse_query(
-                    qv,
-                    body.get("top_k", 5),
-                    fetch_k=body.get("fetch_k", 50),
-                    lambda_=body.get("mmr_lambda", 0.5),
-                    id_cols=["path", "chunk_index"],
-                )
-            except ValueError as e:  # e.g. mmr_lambda out of [0, 1]
-                raise _ApiError(400, str(e))
-            return {"results": rows, "query_time": time.time() - start}
-        # warm-corpus reuse for the relevance stage on the df tier,
-        # instead of a cold store.load() per request
-        corpus = self._embedding_corpus()
-        try:
-            hits = self.engine.search_diverse(
-                query,
-                body.get("top_k", 5),
-                fetch_k=body.get("fetch_k", 50),
-                mmr_lambda=body.get("mmr_lambda", 0.5),
-                corpus=corpus,
-            )
-        except ValueError as e:  # e.g. mmr_lambda out of [0, 1]
-            raise _ApiError(400, str(e))
-        return {
-            "results": _rows_to_json(hits.collect()),
-            "query_time": time.time() - start,
-        }
-
+        results = self._diverse_results([query], body)
+        return {"results": results[0], "query_time": time.time() - start}
 
     def diverse_batch(self, body: dict) -> dict:
-        """Q diverse queries per POST — completes the batch parity of
-        the serving surface (/query_batch, /search_batch, and now the
-        MMR door; the reference can only loop singles). ONE embedder
-        call, ONE broadcast candidate join for all probes, per-query
-        MMR as parallel Arrow groups (`engine.search_diverse_batch`);
-        ``results[i]`` answers ``queries[i]`` with /diverse's
-        semantics."""
+        """Q diverse queries per POST (the reference can only loop
+        singles); ``results[i]`` answers ``queries[i]``."""
         start = time.time()
         queries = body.get("queries")
         if (
@@ -1263,58 +1164,53 @@ class VectorDBApi:
             or not all(isinstance(q, str) and q for q in queries)
         ):
             raise _ApiError(400, "No queries provided")
+        return {
+            "results": self._diverse_results(queries, body),
+            "query_time": time.time() - start,
+        }
+
+    def _diverse_results(self, queries: list, body: dict) -> list:
+        """Per-query MMR rows, the one path behind /diverse and
+        /diverse_batch. Matrix tier: one embedder call, ONE GEMM scores
+        every query's candidates and the greedy rerank is the SHARED
+        `mmr_greedy` kernel (`DriverMatrixIndex.diverse_query_batch`) —
+        the tier keeps the embedding matrix, which is exactly what
+        cosine MMR needs, so no Spark job. Distributed tier:
+        `engine.search_diverse_batch` over the warm df-tier cache
+        (prenormed corpus with embeddings) — one candidate pass for all
+        probes, per-query MMR as parallel Arrow groups."""
+        top_k = body.get("top_k", 5)
+        fetch_k = body.get("fetch_k", 50)
+        mmr_lambda = body.get("mmr_lambda", 0.5)
         handle = self._corpus_handle()
         if handle is not None and handle[0] == "matrix":
             import numpy as np
 
-            idx = handle[1]
-            # one embedder call for the whole batch even on the
-            # driver tier — the embedder is the batch-shaped seam
             qvs = np.asarray(
                 self.engine.embedder(list(queries)), dtype=np.float64
             )
             try:
-                # ONE GEMM for all Q queries (diverse_query_batch) —
-                # a loop of single calls would re-traverse the cached
-                # matrix per query
-                results = idx.diverse_query_batch(
+                return handle[1].diverse_query_batch(
                     [v.tolist() for v in qvs],
-                    body.get("top_k", 5),
-                    fetch_k=body.get("fetch_k", 50),
-                    lambda_=body.get("mmr_lambda", 0.5),
+                    top_k,
+                    fetch_k=fetch_k,
+                    lambda_=mmr_lambda,
                     id_cols=["path", "chunk_index"],
                 )
             except ValueError as e:
                 raise _ApiError(400, str(e))
-            return {"results": results,
-                    "query_time": time.time() - start}
         corpus = self._embedding_corpus()
-        from converttovectordb_spark.operators.serving import (
-            point_query_mode,
-        )
-
         try:
             hits = self.engine.search_diverse_batch(
                 queries,
-                body.get("top_k", 5),
-                fetch_k=body.get("fetch_k", 50),
-                mmr_lambda=body.get("mmr_lambda", 0.5),
+                top_k,
+                fetch_k=fetch_k,
+                mmr_lambda=mmr_lambda,
                 corpus=corpus,
             )
-        except ValueError as e:
+        except ValueError as e:  # e.g. mmr_lambda out of [0, 1]
             raise _ApiError(400, str(e))
-        with point_query_mode(self.engine.spark):
-            rows = hits.collect()
-        results: list = [[] for _ in queries]
-        for r in rows:
-            d = r.asDict(recursive=True)
-            qi = d.pop("query_index")
-            d.pop("embedding", None)  # T5: never ship embeddings back
-            results[qi].append(d)
-        return {
-            "results": results,
-            "query_time": time.time() - start,
-        }
+        return self._rows_by_query(hits, len(queries))
 
 
 _POST_ROUTES = {
@@ -1355,6 +1251,9 @@ def _make_handler(api: VectorDBApi):
             except _ApiError as e:
                 self._reply(e.status, {"error": str(e)})
             except Exception as e:  # mirror reference's 500-on-anything
+                _log.exception(
+                    "500 on %s %s", self.command, self.path
+                )
                 self._reply(500, {"error": str(e)})
 
         def do_GET(self):  # noqa: N802

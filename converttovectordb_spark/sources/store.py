@@ -686,8 +686,18 @@ class TransactionalDocumentStore(DocumentStore):
         # own partition-column discovery (a single multi-root read can't
         # infer partitions across different base paths). The union is a
         # plan-level concat of scans — no shuffle, and Catalyst pushes
-        # filters/pruning into every branch.
+        # filters/pruning into every branch. Each dir is read with the
+        # schema its manifest records: no footer-inference job per dir,
+        # and a partition column keeps its recorded type (inferred, an
+        # `extension` whose only value is ".5" would read as double and
+        # break the union). Discovery still puts partition columns last.
         from functools import reduce
+
+        def read(path: str, fields) -> DataFrame:
+            ddl = ", ".join(
+                "`{}` {}".format(n.replace("`", "``"), t) for n, t in fields
+            )
+            return self.spark.read.schema(ddl).parquet(path)
 
         tomb = [
             (v, m["tombstone_keys"], m["key_cols"])
@@ -706,14 +716,17 @@ class TransactionalDocumentStore(DocumentStore):
             # version would resurrect them past that tombstone.
             key_cols = tomb[0][2]
             parts = [
-                self.spark.read.parquet(m["batch_dir"]).withColumn(
+                read(m["batch_dir"], m["schema"]).withColumn(
                     "_sv", F.lit(m.get("snapshot_of", v))
                 )
                 for v, m in manifests.items()
             ]
             df = reduce(lambda x, y: x.unionByName(y), parts)
+            types = dict(manifests[tomb[0][0]]["schema"])
             tparts = [
-                self.spark.read.parquet(kd).withColumn("_tv", F.lit(v))
+                read(kd, [(c, types[c]) for c in key_cols]).withColumn(
+                    "_tv", F.lit(v)
+                )
                 for v, kd, _ in tomb
             ]
             tmax = (
@@ -731,8 +744,7 @@ class TransactionalDocumentStore(DocumentStore):
             )
         else:
             parts = [
-                self.spark.read.parquet(m["batch_dir"])
-                for m in manifests.values()
+                read(m["batch_dir"], m["schema"]) for m in manifests.values()
             ]
             df = reduce(lambda x, y: x.unionByName(y), parts)
         if require_embedding:

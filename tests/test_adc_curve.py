@@ -38,6 +38,7 @@ def pq_index(spark, tmp_path_factory):
     )
 
 
+@pytest.mark.slow  # 79.3s
 def test_curve_is_persisted_monotone_and_ends_exact(pq_index):
     import os
 
@@ -63,6 +64,8 @@ def test_curve_is_persisted_monotone_and_ends_exact(pq_index):
     assert measure_adc_curve(pq_index, top_k=3, nprobe=2, sample=8) == payload
 
 
+# depends on the curve persisted by test_curve_is_persisted_* above
+@pytest.mark.slow
 def test_shortlist_resolution_and_validation(spark, pq_index, tmp_path):
     curve = pq_index.adc_curve()["curve"]
     want = min(c["shortlist"] for c in curve if c["recall"] >= 1.0)
@@ -86,6 +89,7 @@ def test_shortlist_resolution_and_validation(spark, pq_index, tmp_path):
         measure_adc_curve(plain)
 
 
+@pytest.mark.slow  # 29.9s
 def test_staleness_budget(spark, tmp_path):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     idx = build_ivf_index(
@@ -128,6 +132,7 @@ def _mkdocs(spark, tag, vecs):
     )
 
 
+@pytest.mark.slow  # 41.8s
 def test_engine_target_adc_recall_and_retrain_carry(spark, tmp_path):
     from converttovectordb_spark.embeddings import hash_embedder
     from converttovectordb_spark.engine import VectorEngine

@@ -7,6 +7,8 @@ import json
 import subprocess
 import sys
 
+import pytest
+
 
 def _run(*argv: str) -> dict:
     out = subprocess.run(
@@ -20,6 +22,7 @@ def _run(*argv: str) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
+@pytest.mark.slow  # 270.8s
 def test_cli_ingest_search_stats_clear(tmp_path):
     repo = tmp_path / "repo"
     repo.mkdir()
@@ -117,6 +120,7 @@ def _run_fail(*argv: str) -> tuple[int, dict]:
     return out.returncode, json.loads(out.stdout.strip().splitlines()[-1])
 
 
+@pytest.mark.slow  # 222.7s
 def test_cli_build_index_and_retrain(tmp_path):
     """The scheduled-maintenance loop end-to-end from the CLI:
     build-index --transactional publishes, retrain below threshold is
@@ -155,6 +159,7 @@ def test_cli_build_index_and_retrain(tmp_path):
     assert forced["index_path"] != bi["index_path"]
 
 
+@pytest.mark.slow  # 34.4s
 def test_cli_transactional_verbs_fail_clean_on_plain_store(tmp_path):
     """--at-version / --replace on a non-transactional store must exit 1
     with the same JSON-error envelope compact/vacuum use — a traceback
@@ -192,6 +197,7 @@ def test_cli_diverse_bad_lambda_fails_clean(tmp_path):
     assert "lambda" in out["error"]
 
 
+@pytest.mark.slow  # 63.3s
 def test_cli_push_jsonl_with_dedup(tmp_path):
     """`push` appends a JSONL batch: rows without embeddings are
     hash-embedded, dedup flags drop a re-push, malformed files fail
@@ -240,6 +246,7 @@ def test_cli_push_jsonl_with_dedup(tmp_path):
     assert "line 1" in err["error"]
 
 
+@pytest.mark.slow  # 40.9s
 def test_cli_push_content_only_rows_get_unique_identities(tmp_path):
     """Rows with neither path nor chunk_index get chunk_index = line
     number: dedup-flagged content-only batches work instead of
@@ -291,6 +298,7 @@ def test_cli_push_content_only_rows_get_unique_identities(tmp_path):
     assert "cannot read" in err["error"]
 
 
+@pytest.mark.slow  # 185.9s
 def test_cli_indexed_hybrid_lifecycle(tmp_path):
     """r12: build-lex-index + hybrid --use-lex-index/--use-index from
     fresh processes — missing indexes error cleanly (exit 1), the

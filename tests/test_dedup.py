@@ -385,6 +385,7 @@ ORIG = "spark shuffles partition data across executors " * 20
 FRESH = "watermarks bound the streaming state store growth"
 
 
+@pytest.mark.slow  # 7.9s
 def test_ingest_semantic_dedup_pruned_matches_brute(spark, tmp_path):
     """The IVF-bucketed dedup-on-arrival path (a fresh index attached)
     must make the SAME drop decisions as the brute full-scan fallback
@@ -465,6 +466,7 @@ def test_ingest_semantic_dedup_pruned_plan_has_partition_filter(
     assert dup_ids.count() == 1
 
 
+@pytest.mark.slow  # 8.7s
 def test_ingest_semantic_dedup_heals_stale_index(spark, tmp_path):
     """A store that moved past the index (an ingest after build_index)
     must NOT silently miss duplicates of the newest rows: the dedup
@@ -503,6 +505,7 @@ def test_ingest_semantic_dedup_heals_stale_index(spark, tmp_path):
     } >= {"orig.txt#0"}
 
 
+@pytest.mark.slow  # 6.0s
 def test_ingest_semantic_dedup_opens_published_index(spark, tmp_path):
     """Fresh process: nothing attached, but a CURRENT transactional
     index is published — the dedup path opens it (with the healing
@@ -655,6 +658,7 @@ def test_ingest_dedup_flag_validation(spark, tmp_path):
     assert not eng.store.exists()  # both refused before any write
 
 
+@pytest.mark.slow  # 6.4s
 def test_ingest_dedup_failed_index_open_restores_no_index_state(
     spark, tmp_path
 ):
@@ -857,6 +861,7 @@ def test_ingest_lexical_dedup_drops_near_dup_keeps_fresh(spark, tmp_path):
         eng_t.ingest(r1, lexical_dedup=0.7, replace=True)
 
 
+@pytest.mark.slow  # 8.7s
 def test_ingest_lexical_dedup_heals_stale_artifact(spark, tmp_path):
     """An UNFLAGGED ingest between two flagged ones leaves the artifact
     stale; the next flagged ingest must heal it by _row_id delta so the
@@ -898,6 +903,7 @@ def test_ingest_lexical_dedup_rebuilds_after_clear(spark, tmp_path):
     assert eng.store.load().count() == 1
 
 
+@pytest.mark.slow  # 25.4s
 def test_ingest_lexical_and_semantic_compose(spark, tmp_path):
     """Both flags together: the drop sets union — a lexical-only dup
     (same words, hash-embedder sees same bytes → also semantic) and a
@@ -921,6 +927,7 @@ def test_ingest_lexical_and_semantic_compose(spark, tmp_path):
 LEX_ALT = " ".join(f"word{i}" for i in range(60))
 
 
+@pytest.mark.slow  # 17.0s
 def test_ingest_lexical_recrawl_changed_content_supersedes_sig(
     spark, tmp_path
 ):
@@ -958,6 +965,7 @@ def test_ingest_lexical_recrawl_changed_content_supersedes_sig(
     assert eng.ingest(r_new, lexical_dedup=0.7).count() == 0
 
 
+@pytest.mark.slow  # 12.7s
 def test_ingest_lexical_heal_detects_content_change(spark, tmp_path):
     """An UNFLAGGED re-crawl that rewrites a chunk's content leaves
     the artifact stale in a way a rid-only delta cannot see (the rid
@@ -981,6 +989,7 @@ def test_ingest_lexical_heal_detects_content_change(spark, tmp_path):
     assert eng.ingest(r_new, lexical_dedup=0.7).count() == 0
 
 
+@pytest.mark.slow  # 6.5s
 def test_ingest_lexical_stale_params_artifact_self_invalidates(
     spark, tmp_path
 ):
@@ -1175,6 +1184,7 @@ def test_dedup_row_ids_equal_timestamp_tiebreak_matches_heal(spark):
     assert signed[0]["chash"] == got_hash
 
 
+@pytest.mark.slow  # 10.3s
 def test_append_documents_concurrent_pushes_serialized(spark, tmp_path):
     """Two dedup-flagged pushes racing from threads (the REST door's
     ThreadingHTTPServer reality) must serialize under the engine write
@@ -1279,6 +1289,7 @@ def test_append_documents_never_signs_unwritten_rows(spark, tmp_path):
     assert paths == {"a.txt", "real.txt"}
 
 
+@pytest.mark.slow  # 7.4s
 def test_ingest_racing_push_keeps_both_writers_sig_coverage(spark, tmp_path):
     """Race a flagged ingest() against a flagged append_documents() on
     an initially EMPTY store (the TOCTOU shape: had_store must be read

@@ -118,6 +118,7 @@ def test_ivf_stats_mismatch_detected_and_healed(spark, tmp_path):
     assert not _by_check(eng.fsck(), "stats_histogram_mismatch")
 
 
+@pytest.mark.slow  # 9.8s
 def test_stale_curve_stamp_found(spark, tmp_path):
     eng = VectorEngine(
         spark, str(tmp_path / "s3"), embedder=hash_embedder(DIM), dim=DIM

@@ -4,6 +4,8 @@ them away, and the fusion must stay deterministic and bounded."""
 
 from __future__ import annotations
 
+import pytest
+
 from converttovectordb_spark.embeddings import hash_embedder
 from converttovectordb_spark.engine import VectorEngine
 
@@ -63,6 +65,16 @@ def test_hybrid_empty_store_returns_empty(spark, tmp_path):
         spark, str(tmp_path / "nostore"), embedder=hash_embedder(16), dim=16
     )
     assert eng.search_hybrid("anything").count() == 0
+
+
+def test_hybrid_empty_store_column_order(spark, tmp_path):
+    eng = VectorEngine(
+        spark, str(tmp_path / "nostore"), embedder=hash_embedder(16), dim=16
+    )
+    assert eng.search_hybrid("anything").columns == [
+        "path", "extension", "chunk_index", "total_chunks", "content",
+        "timestamp", "sem_rank", "lex_rank", "rrf",
+    ]
 
 
 def test_hybrid_schema_same_for_empty_and_populated_store(spark, tmp_path):
@@ -162,6 +174,7 @@ def test_hybrid_batch_empty_store_and_validation(spark, tmp_path):
         eng.search_hybrid_batch([], top_k=3)
 
 
+@pytest.mark.slow  # 17.1s
 def test_hybrid_indexed_arms_match_brute_at_full_probe(spark, tmp_path):
     """r12: with nprobe covering every cluster the IVF semantic arm is
     exact and the postings BM25 arm is float-identical, so the fully
@@ -219,6 +232,7 @@ def test_hybrid_indexed_arms_match_brute_at_full_probe(spark, tmp_path):
         assert g["path"] == w["path"] and abs(g["rrf"] - w["rrf"]) < 1e-9
 
 
+@pytest.mark.slow  # 7.9s
 def test_lex_index_staleness_guard(spark, tmp_path):
     import pytest as _pytest
 

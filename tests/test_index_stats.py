@@ -245,6 +245,7 @@ def test_verify_stats_heals_undercount(spark, tmp_path):
     assert healed["cluster_sizes"] == {0: 5, 1: 5}  # key_type kept
 
 
+@pytest.mark.slow  # 15.6s
 def test_build_ivf_index_drops_previous_metadata(spark, tmp_path):
     """r12 review: an in-place rebuild must not leave curves measured
     on the OLD centroids (their n_docs stamp can match — no staleness

@@ -92,6 +92,7 @@ def test_append_dimension_mismatch_raises(spark, tmp_path):
         index.append(bad)
 
 
+@pytest.mark.slow  # 15.1s
 def test_pq_frozen_encode_matches_model_encode(spark, tmp_path):
     emb = _emb(spark)
     models = train_pq(emb, m=8, k=4, seed=7)
@@ -111,6 +112,7 @@ def test_pq_frozen_encode_matches_model_encode(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow  # 18.7s
 def test_append_extends_pq_codes_table(spark, tmp_path):
     emb = _emb(spark)
     old = emb.filter(F.col("vec_id") < 400)
@@ -144,6 +146,7 @@ def _mk_repo(root, name, texts):
     return repo
 
 
+@pytest.mark.slow  # 8.6s
 def test_engine_append_to_index_clears_staleness(spark, tmp_path):
     from converttovectordb_spark.engine import VectorEngine
 
@@ -175,6 +178,7 @@ def test_engine_append_to_index_clears_staleness(spark, tmp_path):
     assert eng.append_to_index() == 0
 
 
+@pytest.mark.slow  # 9.3s
 def test_engine_append_heals_interleaved_ingests_but_not_deletes(
     spark, tmp_path
 ):
@@ -306,6 +310,7 @@ def test_engine_append_updates_histogram_through_cache_invalidation(
     assert eng._index.verify_stats() is False
 
 
+@pytest.mark.slow  # 9.4s
 def test_engine_append_pq_codes_survive_cache_invalidation(spark, tmp_path):
     """r13 regression (staging.py): same invalidation class as the
     histogram bug, PQ edition — the corpus write dropped the cached

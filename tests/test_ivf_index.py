@@ -9,6 +9,8 @@ never as a post-scan row filter.
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from converttovectordb_spark.operators.search import ivf_knn_join
@@ -108,6 +110,7 @@ def test_engine_indexed_search(spark, tmp_path):
     assert "embedding" not in hits[0].asDict()
 
 
+@pytest.mark.slow  # 9.1s
 def test_engine_indexed_search_staleness_guard(spark, tmp_path):
     """Out-of-band store changes after build_index must be detected:
     search_indexed raises on a stale index instead of silently serving
@@ -264,6 +267,7 @@ def test_filtered_ann_search_predicate_pushdown(spark, tmp_path):
                for seg in scan if "PushedFilters:" in seg), plan
 
 
+@pytest.mark.slow  # 17.5s
 def test_filtered_ann_on_adc_path(spark, tmp_path):
     emb = _emb(spark)
     index = build_ivf_index(

@@ -162,6 +162,7 @@ def test_append_matches_rebuilt_scores(spark, corpus, tmp_path):
     assert grown.append(rest.limit(0), text_col="text") == 0
 
 
+@pytest.mark.slow  # 6.8s
 def test_engine_heal_and_orphan_contract(spark, tmp_path):
     """append_to_lex_index heals store growth to freshness (token
     earned, searches resolve without a rebuild); store deletions make
@@ -344,6 +345,7 @@ def test_read_path_raises_clean_error_on_missing_dir(spark, tmp_path):
     assert rows
 
 
+@pytest.mark.slow  # 6.0s
 def test_heal_detects_content_change(spark, tmp_path):
     """r12 review: a rid-only heal was blind to a content CHANGE under
     an existing path#chunk_index — it no-op'd, earned a fresh token,
@@ -424,6 +426,7 @@ def test_hot_term_registry_and_elision_dial(spark, tmp_path):
         idx.bm25(["x"], max_df_frac=0.0)
 
 
+@pytest.mark.slow  # 6.3s
 def test_engine_append_postings_survive_cache_invalidation(spark, tmp_path):
     """r13 regression (staging.py): the engine's heal delta anti-joins
     the store against the DOCLENS path; the r12 append persisted that
@@ -469,6 +472,7 @@ def test_engine_append_postings_survive_cache_invalidation(spark, tmp_path):
     ]
 
 
+@pytest.mark.slow  # 9.8s
 def test_compaction_registers_append_crossed_hot_terms(spark, tmp_path):
     """r13 verdict #3: a term that crosses the hot threshold purely
     through appends is elision-invisible (its bucket still probed;

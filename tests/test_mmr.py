@@ -112,6 +112,40 @@ def test_engine_search_diverse(spark, tmp_path):
         assert not top2 <= {f"{repo}/a.txt", f"{repo}/b.txt"}
 
 
+def test_engine_search_diverse_truncates_and_keeps_empty_shape(
+    spark, tmp_path
+):
+    """The single diverse door applies ``truncate_chars`` (the CLI's
+    --truncate) to result content only, and an empty store answers
+    with its documented column order."""
+    from converttovectordb_spark.engine import VectorEngine
+
+    empty = VectorEngine(spark, str(tmp_path / "none"), dim=16)
+    assert empty.search_diverse("anything").columns == [
+        "score", "mmr", "mmr_rank", "path", "extension", "chunk_index",
+        "total_chunks", "content", "timestamp",
+    ]
+
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    (repo / "a.txt").write_text("spark joins and shuffles " * 30)
+    (repo / "c.txt").write_text("streaming watermarks bound state")
+    eng = VectorEngine(spark, str(tmp_path / "store"), dim=16)
+    eng.ingest(str(repo))
+    full = eng.search_diverse("spark joins", top_k=2, fetch_k=10)
+    cut = eng.search_diverse(
+        "spark joins", top_k=2, fetch_k=10, truncate_chars=20
+    )
+    assert cut.columns == full.columns
+    full_rows, cut_rows = full.collect(), cut.collect()
+    assert len(cut_rows) == len(full_rows) > 0
+    for c, f in zip(cut_rows, full_rows):
+        want = f.content if len(f.content) <= 20 else f.content[:20] + "..."
+        assert c.content == want
+        assert (c.path, c.mmr_rank, c.score) == (f.path, f.mmr_rank, f.score)
+    assert any(len(f.content) > 20 for f in full_rows)
+
+
 def test_diverse_batch_use_index_matches_brute_at_full_probe(
     spark, tmp_path
 ):
@@ -164,6 +198,7 @@ def test_diverse_batch_use_index_matches_brute_at_full_probe(
         ).collect()
 
 
+@pytest.mark.slow  # 15.4s
 def test_single_diverse_use_index_matches_brute_at_full_probe(
     spark, tmp_path
 ):

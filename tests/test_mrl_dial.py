@@ -55,6 +55,7 @@ def _probes(emb, n=4):
 # -- curve lifecycle ------------------------------------------------------
 
 
+@pytest.mark.slow  # 15.9s
 def test_mrl_curve_persisted_stamped_and_ends_exact(index):
     payload = measure_mrl_curve(index, top_k=3, sample=8)
     assert os.path.exists(os.path.join(index.path, MRL_CURVE_FILE))
@@ -76,6 +77,9 @@ def test_mrl_curve_persisted_stamped_and_ends_exact(index):
     assert measure_mrl_curve(index, top_k=3, sample=8) == payload
 
 
+# depend on the mrl curve persisted by the deferred
+# test_mrl_curve_persisted_stamped_and_ends_exact
+@pytest.mark.slow
 def test_mrl_dim_for_recall_resolution_and_validation(spark, index, tmp_path):
     curve = index.mrl_curve()["curve"]
     want = min(c["dim"] for c in curve if c["recall"] >= 1.0)
@@ -107,6 +111,7 @@ def test_mrl_dim_for_recall_resolution_and_validation(spark, index, tmp_path):
         bare.mrl_dim_for_recall(0.9)
 
 
+@pytest.mark.slow  # 7.1s
 def test_mrl_staleness_budget(spark, tmp_path):
     import warnings
 
@@ -137,6 +142,7 @@ def test_mrl_staleness_budget(spark, tmp_path):
 # -- the IVF door consumes the dial ---------------------------------------
 
 
+@pytest.mark.slow
 def test_index_search_fulldim_mrl_equals_exact(index, emb):
     probes = _probes(emb)
     full_dim = int(index.mrl_curve()["full_dim"])
@@ -203,6 +209,7 @@ def _mini_repo(tmp_path):
     return str(repo)
 
 
+@pytest.mark.slow  # 10.6s
 def test_engine_target_mrl_recall_resolution_and_explicit_wins(
     spark, tmp_path
 ):
@@ -241,6 +248,7 @@ def test_engine_target_mrl_recall_resolution_and_explicit_wins(
     assert rows is not None
 
 
+@pytest.mark.slow  # 15.7s
 def test_engine_retrain_remeasures_mrl_curve(spark, tmp_path):
     """maybe_retrain's rebuild-and-swap re-measures the truncation
     curve under the old stamped contract — target_mrl_recall keeps
@@ -533,6 +541,7 @@ def test_engine_search_batch_mrl_symmetry(spark, tmp_path):
         eng.search_batch(texts, top_k=3, mrl_dim=4)
 
 
+@pytest.mark.slow  # 20.4s
 def test_engine_diverse_and_hybrid_mrl_symmetry(spark, tmp_path):
     """Every indexed door turns the dial: diverse/hybrid (single and
     batch) at mrl_dim=full reproduce their plain indexed results; the

@@ -429,3 +429,28 @@ def test_retention_cohorts_no_cartesian_no_hinted_base(spark):
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     assert broadcast_hinted_leaves(df) == []
+
+
+def test_hybrid_q1_plan_has_no_python_map(spark, tmp_path):
+    """The one hybrid door picks its scan kernels from the batch size:
+    one query runs the JVM fold and BM25 arms (no Python worker), and
+    Q>1 scores the semantic arm with the `knn_join_blas` map."""
+    from converttovectordb_spark.embeddings import hash_embedder
+    from converttovectordb_spark.engine import VectorEngine
+
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    (repo / "a.py").write_text("def alpha():\n    return 1\n" * 20)
+    eng = VectorEngine(
+        spark,
+        str(tmp_path / "store"),
+        embedder=hash_embedder(16),
+        dim=16,
+        chunk_size=200,
+        overlap=20,
+    )
+    eng.ingest(str(repo))
+    q1 = physical_plan(eng.search_hybrid("alpha return"))
+    q2 = physical_plan(eng.search_hybrid_batch(["alpha", "return"]))
+    assert "MapInPandas" not in q1 and "MapInArrow" not in q1
+    assert q2.count("MapInPandas") == 1

@@ -132,6 +132,7 @@ def test_ivfadc_end_to_end_recall(spark):
     assert len(exact & got) / len(exact) >= 0.55
 
 
+@pytest.mark.slow  # 36.4s
 def test_engine_ivfadc_index_path(spark, tmp_path, corpus):
     """build_ivf_index(pq_m=...) materializes the cluster-partitioned
     codes table; search(adc_shortlist=N) returns the same top hit as
@@ -187,6 +188,7 @@ def test_engine_ivfadc_index_path(spark, tmp_path, corpus):
         plain.search(probes, top_k=1, adc_shortlist=5)
 
 
+@pytest.mark.slow  # 17.0s
 def test_adc_query_batch_guard(spark, tmp_path, corpus, monkeypatch):
     """The IVFADC mode builds one driver-side plan leg per query, so a
     curation-sized query batch must be refused loudly (pointing at the

@@ -112,6 +112,7 @@ def _mini_repo(tmp_path):
     return str(repo)
 
 
+@pytest.mark.slow  # 14.7s
 def test_engine_target_recall_resolution_and_explicit_wins(
     spark, tmp_path
 ):
@@ -153,6 +154,7 @@ def test_engine_target_recall_resolution_and_explicit_wins(
     )
 
 
+@pytest.mark.slow  # 6.5s
 def test_staleness_stamp_and_budget(spark, tmp_path):
     """r12 (VERDICT #1): the curve is stamped with the corpus size at
     measurement; appends past the drift budget make resolution WARN
@@ -191,6 +193,7 @@ def test_staleness_stamp_and_budget(spark, tmp_path):
         idx.nprobe_for_recall(0.9, max_growth=1.0)
 
 
+@pytest.mark.slow  # 18.6s
 def test_engine_retrain_remeasures_curve(spark, tmp_path):
     """r12 (VERDICT #1): maybe_retrain's rebuild-and-swap re-measures
     the curve under the old stamped contract — target_recall keeps
@@ -257,6 +260,7 @@ def test_engine_retrain_remeasures_curve(spark, tmp_path):
     assert eng2._index.recall_curve() is None
 
 
+@pytest.mark.slow  # 11.9s
 def test_plain_inplace_rebuild_replaces_stale_curve(spark, tmp_path):
     """A plain (non-transactional) rebuild lands in place, where the
     old _recall_curve.json would survive as a silently stale file —
@@ -289,6 +293,7 @@ def test_plain_inplace_rebuild_replaces_stale_curve(spark, tmp_path):
     ).collect() is not None
 
 
+@pytest.mark.slow  # 7.4s
 def test_rebuild_publishes_only_after_remeasure(spark, tmp_path, monkeypatch):
     """Transactional rebuild ordering (r12 review fix): the CURRENT
     pointer swaps only AFTER the carried recall curve is re-measured —

@@ -1066,3 +1066,59 @@ def test_diverse_tier_parity(spark, tmp_path):
     finally:
         srv_matrix.stop()
         srv_df.stop()
+
+
+def test_hybrid_and_diverse_df_tier_match_engine_doors(spark, tmp_path):
+    """On the forced df tier (matrix_max_cells=0) /hybrid and /diverse
+    are the batch doors at Q=1 over the warm cache: row for row what
+    the engine's single doors return from a cold store read."""
+    eng = VectorEngine(
+        spark,
+        str(tmp_path / "dfstore"),
+        embedder=hash_embedder(DIM),
+        dim=DIM,
+    )
+    srv = VectorDBServer(eng, port=0, matrix_max_cells=0).start()
+    try:
+        _seed(srv)
+        for route, door, body in (
+            ("/hybrid", eng.search_hybrid, {"top_k": 4}),
+            ("/diverse", eng.search_diverse, {"top_k": 3, "fetch_k": 6}),
+        ):
+            for q in ("document number 3", "number"):
+                status, out = _call(srv, "POST", route, {"query": q, **body})
+                assert status == 200
+                assert srv.api._matrix is None
+                want = [
+                    r.asDict(recursive=True)
+                    for r in door(
+                        q, body["top_k"], **{
+                            k: v for k, v in body.items() if k != "top_k"
+                        }
+                    ).collect()
+                ]
+                assert out["results"] == want and want
+    finally:
+        srv.stop()
+
+
+def test_500_is_logged_with_traceback(server, monkeypatch, caplog):
+    """An unexpected error still answers 500 with only its message, and
+    the server logs it with its traceback, method and path."""
+    import logging
+
+    def boom():
+        raise RuntimeError("stats exploded")
+
+    monkeypatch.setattr(server.api, "stats", boom)
+    with caplog.at_level(logging.ERROR, logger="converttovectordb_spark.server"):
+        status, out = _call(server, "GET", "/stats")
+    assert status == 500 and out == {"error": "stats exploded"}
+    recs = [
+        r for r in caplog.records
+        if r.name == "converttovectordb_spark.server"
+    ]
+    assert len(recs) == 1
+    assert "GET /stats" in recs[0].getMessage()
+    assert recs[0].exc_info is not None
+    assert "RuntimeError: stats exploded" in caplog.text

@@ -134,6 +134,7 @@ def _crawl(tmp_path, name, files):
     return str(repo)
 
 
+@pytest.mark.slow  # 73.9s
 def test_engine_lexical_batches_fold_and_decisions_unchanged(
     spark, tmp_path
 ):
@@ -194,6 +195,7 @@ def test_engine_lexical_batches_fold_and_decisions_unchanged(
     assert again.count() == 1
 
 
+@pytest.mark.slow  # 8.3s
 def test_heal_after_fold(spark, tmp_path):
     """An unflagged ingest between flagged ones AFTER a compaction:
     the (rid, chash) delta heal reads the folded artifact and the

@@ -376,7 +376,14 @@ def test_index_auto_compaction(spark, tmp_path):
     assert index.corpus().count() == emb.count()
 
 
-@pytest.mark.parametrize("seed", [7, 23, 91])
+@pytest.mark.parametrize(
+    "seed",
+    [
+        pytest.param(7, marks=pytest.mark.slow),  # 9.3s
+        pytest.param(23, marks=pytest.mark.slow),  # 8.3s
+        pytest.param(91, marks=pytest.mark.slow),  # 12.9s
+    ],
+)
 def test_store_matches_model_over_random_ops(spark, tmp_path, seed):
     rng = random.Random(seed)
     store = TransactionalDocumentStore(spark, str(tmp_path / "store"))

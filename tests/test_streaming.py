@@ -5,6 +5,8 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pytest
+
 from converttovectordb_spark.embeddings import hash_embedder
 from converttovectordb_spark.streaming.jobs import (
     EVENTS_SCHEMA,
@@ -258,6 +260,7 @@ def test_stream_ingest_dedup_on_arrival(spark, tmp_path):
     assert eng.store.load().count() == n1 + 1
 
 
+@pytest.mark.slow  # 7.9s
 def test_stream_ingest_dedup_same_path_recrawl_one_epoch(spark, tmp_path):
     """A crawl and its re-crawl of the SAME path pending in one
     availableNow epoch must not kill the stream on the identity
@@ -307,6 +310,7 @@ def test_stream_ingest_dedup_same_path_recrawl_one_epoch(spark, tmp_path):
     assert newest.content == "second crawl version content"
 
 
+@pytest.mark.slow  # 10.0s
 def test_retrain_check_cadence(spark, tmp_path, monkeypatch):
     """r12: retrain_check_every=K runs the drift check only on epochs
     with epoch_id % K == 0 (deterministic under replay), and the

@@ -68,6 +68,7 @@ def test_staged_but_uncommitted_is_invisible(spark, tmp_path):
     assert index.corpus().count() == n  # unchanged: manifest is truth
 
 
+@pytest.mark.slow  # 22.0s
 def test_corpus_and_codes_commit_together(spark, tmp_path):
     emb = _emb(spark)
     old = emb.filter(F.col("vec_id") < 400)
@@ -102,6 +103,7 @@ def test_search_and_pruning_over_batches(spark, tmp_path):
     assert 0 < pruned.count() < index.corpus().count()
 
 
+@pytest.mark.slow  # 31.2s
 def test_compact_supersedes_but_preserves_results(spark, tmp_path):
     emb = _emb(spark)
     index = _build(
@@ -133,6 +135,7 @@ def test_compact_supersedes_but_preserves_results(spark, tmp_path):
     )
 
 
+@pytest.mark.slow  # 17.4s
 def test_stream_ingest_indexed_exactly_once(spark, tmp_path):
     """Store and index share the epoch txn id; replaying the epoch
     against BOTH sinks (the crash-recovery path) changes nothing."""
@@ -197,6 +200,7 @@ def test_stream_ingest_indexed_exactly_once(spark, tmp_path):
     assert index.corpus().count() == n_index
 
 
+@pytest.mark.slow  # 14.6s
 def test_compact_race_preserves_concurrent_epoch(spark, tmp_path):
     """An epoch committed WHILE compact() rewrites must survive: the
     replaces list covers only the versions captured at entry, so the
@@ -233,6 +237,7 @@ def test_build_refuses_populated_path(spark, tmp_path):
         _build(spark, tmp_path, docs=emb)
 
 
+@pytest.mark.slow  # 23.2s
 def test_engine_transactional_index_rebuild_and_swap(spark, tmp_path):
     """build_index(transactional=True) publishes via a CURRENT pointer;
     a rebuild lands in a fresh dir and swaps the pointer; open_index
@@ -282,6 +287,7 @@ def test_engine_transactional_index_rebuild_and_swap(spark, tmp_path):
     assert any("new.txt" in r.path for r in got.collect())
 
 
+@pytest.mark.slow  # 11.4s
 def test_maybe_retrain_rebuilds_on_drift(spark, tmp_path):
     """VERDICT r9 #3: the drift→retrain wiring. Below threshold the
     verb is a no-op; injected drift triggers a rebuild that advances
@@ -347,6 +353,7 @@ def test_maybe_retrain_rebuilds_on_drift(spark, tmp_path):
         eng_fresh.maybe_retrain(0.5)
 
 
+@pytest.mark.slow  # 13.6s
 def test_maybe_retrain_preserves_pq_family(spark, tmp_path):
     """A drift rebuild must carry the index family: PQ (m, k) is
     inferred from the live codebooks when the caller does not pass it."""
@@ -503,6 +510,7 @@ def test_commit_rechecks_txn_dedup_at_create_time(spark, tmp_path):
     assert index.version() == v  # nothing new committed
 
 
+@pytest.mark.slow  # 8.0s
 def test_blind_reingest_store_builds_unique_index(spark, tmp_path):
     """Duplicate (path, chunk_index) rows from a blind re-ingest must
     collapse (newest copy) at index build AND on the heal path, so
@@ -536,6 +544,7 @@ def test_blind_reingest_store_builds_unique_index(spark, tmp_path):
     assert corpus.count() == corpus.select("_row_id").distinct().count()
 
 
+@pytest.mark.slow  # 6.0s
 def test_carry_txn_ids_dedups_and_is_invisible_to_readers(spark, tmp_path):
     """A carried-txn commit (rebuild inheritance) blocks replays of the
     predecessor's epochs but contributes no rows, no histogram noise,
@@ -581,6 +590,7 @@ def test_carry_txn_ids_dedups_and_is_invisible_to_readers(spark, tmp_path):
     )
 
 
+@pytest.mark.slow  # 8.6s
 def test_stream_indexed_retrain_on_drift(spark, tmp_path):
     """Injected-drift streaming retrain: an epoch of off-manifold docs
     pushes the drift report past the threshold → EXACTLY ONE
@@ -686,6 +696,7 @@ def test_stream_indexed_retrain_on_drift(spark, tmp_path):
     assert again.path == new_index.path
 
 
+@pytest.mark.slow  # 9.3s
 def test_engine_rebuild_carries_txn_ids(spark, tmp_path):
     """The OFFLINE rebuild path (`build_index(transactional=True)` /
     `maybe_retrain`) carries the replaced index's txn ids exactly like
@@ -735,6 +746,7 @@ def test_engine_rebuild_carries_txn_ids(spark, tmp_path):
     assert new.corpus().count() == n_old
 
 
+@pytest.mark.slow  # 16.3s
 def test_stream_retrain_carries_recall_curve(spark, tmp_path):
     """r12 (VERDICT #1 / ADVICE jobs.py:121): the streaming drift
     retrain re-measures the persisted recall curve on the rebuilt

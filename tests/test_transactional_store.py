@@ -342,3 +342,45 @@ def test_state_token_differs_across_store_lifetimes(spark, tmp_path):
     # overwrite() resets the log: token must change too
     store.overwrite(docs1)
     assert store.state_token() not in (tok1, tok2)
+
+
+def test_load_reads_the_recorded_schema(spark, tmp_path):
+    """load() reads every batch and tombstone-key dir with the schema
+    its manifest records: planning runs no Spark job, and a partition
+    column keeps its type even when one batch's only value looks
+    numeric (".5", a man page) — inferred, it read as double and the
+    union with a ".py" batch failed at run time."""
+    store = TransactionalDocumentStore(
+        spark, str(tmp_path / "t"), partition_by=("extension",)
+    )
+    man = spark.createDataFrame(
+        [("ls.1", ".5", 0, 1, "man page", [0.1, 0.2], 1.0)], SCHEMA
+    )
+    store.append(man)
+    store.append(_batch(spark, "a", 2))
+    store.upsert(
+        spark.createDataFrame(
+            [("a0.py", ".py", 0, 1, "new", [0.3, 0.4], 2.0)], SCHEMA
+        ),
+        key_cols=["path"],
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("load_plan", "load() planning")
+    try:
+        head = store.load()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("load_plan")) == []
+    assert dict(head.dtypes)["extension"] == "string"
+    assert head.columns[-1] == "extension"  # partition column last
+    want = {("ls.1", ".5", "man page"), ("a0.py", ".py", "new"),
+            ("a1.py", ".py", "c1")}
+    assert {(r.path, r.extension, r.content) for r in head.collect()} == want
+    assert {
+        (r.path, r.extension)
+        for r in store.load(at_version=1).collect()
+    } == {("ls.1", ".5"), ("a0.py", ".py"), ("a1.py", ".py")}
+    assert store.compact() == 3
+    after = store.load()
+    assert dict(after.dtypes)["extension"] == "string"
+    assert {(r.path, r.extension, r.content) for r in after.collect()} == want

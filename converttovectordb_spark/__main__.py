@@ -425,23 +425,41 @@ def _push_file(eng, args) -> dict:
         except ValueError as e:
             raise ValueError(f"line {ln}: {e}")
 
-    df = eng.spark.createDataFrame(tuples, DOCUMENTS_SCHEMA)
-    if any(t[5] is None for t in tuples):
-        missing = df.filter(F.col("embedding").isNull()).drop("embedding")
-        embedded = embed_column(
-            missing, "content", "embedding", eng.embedder, eng.dim
-        ).select(*DOCUMENTS_SCHEMA.fieldNames())
-        df = (
-            df.filter(F.col("embedding").isNotNull())
-            .unionByName(embedded)
-        )
-    written = eng.append_documents(
-        df,
-        semantic_dedup=args.semantic_dedup,
-        semantic_dedup_nprobe=args.semantic_dedup_nprobe,
-        semantic_dedup_within_batch=args.within_batch_dedup,
-        lexical_dedup=args.lexical_dedup,
+    dedup = (
+        args.semantic_dedup is not None
+        or args.lexical_dedup is not None
+        or args.within_batch_dedup
     )
+    if not dedup and all(t[5] is not None for t in tuples):
+        # a driver-resident batch with nothing to decide or embed: the
+        # store's driver-side Arrow writer appends it with no Spark job
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        written = eng.store.append(
+            pa.Table.from_pylist(
+                [dict(zip(DOCUMENTS_SCHEMA.names, t)) for t in tuples],
+                schema=to_arrow_schema(DOCUMENTS_SCHEMA),
+            )
+        )
+    else:
+        df = eng.spark.createDataFrame(tuples, DOCUMENTS_SCHEMA)
+        if any(t[5] is None for t in tuples):
+            missing = df.filter(F.col("embedding").isNull()).drop("embedding")
+            embedded = embed_column(
+                missing, "content", "embedding", eng.embedder, eng.dim
+            ).select(*DOCUMENTS_SCHEMA.fieldNames())
+            df = (
+                df.filter(F.col("embedding").isNotNull())
+                .unionByName(embedded)
+            )
+        written = eng.append_documents(
+            df,
+            semantic_dedup=args.semantic_dedup,
+            semantic_dedup_nprobe=args.semantic_dedup_nprobe,
+            semantic_dedup_within_batch=args.within_batch_dedup,
+            lexical_dedup=args.lexical_dedup,
+        )
     return {
         "rows_in": len(tuples),
         "rows_written": written,

@@ -33,8 +33,10 @@ import os
 import re
 import threading
 import uuid
-from collections import Counter
+from bisect import bisect_left
+from collections.abc import Mapping
 from contextlib import contextmanager
+from itertools import chain
 
 import numpy as np
 
@@ -44,6 +46,7 @@ from converttovectordb_spark.operators.search import (
     cosine_scores,
     topk_with_ties,
 )
+from converttovectordb_spark.sources.store import _HIVE_DEFAULT_PARTITION
 
 #: Default driver-memory budget for the matrix tier, in float64 cells
 #: (rows × dim). 200M cells = 1.6 GB — a broadcast-table-sized cache.
@@ -307,49 +310,211 @@ def _as_query_matrix(query_vectors, dim: int) -> np.ndarray:
     return Q
 
 
+#: Capacity factor of a :class:`_Rows` buffer when it must grow: the
+#: new buffer holds this many times the rows it starts with. The
+#: headroom of a numeric buffer is not written until rows land there,
+#: so its pages cost no memory before then.
+_GROWTH = 1.25
+
+
+class _Rows:
+    """An over-allocated array shared by the generations of one
+    :class:`DriverMatrixIndex`: a generation of ``n`` rows reads
+    ``buf[:n]``, and ``used`` is the most rows any generation has
+    claimed. Rows at and past ``used`` belong to no generation, so an
+    extension from the generation that holds all ``used`` rows may
+    write there without a copy. Any other extension (a second one from
+    an older generation, or one that does not fit) copies into a NEW
+    buffer — never ``ndarray.resize``, since older generations hold
+    views of this one."""
+
+    __slots__ = ("buf", "used", "lock")
+
+    def __init__(self, buf: np.ndarray, used: int | None = None):
+        self.buf = buf
+        self.used = len(buf) if used is None else used
+        self.lock = threading.Lock()
+
+    def append(self, n: int, rows: np.ndarray) -> "_Rows":
+        """The rows of a generation holding ``buf[:n]`` followed by
+        ``rows``; read them as ``result.buf[:n + len(rows)]``."""
+        end = n + len(rows)
+        with self.lock:
+            claimed = self.used == n and end <= len(self.buf)
+            if claimed:
+                self.used = end
+        if claimed:
+            self.buf[n:end] = rows
+            return self
+        buf = np.empty(
+            (math.ceil(end * _GROWTH),) + self.buf.shape[1:], self.buf.dtype
+        )
+        buf[:n] = self.buf[:n]
+        buf[n:end] = rows
+        return _Rows(buf, end)
+
+
+def _object_array(items) -> np.ndarray:
+    """``items`` (dicts or strings) as a 1-D object array, the form a
+    :class:`_Rows` buffer of Python objects takes."""
+    if isinstance(items, np.ndarray):
+        return items
+    out = np.empty(len(items), dtype=object)
+    out[:] = items
+    return out
+
+
 _WS = re.compile(r"[ \t\n\x0b\f\r]+")
+#: What ``str.split()`` splits ASCII text on besides ``_WS``.
+_ASCII_SPLIT_ONLY = re.compile(r"[\x1c-\x1f]")
 
 
-def _lex_postings(texts: list, first_doc: int = 0):
-    """BM25 postings of ``texts``, numbered from ``first_doc``: term →
-    (doc-index int64 array, tf float64 array), plus the per-doc token
-    counts. Tokenization mirrors functions/text.py's ASCII_WS split
-    exactly. The one tokenizer of both the fill-time build
-    (`DriverMatrixIndex._lex_cache`) and the write-through extension
-    (`DriverMatrixIndex.extended`). The (doc, term, tf) triples are
-    grouped by term with one stable argsort, so each term's arrays are
-    slices of two flat buffers, docs ascending."""
-    docs: list = []
-    terms: list = []
-    tfs: list = []
-    dl = np.zeros(len(texts), dtype=np.float64)
-    for i, text in enumerate(texts):
-        counts = Counter(t for t in _WS.split((text or "").lower()) if t)
-        dl[i] = sum(counts.values())
-        terms.extend(counts)
-        tfs.extend(counts.values())
-        docs.extend([first_doc + i] * len(counts))
-    vocab: dict = {}
-    tid = np.fromiter(
-        (vocab.setdefault(t, len(vocab)) for t in terms),
-        dtype=np.int64,
-        count=len(terms),
-    )
-    order = np.argsort(tid, kind="stable")
-    doc_arr = np.asarray(docs, dtype=np.int64)[order]
-    tf_arr = np.asarray(tfs, dtype=np.float64)[order]
-    bounds = np.zeros(len(vocab) + 1, dtype=np.int64)
-    np.cumsum(np.bincount(tid, minlength=len(vocab)), out=bounds[1:])
-    postings = {
-        t: (doc_arr[bounds[k] : bounds[k + 1]], tf_arr[bounds[k] : bounds[k + 1]])
-        for k, t in enumerate(vocab)
-    }
-    return postings, dl
+def _tokens(text) -> list:
+    """functions/text.py's ASCII_WS split of lowercased ``text``,
+    empty tokens dropped. ``str.split()`` gives the same tokens for
+    ASCII text free of the separators \\x1c-\\x1f, at a fraction of the
+    regex's cost."""
+    text = (text or "").lower()
+    if text.isascii() and not _ASCII_SPLIT_ONLY.search(text):
+        return text.split()
+    return [t for t in _WS.split(text) if t]
 
 
-#: Name Spark gives the directory of a NULL (or empty) partition value;
-#: the value itself would read back as NULL.
-_HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+class _Vocab:
+    """Term → id, append-only, shared by every generation of one BM25
+    cache so that their posting segments index terms alike. An id
+    handed out by one generation's extension is absent from the others'
+    segments, which is what a lookup there finds."""
+
+    def __init__(self):
+        self.ids: dict = {}
+        self.lock = threading.Lock()
+
+    def ids_of(self, terms: list) -> np.ndarray:
+        """The id of each of ``terms``; unseen ones get the next ids,
+        in sorted order."""
+        with self.lock:
+            ids = self.ids
+            new = sorted(set(terms).difference(ids))
+            ids.update(zip(new, range(len(ids), len(ids) + len(new))))
+            return np.fromiter(
+                map(ids.__getitem__, terms), dtype=np.int64, count=len(terms)
+            )
+
+
+#: Documents tokenized at a time by `_lex_postings`.
+_LEX_BLOCK_DOCS = 4096
+
+
+def _lex_postings(texts: list, vocab: _Vocab, first_doc: int = 0):
+    """BM25 postings of ``texts``, numbered from ``first_doc``, as one
+    segment ``(doc-index int64, tf float64, indptr)``: term id ``t``
+    (``vocab``'s) owns entries ``indptr[t]:indptr[t + 1]``, docs
+    ascending; ids past ``len(indptr) - 1`` have none. Plus the per-doc
+    token counts. Tokenization (`_tokens`) mirrors functions/text.py's
+    ASCII_WS split exactly. The one tokenizer of both the fill-time
+    build (`DriverMatrixIndex._lex_cache`) and the write-through
+    extension (`DriverMatrixIndex.extended`). Term frequencies come
+    from one ``np.unique`` over (term, doc) keys, which also sorts the
+    entries by term, then doc. Texts are tokenized ``_LEX_BLOCK_DOCS``
+    at a time, so a fill holds one block's token strings at once,
+    beside 8 bytes per token of ids."""
+    n = len(texts)
+    dls, tids = [], []
+    for lo in range(0, n, _LEX_BLOCK_DOCS):
+        tokens = [_tokens(t) for t in texts[lo : lo + _LEX_BLOCK_DOCS]]
+        dls.append(np.fromiter(map(len, tokens), dtype=np.float64))
+        tids.append(vocab.ids_of(list(chain.from_iterable(tokens))))
+    dl = np.concatenate(dls) if dls else np.zeros(0)
+    tid = np.concatenate(tids) if tids else np.zeros(0, dtype=np.int64)
+    doc = np.repeat(np.arange(n, dtype=np.int64), dl.astype(np.int64))
+    width = max(n, 1)
+    keys, tf = np.unique(tid * width + doc, return_counts=True)
+    term = keys // width
+    n_ids = int(term[-1]) + 1 if len(term) else 0
+    indptr = np.zeros(n_ids + 1, dtype=np.int64)
+    np.cumsum(np.bincount(term, minlength=n_ids), out=indptr[1:])
+    return (keys % width + first_doc, tf.astype(np.float64), indptr), dl
+
+
+def _merge_segments(old, new):
+    """One segment holding ``old``'s entries, then ``new``'s, per term
+    — ``new``'s docs all follow ``old``'s, so docs stay ascending. A
+    scatter over both entry arrays, no sort."""
+    lens = [np.diff(ptr) for _, _, ptr in (old, new)]
+    n_ids = max(len(lens[0]), len(lens[1]))
+    total = np.zeros(n_ids, dtype=np.int64)
+    for ln in lens:
+        total[: len(ln)] += ln
+    indptr = np.zeros(n_ids + 1, dtype=np.int64)
+    np.cumsum(total, out=indptr[1:])
+    size = int(indptr[-1])
+    docs = np.empty(size, dtype=np.int64)
+    tf = np.empty(size, dtype=np.float64)
+    start = indptr[:-1].copy()  # next free slot per term
+    for (d, f, ptr), ln in zip((old, new), lens):
+        k = len(ln)
+        dest = np.arange(len(d)) + np.repeat(start[:k] - ptr[:-1], ln)
+        docs[dest] = d
+        tf[dest] = f
+        start[:k] += ln
+    return docs, tf, indptr
+
+
+def _push_segment(segments: tuple, seg) -> tuple:
+    """``segments`` (oldest first) plus ``seg``, merged log-structured:
+    while the newest segment holds at least half the entries of the
+    one before it, the two merge. Each segment then holds more than
+    twice the entries of the next, so a term has O(log writes) chunks,
+    and an entry is copied O(log writes) times over its life."""
+    out = list(segments) + [seg]
+    while len(out) > 1 and len(out[-2][0]) <= 2 * len(out[-1][0]):
+        new = out.pop()
+        out[-1] = _merge_segments(out[-1], new)
+    return tuple(out)
+
+
+class _Postings(Mapping):
+    """A generation's BM25 postings: term → (doc-index int64 array, tf
+    float64 array), docs ascending — the concatenation of the term's
+    chunk in each of the generation's segments."""
+
+    def __init__(self, vocab: _Vocab, segments: tuple):
+        self._vocab = vocab
+        self._segments = segments
+
+    def __getitem__(self, term):
+        t = self._vocab.ids.get(term)
+        parts = []
+        if t is not None:
+            for docs, tf, ptr in self._segments:
+                if t + 1 < len(ptr) and ptr[t] < ptr[t + 1]:
+                    lo, hi = ptr[t], ptr[t + 1]
+                    parts.append((docs[lo:hi], tf[lo:hi]))
+        if not parts:
+            raise KeyError(term)
+        if len(parts) == 1:
+            return parts[0]
+        return (
+            np.concatenate([p[0] for p in parts]),
+            np.concatenate([p[1] for p in parts]),
+        )
+
+    def _present(self) -> np.ndarray:
+        return np.unique(
+            np.concatenate(
+                [np.flatnonzero(np.diff(ptr)) for _, _, ptr in self._segments]
+            )
+        )
+
+    def __iter__(self):
+        present = set(self._present().tolist())
+        with self._vocab.lock:
+            items = list(self._vocab.ids.items())
+        return iter([t for t, i in items if i in present])
+
+    def __len__(self) -> int:
+        return len(self._present())
 
 
 def _infers_as_string(value) -> bool:
@@ -414,6 +579,36 @@ def select_among(
     return out
 
 
+def _merge_rids(
+    rows: _Rows, order: np.ndarray, perm: np.ndarray, n: int, new: list
+):
+    """A rid cache over ``n`` rows (rids ``rows.buf[:n]``, ``order``
+    their ranks, ``perm`` the rows in rank order) grown by the rows
+    whose rids are ``new``, as ``(rows, order, perm)``: each new rid
+    finds its rank by binary search, the new rows are inserted into
+    ``perm`` there, and the ranks are re-read off ``perm`` — integer
+    arrays only. ``None`` when a new rid equals a stored one or
+    another new one: copies of a rid rank by their payloads
+    (`DriverMatrixIndex._rank_copies`), so that cache is rebuilt."""
+    rids = rows.buf
+    fresh = _object_array(new)
+    by_rid = np.argsort(fresh, kind="stable")
+    ranked = fresh[by_rid]
+    if len(new) > 1 and (ranked[1:] == ranked[:-1]).any():
+        return None
+    pos = np.array(
+        [bisect_left(perm, r, key=rids.__getitem__) for r in ranked],
+        dtype=np.int64,
+    )
+    inside = pos < n
+    if (rids[perm[pos[inside]]] == ranked[inside]).any():
+        return None
+    perm = np.insert(perm, pos, n + by_rid)
+    order = np.empty(n + len(new), dtype=np.int64)
+    order[perm] = np.arange(n + len(new))
+    return rows.append(n, fresh), order, perm
+
+
 class DriverMatrixIndex:
     """A query-many snapshot of a corpus DataFrame. Its rows never
     change in place: :meth:`extended` returns a NEW index for a
@@ -439,7 +634,13 @@ class DriverMatrixIndex:
     ):
         self.matrix = matrix  # (n, dim) float64
         self.norms = norms  # (n,) float64, 0.0 for zero vectors
-        self.payload = payload  # row dicts WITHOUT the embedding column
+        # row dicts WITHOUT the embedding column, as an object array
+        self.payload = _object_array(payload)
+        # the buffers `matrix`, `norms` and `payload` are views of,
+        # shared with the generations `extended` derives from this one
+        self._matrix_rows = _Rows(matrix)
+        self._norm_rows = _Rows(norms)
+        self._payload_rows = _Rows(self.payload)
         self.dim = dim
         # what `extended` needs to reproduce a refill: the source's
         # Spark schema (None: unknown, never extended), the admission
@@ -449,8 +650,9 @@ class DriverMatrixIndex:
         self._embedding_col = embedding_col
         self.payload_bytes = payload_bytes
         self.stored_rows = self.n if stored_rows is None else stored_rows
-        self._lex = None  # lazy BM25 cache: (content_col, postings, dl, avgdl)
-        self._rids = None  # lazy rid cache: (id_cols, rids, order)
+        # lazy BM25 cache: (content_col, vocab, segments, dl rows, dl sum)
+        self._lex = None
+        self._rids = None  # lazy rid cache: (id_cols, rid rows, order, perm)
         self._newest = None  # lazy display cache: (id_cols, rid -> idx)
         self._mrl_norms: dict[int, np.ndarray] = {}  # d' -> prefix norms
         self._bits = None  # lazy sign-bit cache: (n, ceil(dim/8)) uint8
@@ -581,11 +783,19 @@ class DriverMatrixIndex:
           read as a number, date or timestamp (`_infers_as_string`):
           a typed value could retype the column on read.
 
-        A built BM25 cache is extended: the new doc indices are
-        appended to each touched term's postings, and ``dl`` and
-        ``avgdl`` grow (`_lex_postings` tokenizes both builds). The
-        rid, newest, MRL-norm and sign-bit caches start empty and
-        rebuild lazily."""
+        The cost is O(batch), not O(corpus), apart from a buffer's
+        growth: the matrix, the norms, the payload rows, the rids and
+        the BM25 ``dl`` live in :class:`_Rows` buffers, over-allocated
+        and shared with this index, so the new rows are written past
+        this index's last row when no other extension has claimed that
+        space yet, and copied with the old rows into a grown buffer
+        otherwise. A built BM25 cache gains one posting segment for
+        the batch (`_push_segment`), and ``avgdl`` grows from a running
+        token total. A built rid cache is carried over when no new rid
+        equals a stored one (`_merge_rids`, whose rank arrays are the
+        one O(n) integer pass); otherwise it, like the newest,
+        MRL-norm and sign-bit caches, starts empty and rebuilds
+        lazily."""
         emb_col = self._embedding_col
         if self.n == 0 or self._schema is None or not rows:
             return None
@@ -602,11 +812,15 @@ class DriverMatrixIndex:
         for r in rows:
             row = {c: r[c] for c in keys}
             for c in part:
-                if row[c] in ("", None):
+                if row[c] == "":
                     row[c] = None
-                elif not _infers_as_string(row[c]):
-                    return None
             payload.append(row)
+        for c in part:
+            if not all(
+                v is None or _infers_as_string(v)
+                for v in {row[c] for row in payload}
+            ):
+                return None
         if len(vectors) != len(rows) or any(
             len(v) != self.dim for v in vectors
         ):
@@ -624,31 +838,48 @@ class DriverMatrixIndex:
             vectors, dtype=np.float32 if stored == "float" else np.float64
         ).astype(np.float64)
         norms = np.sqrt(np.einsum("ij,ij->i", vecs, vecs))
+        matrix_rows = self._matrix_rows.append(self.n, vecs)
+        norm_rows = self._norm_rows.append(self.n, norms)
+        payload_rows = self._payload_rows.append(
+            self.n, _object_array(payload)
+        )
         out = DriverMatrixIndex(
-            np.concatenate([self.matrix, vecs]),
-            np.concatenate([self.norms, norms]),
-            self.payload + payload,
+            matrix_rows.buf[:n],
+            norm_rows.buf[:n],
+            payload_rows.buf[:n],
             self.dim,
             schema=self._schema,
             embedding_col=emb_col,
             payload_bytes=payload_bytes,
             stored_rows=self.stored_rows + len(rows),
         )
+        out._matrix_rows, out._norm_rows = matrix_rows, norm_rows
+        out._payload_rows = payload_rows
         lex = self._lex
         if lex is not None:
-            content_col, postings, dl, _ = lex
-            add, add_dl = _lex_postings(
-                [row.get(content_col) for row in payload], self.n
+            content_col, vocab, segments, dl_rows, dl_sum = lex
+            seg, add_dl = _lex_postings(
+                [row.get(content_col) for row in payload], vocab, self.n
             )
-            merged = dict(postings)
-            for t, (idx, tf) in add.items():
-                old = merged.get(t)
-                merged[t] = (idx, tf) if old is None else (
-                    np.concatenate([old[0], idx]),
-                    np.concatenate([old[1], tf]),
-                )
-            dl = np.concatenate([dl, add_dl])
-            out._lex = (content_col, merged, dl, float(dl.sum() / n))
+            out._lex = (
+                content_col,
+                vocab,
+                _push_segment(segments, seg),
+                dl_rows.append(self.n, add_dl),
+                dl_sum + float(add_dl.sum()),
+            )
+        rid_cache = self._rids
+        if rid_cache is not None:
+            key, rid_rows, order, perm = rid_cache
+            merged = _merge_rids(
+                rid_rows,
+                order,
+                perm,
+                self.n,
+                ["#".join(str(row[c]) for c in key) for row in payload],
+            )
+            if merged is not None:
+                out._rids = (key, *merged)
         return out
 
     def query(
@@ -821,25 +1052,28 @@ class DriverMatrixIndex:
             return self._bits
 
     def _lex_cache(self, content_col: str):
-        """Inverted-index BM25 cache: term → (doc-index array, tf
-        array) postings, plus doc lengths and avgdl — built once per
-        ``content_col``, on the first hybrid query (same lazy-fill
-        contract as the matrix itself), and grown in place of a
-        rebuild by :meth:`extended`. Postings replace the r11 per-doc
-        Counter list: a hybrid query then touches only ITS terms'
-        postings (document frequency is len(idx), O(1)) instead of
-        scanning every doc's Counter per term — the loop shape the
+        """Inverted-index BM25 cache: a term → (doc-index array, tf
+        array) mapping of postings, plus doc lengths and avgdl — built
+        once per ``content_col``, on the first hybrid query (same
+        lazy-fill contract as the matrix itself), and grown by
+        :meth:`extended` instead of rebuilt. Postings replace the r11
+        per-doc Counter list: a hybrid query then touches only ITS
+        terms' postings (document frequency is len(idx), O(1)) instead
+        of scanning every doc's Counter per term — the loop shape the
         /hybrid_batch door would otherwise pay Q times per POST.
         Guarded by the shared cache lock like the rid caches."""
         with self._cache_lock:
             if self._lex is None or self._lex[0] != content_col:
-                postings, dl = _lex_postings(
-                    [row.get(content_col) for row in self.payload]
+                vocab = _Vocab()
+                seg, dl = _lex_postings(
+                    [row.get(content_col) for row in self.payload], vocab
                 )
-                avgdl = float(dl.sum() / self.n) if self.n else 0.0
-                self._lex = (content_col, postings, dl, avgdl)
-            cached = self._lex
-        return cached[1:]
+                self._lex = (
+                    content_col, vocab, (seg,), _Rows(dl), float(dl.sum())
+                )
+            _, vocab, segments, dl_rows, dl_sum = self._lex
+        avgdl = dl_sum / self.n if self.n else 0.0
+        return _Postings(vocab, segments), dl_rows.buf[: self.n], avgdl
 
     def _rid_cache(self, id_cols: list[str]):
         """'#'-joined rid per row plus its ascending-order rank array
@@ -849,24 +1083,27 @@ class DriverMatrixIndex:
         (NULL first), so a score tie between them does not depend on
         where each copy sits in the matrix: a refill (file order) and a
         write-through extension (write order) break it alike. Copies
-        equal in every payload value keep matrix order."""
+        equal in every payload value keep matrix order. The rids live
+        in a :class:`_Rows` buffer and the cache also keeps the rows in
+        rank order, so that `extended` can merge a batch in."""
         key = tuple(id_cols)
         with self._cache_lock:
             if self._rids is None or self._rids[0] != key:
-                rids = [
-                    "#".join(str(self.payload[i][c]) for c in id_cols)
-                    for i in range(self.n)
-                ]
-                ranked = np.array(rids, dtype=object)
-                perm = np.argsort(ranked, kind="stable")
-                ranked = ranked[perm]
+                rids = _object_array(
+                    [
+                        "#".join(str(row[c]) for c in id_cols)
+                        for row in self.payload
+                    ]
+                )
+                perm = np.argsort(rids, kind="stable")
+                ranked = rids[perm]
                 if self.n > 1 and (ranked[1:] == ranked[:-1]).any():
                     self._rank_copies(perm, ranked, key)
                 order = np.empty(self.n, dtype=np.int64)
                 order[perm] = np.arange(self.n)
-                self._rids = (key, rids, order)
+                self._rids = (key, _Rows(rids), order, perm)
             cached = self._rids
-        return cached[1], cached[2]
+        return cached[1].buf[: self.n], cached[2]
 
     def _rank_copies(self, perm: np.ndarray, ranked: np.ndarray, id_cols):
         """Re-order, in place, each run of ``perm`` (rows sorted by

@@ -94,6 +94,21 @@ def _sole_write(before, after) -> bool:
     return len(jobs) == 1
 
 
+def _embedding_rows(column, dim: int):
+    """A pushed batch's Arrow embedding column as an ``(n, dim)``
+    array of its own element type, read off the Arrow buffer instead
+    of from n Python lists; ``None`` when a row is not ``dim`` long."""
+    import pyarrow as pa
+
+    try:
+        fixed = column.combine_chunks().cast(
+            pa.list_(column.type.value_type, dim)
+        )
+    except pa.ArrowInvalid:
+        return None
+    return fixed.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+
+
 def _rows_to_json(rows) -> list[dict]:
     out = []
     for r in rows:
@@ -288,20 +303,26 @@ class VectorDBApi:
         with self._corpus_lock:
             self._drop_cache_locked(keep_bits_artifact=keep_bits_artifact)
 
-    def _extend_corpus(self, records: list, written: int, before, after):
+    def _extend_corpus(
+        self, records: list, embeddings, written: int, before, after
+    ):
         """Install the matrix tier extended by ``records`` (the
-        DOCUMENTS_SCHEMA rows this write appended, as dicts), when the
-        store tokens read before (``before``) and
-        after (``after``) ``store.append`` prove that write alone
-        moved the store since the cache was filled; returns the new
-        ``total_documents``. Otherwise drops the caches (the next
-        request refills) and returns ``None``: the df and bits tiers
-        (no matrix), a filled secondary embedding cache, and a batch
-        the matrix cannot take exactly or within its budgets."""
+        DOCUMENTS_SCHEMA rows this write appended, as dicts, whose
+        ``embeddings`` are this Arrow list column), when the store
+        tokens read before (``before``) and after (``after``)
+        ``store.append`` prove that write alone moved the store since
+        the cache was filled; returns the new ``total_documents``.
+        Otherwise drops the caches (the next request refills) and
+        returns ``None``: the df and bits tiers (no matrix), a filled
+        secondary embedding cache, and a batch the matrix cannot take
+        exactly or within its budgets."""
         with self._corpus_lock:
             idx = self._matrix
+            vectors = (
+                None if idx is None else _embedding_rows(embeddings, idx.dim)
+            )
             if (
-                idx is not None
+                vectors is not None
                 and self._mmr_corpus is None
                 and before == self._corpus_token
                 and written == len(records)
@@ -309,7 +330,7 @@ class VectorDBApi:
             ):
                 grown = idx.extended(
                     records,
-                    [r["embedding"] for r in records],
+                    vectors,
                     schema=DOCUMENTS_SCHEMA,
                     partition_cols=self.engine.store.partition_by,
                     max_cells=self._matrix_max_cells,
@@ -386,16 +407,12 @@ class VectorDBApi:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         eng = self.engine
-        # one Arrow-built partition: the append writes one file per
-        # store partition, so the per-request token walk grows slowly.
         # Built from the Python values, not through pandas, which would
         # read a pushed NaN (json.loads accepts it) as NULL.
         records = [dict(zip(DOCUMENTS_SCHEMA.names, row)) for row in valid]
-        df = eng.spark.createDataFrame(
-            pa.Table.from_pylist(
-                records, schema=to_arrow_schema(DOCUMENTS_SCHEMA)
-            )
-        ).coalesce(1)
+        table = pa.Table.from_pylist(
+            records, schema=to_arrow_schema(DOCUMENTS_SCHEMA)
+        )
         # Optional dedup-on-arrival — the same flags the repo-ingest
         # door offers, so push-style producers get identical drop
         # semantics (an API extension; absent keys keep the
@@ -406,8 +423,10 @@ class VectorDBApi:
         skipped_dup = 0
         if sem is not None or lex is not None or wb:
             try:
+                # the decision runs Spark jobs over the batch: one
+                # partition, written as one file per store partition
                 written = eng.append_documents(
-                    df,
+                    eng.spark.createDataFrame(table).coalesce(1),
                     semantic_dedup=(
                         float(sem) if sem is not None else None
                     ),
@@ -435,10 +454,16 @@ class VectorDBApi:
             self._invalidate_corpus()
             total = None
         else:
+            # the plain append: the driver-side Arrow writer, no Spark
+            # job (one file per store partition)
             before = self._store_token()
-            written = eng.store.append(df)
+            written = eng.store.append(table)
             total = self._extend_corpus(
-                records, written, before, self._store_token()
+                records,
+                table.column("embedding"),
+                written,
+                before,
+                self._store_token(),
             )
         if total is None:
             total = (

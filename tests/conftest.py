@@ -42,15 +42,15 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    # local[8]/8 shuffle partitions (was local[4]/4): the suite is one
-    # sequential session on a 32-core box and its wall is Spark stage
-    # latency, not CPU — doubling per-job parallelism cut the driver
-    # gate ~20% with zero test changes (no test asserts a partition
-    # count; plan-shape tests match operators, not widths).
+    # Sized like the engine's own session (session.get_spark): local
+    # parallelism and shuffle partitions both SPARK_GRAFT_CPUS, else
+    # the machine's core count. No test asserts a partition count;
+    # plan-shape tests match operators, not widths.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
     s = (
         SparkSession.builder.appName("engine-tests")
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -13,6 +13,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql.types import StructType
 
 from converttovectordb_spark.embeddings import hash_embedder
 from converttovectordb_spark.engine import VectorEngine
@@ -456,3 +457,198 @@ def test_pushed_nan_is_stored_as_nan(spark, tmp_path):
     i, j = got.n - 1, [p["path"] for p in ref.payload].index("nan.py")
     assert got.matrix[i].tobytes() == ref.matrix[j].tobytes()
     assert math.isnan(got.payload[i]["timestamp"])
+
+
+# -- shared row buffers between index generations ------------------------
+
+#: the fill's schema: DOCUMENTS_SCHEMA with the partition column last
+FILL_SCHEMA = StructType(
+    [f for f in DOCUMENTS_SCHEMA.fields if f.name != "extension"]
+    + [DOCUMENTS_SCHEMA["extension"]]
+)
+IDS = ["path", "chunk_index"]
+
+
+def _base_index(rng, n: int) -> DriverMatrixIndex:
+    """An index as a fill would build it over ``n`` random documents,
+    without a store: float32-rounded vectors, fill key order."""
+    docs = _docs(rng, "base", n)
+    vecs = np.array(
+        [d["embedding"] for d in docs], dtype=np.float32
+    ).astype(np.float64)
+    payload = [
+        {
+            "path": d["path"],
+            "chunk_index": d["chunk_index"],
+            "total_chunks": d["total_chunks"],
+            "content": d["content"],
+            "timestamp": 1.0,
+            "extension": os.path.splitext(d["path"])[1],
+        }
+        for d in docs
+    ]
+    norms = np.sqrt(np.einsum("ij,ij->i", vecs, vecs))
+    return DriverMatrixIndex(vecs, norms, payload, DIM, schema=FILL_SCHEMA)
+
+
+def _grow(idx: DriverMatrixIndex, docs: list[dict]) -> DriverMatrixIndex:
+    rows = [
+        {
+            **d,
+            "extension": os.path.splitext(d["path"])[1],
+            "timestamp": 1.0,
+        }
+        for d in docs
+    ]
+    out = idx.extended(
+        rows,
+        [d["embedding"] for d in docs],
+        schema=DOCUMENTS_SCHEMA,
+        partition_cols=("extension",),
+    )
+    assert out is not None
+    return out
+
+
+def _refill(idx: DriverMatrixIndex) -> DriverMatrixIndex:
+    """A fresh index over private copies of ``idx``'s rows."""
+    return DriverMatrixIndex(
+        idx.matrix.copy(), idx.norms.copy(), list(idx.payload), idx.dim
+    )
+
+
+def _snapshot(idx: DriverMatrixIndex, rng) -> dict:
+    """Everything a reader of ``idx`` can see, as private copies."""
+    postings, dl, avgdl = idx._lex_cache("content")
+    queries = rng.standard_normal((4, DIM)).tolist()
+    terms = [list(rng.choice(WORDS, 2)) for _ in queries]
+    return {
+        "matrix": idx.matrix.copy(),
+        "norms": idx.norms.copy(),
+        "postings": {t: (i.copy(), tf.copy()) for t, (i, tf) in postings.items()},
+        "dl": dl.copy(),
+        "avgdl": avgdl,
+        "queries": queries,
+        "terms": terms,
+        "answers": [idx.query(q, 5, id_cols=IDS) for q in queries],
+        "hybrid": [
+            idx.hybrid_query(q, t, 5, id_cols=IDS)
+            for q, t in zip(queries, terms)
+        ],
+    }
+
+
+def _assert_snapshot(idx: DriverMatrixIndex, snap: dict) -> None:
+    assert idx.matrix.tobytes() == snap["matrix"].tobytes()
+    assert idx.norms.tobytes() == snap["norms"].tobytes()
+    postings, dl, avgdl = idx._lex_cache("content")
+    assert postings.keys() == snap["postings"].keys()
+    for t, (i, tf) in postings.items():
+        assert np.array_equal(i, snap["postings"][t][0])
+        assert np.array_equal(tf, snap["postings"][t][1])
+    assert dl.tobytes() == snap["dl"].tobytes() and avgdl == snap["avgdl"]
+    for q, want in zip(snap["queries"], snap["answers"]):
+        assert idx.query(q, 5, id_cols=IDS) == want
+    for q, t, want in zip(snap["queries"], snap["terms"], snap["hybrid"]):
+        assert idx.hybrid_query(q, t, 5, id_cols=IDS) == want
+
+
+def test_generations_share_buffers_between_growths():
+    rng = np.random.default_rng(19)
+    gens = [_base_index(rng, 40)]
+    gens[0]._lex_cache("content")
+    for w in range(12):
+        gens.append(_grow(gens[-1], _docs(rng, f"g{w}", 5)))
+    shared = grown = 0
+    for old, new in zip(gens, gens[1:]):
+        same_buffer = new._matrix_rows is old._matrix_rows
+        assert np.shares_memory(old.matrix, new.matrix) == same_buffer
+        assert np.shares_memory(old.norms, new.norms) == same_buffer
+        old_dl, new_dl = old._lex_cache("content")[1], new._lex_cache("content")[1]
+        assert np.shares_memory(old_dl, new_dl) == (new._lex[3] is old._lex[3])
+        shared += same_buffer
+        grown += not same_buffer
+    # the first extension grows the fill's exact-size buffer; the
+    # headroom then takes several batches before the next growth
+    assert grown >= 2 and shared >= 2 * grown
+    _assert_lex_fresh(gens[-1])
+    assert _rows(gens[-1]) == _rows(_refill(gens[-1]))
+
+
+def test_older_generation_unchanged_by_later_extensions():
+    rng = np.random.default_rng(23)
+    idx = _base_index(rng, 30)
+    idx._lex_cache("content")
+    idx._rid_cache(IDS)
+    old = _grow(idx, _docs(rng, "a", 4))
+    snap = _snapshot(old, rng)
+    later = [old]
+    for w in range(3):
+        later.append(_grow(later[-1], _docs(rng, f"later{w}", 4)))
+        _assert_snapshot(old, snap)
+    # a branch from the old generation copies instead of writing over
+    # rows that the later generations' readers see
+    snaps = [_snapshot(g, rng) for g in later]
+    _grow(old, _docs(rng, "branch", 4))
+    for g, s in zip(later, snaps):
+        _assert_snapshot(g, s)
+
+
+def test_two_extensions_from_one_generation_both_equal_a_refill():
+    rng = np.random.default_rng(31)
+    base = _grow(_base_index(rng, 25), _docs(rng, "pre", 3))
+    base._lex_cache("content")
+    base._rid_cache(IDS)
+    first = _grow(base, _docs(rng, "first", 4))
+    second = _grow(base, _docs(rng, "second", 6))
+    assert second._matrix_rows is not first._matrix_rows
+    for idx in (first, second):
+        ref = _refill(idx)
+        assert idx.matrix.tobytes() == ref.matrix.tobytes()
+        assert idx.norms.tobytes() == ref.norms.tobytes()
+        _assert_lex_fresh(idx)
+        assert idx._rid_cache(IDS)[1].tolist() == ref._rid_cache(IDS)[1].tolist()
+        q = rng.standard_normal(DIM).tolist()
+        assert idx.query(q, 6, id_cols=IDS) == ref.query(q, 6, id_cols=IDS)
+        assert idx.hybrid_query(q, ["alpha", "beta"], 6, id_cols=IDS) == (
+            ref.hybrid_query(q, ["alpha", "beta"], 6, id_cols=IDS)
+        )
+    assert [p["path"] for p in first.payload[-4:]] == [
+        f"first/f{i}.{('py', 'md', 'txt')[i % 3]}" for i in range(4)
+    ]
+
+
+def _assert_rid_cache_fresh(idx: DriverMatrixIndex) -> None:
+    """The cache ``idx`` holds equals a fresh build, bit for bit."""
+    _, rid_rows, order, perm = idx._rids
+    ref = _refill(idx)
+    rids, ref_order = ref._rid_cache(IDS)
+    assert list(rid_rows.buf[: idx.n]) == list(rids)
+    assert order.dtype == ref_order.dtype
+    assert order.tobytes() == ref_order.tobytes()
+    assert perm.dtype == ref._rids[3].dtype
+    assert perm.tobytes() == ref._rids[3].tobytes()
+
+
+def test_extension_carries_the_rid_cache():
+    rng = np.random.default_rng(37)
+    idx = _base_index(rng, 30)
+    # stored copies of one rid: their ranks come from _rank_copies
+    idx.payload[7] = dict(idx.payload[3], content="a stored copy")
+    idx._rid_cache(IDS)
+    for w in range(3):
+        idx = _grow(idx, _docs(rng, f"w{w}", 5))
+        assert idx._rids is not None, "the rid cache was dropped"
+        _assert_rid_cache_fresh(idx)
+    # a new rid equal to a stored one: the cache is rebuilt lazily,
+    # and the rebuild ranks the copies by payload
+    dup = dict(_docs(rng, "w0", 1)[0], content="a re-push")
+    idx = _grow(idx, [dup])
+    assert idx._rids is None
+    idx._rid_cache(IDS)
+    _assert_rid_cache_fresh(idx)
+    # so does a batch holding one rid twice
+    twice = _docs(rng, "twice", 2)
+    twice[1]["chunk_index"] = twice[0]["chunk_index"]
+    twice[1]["path"] = twice[0]["path"]
+    assert _grow(idx, twice)._rids is None

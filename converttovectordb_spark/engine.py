@@ -37,8 +37,8 @@ from converttovectordb_spark.operators.stats import (
 from converttovectordb_spark.sources.chunker import chunk_embed
 from converttovectordb_spark.sources.repo_scan import (
     clone_repository,
-    count_repo_files,
     scan_repo_files,
+    whole_waves,
 )
 from converttovectordb_spark.sources.store import (
     DocumentStore,
@@ -141,9 +141,9 @@ class VectorEngine:
         ``replace=True`` upserts by file path (transactional store
         only): re-ingesting a changed repo replaces each file's old
         chunks via merge-on-read tombstones instead of duplicating
-        them — the incremental re-crawl story. The upsert reads its
-        tombstone key set back from the staged batch, so the
-        scan → chunk → embed lineage runs once here too.
+        them — the incremental re-crawl story. The write job observes
+        the tombstone key set, so a re-crawl, like an ingest, is one
+        Spark job in whole task waves (`repo_scan.whole_waves`).
 
         ``semantic_dedup=t`` drops batch rows whose nearest committed
         neighbor has cosine ≥ t BEFORE the write — dedup-on-arrival
@@ -257,7 +257,11 @@ class VectorEngine:
         obs_files = Observation()
         obs_chunks = Observation()
         embed_acc = self.spark.sparkContext.accumulator(0.0)
-        files = scan_repo_files(self.spark, repo_path).observe(
+        files = scan_repo_files(self.spark, repo_path)
+        # files_skipped counts the scan's own file index: no job and no
+        # file read, in one py4j call (`inputFiles()` fetches each path)
+        files_listed = len(files._jdf.inputFiles())
+        files = whole_waves(files).observe(
             obs_files, F.count(F.lit(1)).alias("files_processed")
         )
         docs = (
@@ -345,12 +349,6 @@ class VectorEngine:
                 rows_written = self.store.upsert(batch, key_cols=("path",))
             else:
                 rows_written = self.store.append(batch)
-            # files_skipped derives from a metadata-only listing: the
-            # scan prunes hidden/size/extension misses at the FILE
-            # INDEX (never opening them — the 100 TB contract), so
-            # counting them inline would force reads the filter exists
-            # to avoid.
-            files_listed = count_repo_files(self.spark, repo_path)
             files_processed = int(obs_files.get["files_processed"])
             self.last_ingest_metrics = {
                 "files_listed": files_listed,

@@ -16,6 +16,15 @@ os.walk is a single-threaded driver loop; here listing and reading
 parallelize across executors, which is the difference between 0.25 s
 for 715 files and hours at 100 TB.
 
+The ``files_skipped`` metric is counted from the scan's own file index
+(``DataFrame.inputFiles()``: no job, no file opened), so a 0-byte file
+is listed and counted as skipped, as the reference's walk counts it (a
+binaryFile row count, used before, yields no row for an empty file).
+Hadoop's listing drops dot- and underscore-prefixed names, so hidden
+files are never listed and never counted as skipped (the reference's
+walk sees and skips them; documented per SURVEY §7: at scale they
+should be invisible to the listing, not listed then skipped).
+
 Git clone (reference S1, repo_to_vector.py:122-164) stays a driver-side
 pre-step by design — cloning is not a data-parallel operation.
 """
@@ -68,29 +77,17 @@ def _relative_path(path_col, repo_path: str):
     ).otherwise(decoded)
 
 
-def count_repo_files(spark: SparkSession, repo_path: str) -> int:
-    """Total files under the tree — a metadata-only listing (column
-    pruning keeps `content` unread; binaryFile answers from file status).
-
-    Used for the A9 ``files_skipped`` metric: the scan itself prunes
-    hidden/over-size/wrong-extension files at the file index — by design
-    those files are never *opened* — so the skip count comes from this
-    cheap listing, not from forcing the ingest scan to read them.
-
-    Note: Hadoop's file index already drops dot-/underscore-prefixed
-    names during LISTING, so hidden files are never enumerated and
-    therefore never counted as skipped (divergence from the reference's
-    os.walk counters, which sees and skips them; documented per SURVEY
-    §7 — at scale you want them invisible to the listing, not listed
-    then skipped).
-    """
-    return (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(repo_path.rstrip("/"))
-        .select("path")
-        .count()
-    )
+def whole_waves(df: DataFrame) -> DataFrame:
+    """``df`` with its n input splits coalesced (no shuffle) to
+    n − (n mod c) tasks when n > c = ``defaultParallelism``, else
+    ``df`` itself: whole task waves. Spark's 4 MB per-file open cost
+    packs 200 small files into 7 splits, and on 4 cores the second
+    wave of 3 pays a whole extra round of Python-worker start-up; at
+    100 TB the rounding is noise. n comes from the physical plan (no
+    job: the splits come from the scan's own file index)."""
+    n = df._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+    c = df.sparkSession.sparkContext.defaultParallelism
+    return df.coalesce(n - n % c) if n > c else df
 
 
 def _is_hidden(path_col):

@@ -282,6 +282,103 @@ def test_upsert_reads_stores_with_keys_from_the_batch_lineage(spark, tmp_path):
     ) == ["a v1", "b v0"]
 
 
+
+def _upsert_with_distinct_key_set(store, docs, key_cols):
+    """An upsert whose key set is written from the batch DataFrame
+    (``docs.select(*key_cols).distinct()``), as stores were written
+    before the write job observed its keys."""
+    import uuid
+
+    staged = store._stage(docs)
+    keys_dir = os.path.join(store.path, store.DATA_DIR, uuid.uuid4().hex + "_keys")
+    docs.select(*key_cols).distinct().write.parquet(keys_dir)
+    store._publish(*staged, {"tombstone_keys": keys_dir, "key_cols": list(key_cols)})
+
+
+@pytest.mark.parametrize(
+    "key_cols, base, batches",
+    [
+        (  # a NULL path: the observed set drops it; it matches no row
+            ("path",),
+            [
+                ("a.py", ".py", 0, 1, "a v0"),
+                ("b.md", ".md", 0, 1, "b v0"),
+                (None, ".py", 0, 1, "null v0"),
+            ],
+            [
+                [
+                    ("a.py", ".py", 0, 2, "a0 v1"),
+                    ("a.py", ".py", 1, 2, "a1 v1"),
+                    (None, ".py", 0, 1, "null v1"),
+                ],
+                [(None, ".md", 0, 1, "null v2"), ("b.md", ".md", 0, 1, "b v2")],
+            ],
+        ),
+        (  # a two-column key, with a key repeated inside one batch
+            ("path", "chunk_index"),
+            [
+                ("a.py", ".py", 0, 2, "a0 v0"),
+                ("a.py", ".py", 1, 2, "a1 v0"),
+                ("b.md", ".md", 0, 1, "b v0"),
+            ],
+            [
+                [
+                    ("a.py", ".py", 1, 2, "a1 v1"),
+                    ("b.md", ".md", 0, 1, "b v1"),
+                    ("b.md", ".md", 0, 1, "b v1 again"),
+                ],
+                [("a.py", ".py", 0, 2, "a0 v2")],
+            ],
+        ),
+    ],
+    ids=["null_path", "two_column_key"],
+)
+def test_observed_key_set_answers_as_the_distinct_key_set(
+    spark, tmp_path, key_cols, base, batches
+):
+    """The key set the write job observes holds the keys of one
+    written from ``select(*key_cols).distinct()``, but for a NULL
+    key, and both stores load the same rows at the head and at every
+    version."""
+    from collections import Counter
+
+    v = [0.5, 0.5]
+
+    def docs(rows):
+        return _docs(spark, [r + (v, float(i)) for i, r in enumerate(rows)])
+
+    observed, distinct = (
+        TransactionalDocumentStore(
+            spark, str(tmp_path / name), partition_by=("extension",)
+        )
+        for name in ("observed", "distinct")
+    )
+    for store in (observed, distinct):
+        store.append(docs(base))
+    for rows in batches:
+        assert observed.upsert(docs(rows), key_cols=key_cols) == len(rows)
+        _upsert_with_distinct_key_set(distinct, docs(rows), key_cols)
+
+    def key_set(store, version):
+        kd = store._read_manifest(version)["tombstone_keys"]
+        return Counter(tuple(r) for r in spark.read.parquet(kd).collect())
+
+    def rows(store, version=None):
+        return Counter(
+            tuple(r)
+            for r in store.load(at_version=version)
+            .select("path", "extension", "chunk_index", "content")
+            .collect()
+        )
+
+    assert observed.version() == distinct.version() == len(batches)
+    for version in range(1, len(batches) + 1):
+        null_key = Counter({(None,): 1})
+        assert key_set(observed, version) == key_set(distinct, version) - null_key
+    for version in (None, *range(len(batches) + 1)):
+        assert rows(observed, version) == rows(distinct, version)
+    assert rows(observed) != rows(observed, 0)
+
 def test_stats_one_action_exact_for_mixed_extensions(spark, monkeypatch):
     """One path under two extensions, NULL extensions ('unknown'),
     NULL and empty paths and NULL content: the one-action roll-up

@@ -137,6 +137,23 @@ def test_ingest_metrics_observed(spark, repo_tree, tmp_path_factory):
     assert m["total_time"] > 0.0
 
 
+
+def test_ingest_lists_and_skips_an_empty_file(spark, repo_tree, tmp_path_factory):
+    """A 0-byte file is listed and counted as skipped, as the
+    reference's walk counts it (a binaryFile row count has no row for
+    an empty file)."""
+    open(os.path.join(repo_tree, "src", "empty.py"), "wb").close()
+    store_dir = tmp_path_factory.mktemp("empty_file_store")
+    eng = VectorEngine(
+        spark, str(store_dir / "store"), embedder=hash_embedder(32),
+        dim=32, chunk_size=500, overlap=100,
+    )
+    eng.ingest(repo_tree)
+    m = eng.last_ingest_metrics
+    assert m["files_listed"] == 6
+    assert m["files_processed"] == 3
+    assert m["files_skipped"] == 3
+
 def test_stats_runs_at_most_two_actions(spark, repo_tree, tmp_path_factory,
                                         monkeypatch):
     """Round-3 perf contract: VectorEngine.stats() fuses A1/A3/A4/A5

@@ -142,7 +142,8 @@ class VectorEngine:
         only): re-ingesting a changed repo replaces each file's old
         chunks via merge-on-read tombstones instead of duplicating
         them — the incremental re-crawl story. The write job observes
-        the tombstone key set, so a re-crawl, like an ingest, is one
+        the tombstone key set (up to about 2k files; a bigger tree reads
+        it back, see `upsert`), so a re-crawl, like an ingest, is one
         Spark job in whole task waves (`repo_scan.whole_waves`).
 
         ``semantic_dedup=t`` drops batch rows whose nearest committed
@@ -258,8 +259,8 @@ class VectorEngine:
         obs_chunks = Observation()
         embed_acc = self.spark.sparkContext.accumulator(0.0)
         files = scan_repo_files(self.spark, repo_path)
-        # files_skipped counts the scan's own file index: no job and no
-        # file read, in one py4j call (`inputFiles()` fetches each path)
+        # files_skipped counts the scan's own file index: no job, no
+        # file opened, one py4j call
         files_listed = len(files._jdf.inputFiles())
         files = whole_waves(files).observe(
             obs_files, F.count(F.lit(1)).alias("files_processed")

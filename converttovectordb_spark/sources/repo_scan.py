@@ -16,14 +16,12 @@ os.walk is a single-threaded driver loop; here listing and reading
 parallelize across executors, which is the difference between 0.25 s
 for 715 files and hours at 100 TB.
 
-The ``files_skipped`` metric is counted from the scan's own file index
-(``DataFrame.inputFiles()``: no job, no file opened), so a 0-byte file
-is listed and counted as skipped, as the reference's walk counts it (a
-binaryFile row count, used before, yields no row for an empty file).
-Hadoop's listing drops dot- and underscore-prefixed names, so hidden
-files are never listed and never counted as skipped (the reference's
-walk sees and skips them; documented per SURVEY §7: at scale they
-should be invisible to the listing, not listed then skipped).
+The ``files_skipped`` metric counts the scan's own file index
+(``inputFiles()``: no job, no file opened), so a 0-byte file is listed
+and skipped, as in the reference's walk; a binaryFile row count, used
+before, has no row for it. Hadoop's listing drops dot- and underscore-
+prefixed names, so hidden files are never listed nor counted (SURVEY
+§7: at scale they should be invisible to the listing, not skipped).
 
 Git clone (reference S1, repo_to_vector.py:122-164) stays a driver-side
 pre-step by design — cloning is not a data-parallel operation.

@@ -26,7 +26,7 @@ import time
 import uuid
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _APPEND_LOCKS: dict[str, threading.Lock] = {}
@@ -174,17 +174,12 @@ class DocumentStore:
                     _write_arrow(docs, self.path, self.partition_by)
             return docs.num_rows
 
-        from pyspark.sql import Observation
-
         if validate:
             docs = _valid_rows(docs)
         obs = Observation()
         docs = docs.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-        writer = docs.write.mode("append")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
         with _append_lock(self.path):
-            writer.parquet(self.path)
+            self._write(docs, self.path, "append")
             rows = int(obs.get["rows_written"])
             if rows == 0:
                 # a zero-row FIRST write leaves a dir holding only
@@ -202,10 +197,14 @@ class DocumentStore:
         return rows
 
     def overwrite(self, docs: DataFrame) -> None:
-        writer = docs.write.mode("overwrite")
+        self._write(docs, self.path)
+
+    def _write(self, docs: DataFrame, path: str, mode: str = "overwrite") -> None:
+        """One Spark job writing ``docs`` to ``path`` in the store's layout."""
+        writer = docs.write.mode(mode)
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
+        writer.parquet(path)
 
     def clear(self, *, backup: bool = True) -> None:
         """Drop the table; optional timestamped backup directory mirrors
@@ -299,6 +298,14 @@ class TransactionalDocumentStore(DocumentStore):
 
     MANIFEST_DIR = "_manifest"
     DATA_DIR = "data"
+    #: An upsert's write job gathers the keys of the first
+    #: OBSERVED_KEY_ROWS rows of each of its first OBSERVED_KEY_PARTITIONS
+    #: partitions (`_stage`); a batch past that grid reads its keys back
+    #: in two more jobs. Whole upsert, all keys gathered vs read back
+    #: (4-core VM, median of 3): 2 rows a key, 10k keys 383 vs 512 ms,
+    #: 30k 357 vs 470, 60k 562 vs 550; 8 rows a key, 15k keys 317 vs 410;
+    #: 100k keys 1,078 vs 817; 1M 8.8 vs 3.1 s. So it holds 65,536 rows.
+    OBSERVED_KEY_ROWS, OBSERVED_KEY_PARTITIONS = 1024, 64
 
     def __init__(
         self,
@@ -459,8 +466,9 @@ class TransactionalDocumentStore(DocumentStore):
         the batch schema diverges from the one recorded at version 0.
         A ``pyarrow.Table`` is written by the driver-side Arrow writer
         (`_write_arrow`); a DataFrame by one Spark job, whose row count
-        rides it as a `df.observe` metric; so do the distinct keys of
-        ``key_cols``, returned fourth (Rows, or values for one column).
+        rides it as a `df.observe` metric; with ``key_cols`` so do the
+        distinct keys, fourth (Rows, or values for one key column), or
+        None for a table or a batch past the ``OBSERVED_KEY_*`` grid.
 
         NEVER commit a zero-row batch: with partition_by the staged
         dir holds only _SUCCESS, and unioning it poisons every later
@@ -468,8 +476,6 @@ class TransactionalDocumentStore(DocumentStore):
         or empty streaming epoch used to brick the store permanently.
         Nothing to replay either: a replayed zero-row epoch
         re-produces zero rows."""
-        from pyspark.sql import Observation
-
         fingerprint = self._schema_fingerprint(docs)
         versions = self._versions()
         if versions:
@@ -484,22 +490,28 @@ class TransactionalDocumentStore(DocumentStore):
             if not docs.num_rows:
                 return None
             _write_arrow(docs, batch_dir, self.partition_by)
-            return batch_dir, docs.num_rows, fingerprint
+            return (batch_dir, docs.num_rows, fingerprint) + (None,) * bool(key_cols)
         obs = Observation()
         metrics = [F.count(F.lit(1)).alias("rows_written")]
         if key_cols:  # one key column is gathered bare: half a struct's cost
             key = F.struct(*key_cols) if len(key_cols) > 1 else F.col(key_cols[0])
-            metrics.append(F.collect_set(key).alias("keys"))
-        writer = docs.observe(obs, *metrics).write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(batch_dir)
+            # the grid, as a column: observe() leaves nondeterministic ids unseeded
+            row = F.monotonically_increasing_id() % (1 << 33)
+            kept = (F.spark_partition_id() < self.OBSERVED_KEY_PARTITIONS) & (
+                row < self.OBSERVED_KEY_ROWS
+            )
+            docs, kept = docs.withColumn("_key_kept", kept), F.col("_key_kept")
+            metrics.append(F.collect_set(F.when(kept, key)).alias("keys"))
+            metrics.append(F.count_if(~kept).alias("missed"))
+        self._write(docs.observe(obs, *metrics).drop("_key_kept"), batch_dir)
         got = obs.get
         if not got["rows_written"]:
             shutil.rmtree(batch_dir, ignore_errors=True)
             return None
         staged = batch_dir, int(got["rows_written"]), fingerprint
-        return staged + (got["keys"],) if key_cols else staged
+        if not key_cols:
+            return staged
+        return staged + (None if got["missed"] else got["keys"],)
 
     def _publish(
         self, batch_dir: str, rows: int, fingerprint: list, extra: dict
@@ -637,19 +649,13 @@ class TransactionalDocumentStore(DocumentStore):
 
         from functools import reduce
 
-        from pyspark.sql import Observation
-
         parts = [
             self.spark.read.parquet(ms[v]["batch_dir"]) for v in versions
         ]
         snapshot = reduce(lambda x, y: x.unionByName(y), parts)
         batch_dir = os.path.join(self.path, self.DATA_DIR, uuid.uuid4().hex)
         obs = Observation()
-        staged = snapshot.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = staged.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(batch_dir)
+        self._write(snapshot.observe(obs, F.count(F.lit(1)).alias("rows")), batch_dir)
         rows = int(obs.get["rows"])
         commit = {
             "batch_dir": batch_dir,
@@ -730,10 +736,11 @@ class TransactionalDocumentStore(DocumentStore):
         tombstone debt; `load(at_version=...)` still time-travels to
         the pre-upsert rows.
 
-        Scale shape: the batch is written by one Spark job, which also
-        observes its distinct key tuples (`_stage`); the driver writes
-        them as a tiny key parquet (`_write_arrow`, no job), and one
-        manifest publishes both. The read-side anti-filter is a
+        Scale shape: one Spark job writes the batch and, within the
+        ``OBSERVED_KEY_*`` grid, observes its distinct keys, which
+        the driver writes as a tiny key parquet (`_write_arrow`); a
+        bigger batch reads them back from the staged parquet. One
+        manifest publishes both; the read-side anti-filter is a
         broadcast join against accumulated LIVE tombstone keys
         (proportional to replaced files, not corpus rows) — the
         compaction cadence is what bounds it."""
@@ -754,22 +761,23 @@ class TransactionalDocumentStore(DocumentStore):
         staged = self._stage(docs, key_cols)
         if staged is None:
             return 0  # zero valid rows: no commit, no key set
-        # The write job observed the key set (one row per file on a
-        # re-crawl), so no second job reads it back. A bare column drops
-        # its NULL key, which matches no row. Whole upsert, observed vs
-        # a read-back of the staged parquet (distinct + a second write;
-        # 4-core VM, 8-char keys, 2 rows each, median of 3): 10k keys
-        # 349 vs 680 ms, 100k 877 vs 787 ms, 1M 6.8 vs 2.5 s; a source
-        # tree (under ~100k files) stays where the observed set holds.
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
         *staged, keys = staged
-        schema = to_arrow_schema(StructType([docs.schema[c] for c in key_cols]))
-        columns = zip(*keys) if len(key_cols) > 1 else [keys]
-        columns = [pa.array(c, f.type) for c, f in zip(columns, schema)]
+        if keys == []:  # a NULL key matches no row: nothing to tombstone
+            return self._publish(*staged, {})
         keys_dir = os.path.join(self.path, self.DATA_DIR, uuid.uuid4().hex + "_keys")
-        _write_arrow(pa.Table.from_arrays(columns, schema=schema), keys_dir, ())
+        if keys is None:  # past the grid: read the staged parquet (not
+            # `docs`, whose lineage would run again), key columns only
+            types = dict(staged[2])
+            keys = self._read(staged[0], [(c, types[c]) for c in key_cols])
+            keys.select(*key_cols).distinct().write.parquet(keys_dir)
+        else:
+            from pyspark.sql.pandas.types import to_arrow_schema
+            from pyspark.sql.types import StructType
+
+            schema = to_arrow_schema(StructType([docs.schema[c] for c in key_cols]))
+            columns = zip(*keys) if len(key_cols) > 1 else [keys]
+            columns = [pa.array(c, f.type) for c, f in zip(columns, schema)]
+            _write_arrow(pa.Table.from_arrays(columns, schema=schema), keys_dir, ())
         return self._publish(
             *staged, {"tombstone_keys": keys_dir, "key_cols": list(key_cols)}
         )
@@ -810,12 +818,6 @@ class TransactionalDocumentStore(DocumentStore):
         # break the union). Discovery still puts partition columns last.
         from functools import reduce
 
-        def read(path: str, fields) -> DataFrame:
-            ddl = ", ".join(
-                "`{}` {}".format(n.replace("`", "``"), t) for n, t in fields
-            )
-            return self.spark.read.schema(ddl).parquet(path)
-
         tomb = [
             (v, m["tombstone_keys"], m["key_cols"])
             for v, m in manifests.items()
@@ -833,7 +835,7 @@ class TransactionalDocumentStore(DocumentStore):
             # version would resurrect them past that tombstone.
             key_cols = tomb[0][2]
             parts = [
-                read(m["batch_dir"], m["schema"]).withColumn(
+                self._read(m["batch_dir"], m["schema"]).withColumn(
                     "_sv", F.lit(m.get("snapshot_of", v))
                 )
                 for v, m in manifests.items()
@@ -841,7 +843,7 @@ class TransactionalDocumentStore(DocumentStore):
             df = reduce(lambda x, y: x.unionByName(y), parts)
             types = dict(manifests[tomb[0][0]]["schema"])
             tparts = [
-                read(kd, [(c, types[c]) for c in key_cols]).withColumn(
+                self._read(kd, [(c, types[c]) for c in key_cols]).withColumn(
                     "_tv", F.lit(v)
                 )
                 for v, kd, _ in tomb
@@ -861,12 +863,17 @@ class TransactionalDocumentStore(DocumentStore):
             )
         else:
             parts = [
-                read(m["batch_dir"], m["schema"]) for m in manifests.values()
+                self._read(m["batch_dir"], m["schema"]) for m in manifests.values()
             ]
             df = reduce(lambda x, y: x.unionByName(y), parts)
         if require_embedding:
             df = df.filter(F.col("embedding").isNotNull())
         return df
+
+    def _read(self, path: str, fields) -> DataFrame:
+        """``path`` read with a manifest's ``(name, type)`` schema (see `load`)."""
+        ddl = ", ".join("`{}` {}".format(n.replace("`", "``"), t) for n, t in fields)
+        return self.spark.read.schema(ddl).parquet(path)
 
     def exists(self) -> bool:
         return bool(self._versions())
@@ -935,8 +942,6 @@ class TransactionalDocumentStore(DocumentStore):
         Returns the rows compacted."""
         import json
 
-        from pyspark.sql import Observation
-
         versions = self._versions()
         if not versions:
             return 0
@@ -953,11 +958,7 @@ class TransactionalDocumentStore(DocumentStore):
         snapshot = self.load(require_embedding=False, at_version=versions[-1])
         batch_dir = os.path.join(self.path, self.DATA_DIR, uuid.uuid4().hex)
         obs = Observation()
-        staged = snapshot.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = staged.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(batch_dir)
+        self._write(snapshot.observe(obs, F.count(F.lit(1)).alias("rows")), batch_dir)
         rows = int(obs.get["rows"])
         fingerprint = self._read_manifest(versions[0])["schema"]
         commit = {

@@ -312,6 +312,7 @@ def _upsert_with_distinct_key_set(store, docs, key_cols):
                     (None, ".py", 0, 1, "null v1"),
                 ],
                 [(None, ".md", 0, 1, "null v2"), ("b.md", ".md", 0, 1, "b v2")],
+                [(None, ".md", 0, 1, "null v3"), (None, ".py", 0, 1, "null v3")],
             ],
         ),
         (  # a two-column key, with a key repeated inside one batch
@@ -333,15 +334,19 @@ def _upsert_with_distinct_key_set(store, docs, key_cols):
     ],
     ids=["null_path", "two_column_key"],
 )
+@pytest.mark.parametrize("past_grid", [False, True], ids=["observed", "read_back"])
 def test_observed_key_set_answers_as_the_distinct_key_set(
-    spark, tmp_path, key_cols, base, batches
+    spark, tmp_path, monkeypatch, key_cols, base, batches, past_grid
 ):
     """The key set the write job observes holds the keys of one
     written from ``select(*key_cols).distinct()``, but for a NULL
     key, and both stores load the same rows at the head and at every
-    version."""
+    version; an all-NULL batch commits no key set. Past the
+    ``OBSERVED_KEY_*`` grid the keys are read back, NULL included."""
     from collections import Counter
 
+    if past_grid:
+        monkeypatch.setattr(TransactionalDocumentStore, "OBSERVED_KEY_ROWS", 0)
     v = [0.5, 0.5]
 
     def docs(rows):
@@ -360,7 +365,9 @@ def test_observed_key_set_answers_as_the_distinct_key_set(
         _upsert_with_distinct_key_set(distinct, docs(rows), key_cols)
 
     def key_set(store, version):
-        kd = store._read_manifest(version)["tombstone_keys"]
+        kd = store._read_manifest(version).get("tombstone_keys")
+        if kd is None:
+            return Counter()
         return Counter(tuple(r) for r in spark.read.parquet(kd).collect())
 
     def rows(store, version=None):
@@ -372,12 +379,52 @@ def test_observed_key_set_answers_as_the_distinct_key_set(
         )
 
     assert observed.version() == distinct.version() == len(batches)
+    null_key = Counter() if past_grid else Counter({(None,): 1})
     for version in range(1, len(batches) + 1):
-        null_key = Counter({(None,): 1})
         assert key_set(observed, version) == key_set(distinct, version) - null_key
     for version in (None, *range(len(batches) + 1)):
         assert rows(observed, version) == rows(distinct, version)
     assert rows(observed) != rows(observed, 0)
+
+
+def test_upsert_reads_the_keys_of_an_arrow_table_back(spark, tmp_path):
+    """A ``pyarrow.Table`` batch is written from the driver, so no job
+    observes its keys: they are read back from the staged parquet."""
+    import pyarrow as pa
+
+    store = TransactionalDocumentStore(
+        spark, str(tmp_path / "store"), partition_by=("extension",)
+    )
+    v = [0.5, 0.5]
+    store.append(
+        _docs(
+            spark,
+            [
+                ("a.py", ".py", 0, 1, "a v0", v, 0.0),
+                ("b.md", ".md", 0, 1, "b v0", v, 0.0),
+            ],
+        )
+    )
+    schema = pa.schema(
+        [
+            ("path", pa.string()),
+            ("extension", pa.string()),
+            ("chunk_index", pa.int32()),
+            ("total_chunks", pa.int32()),
+            ("content", pa.string()),
+            ("embedding", pa.list_(pa.float32())),
+            ("timestamp", pa.float64()),
+        ]
+    )
+    row = dict(zip(schema.names, ("a.py", ".py", 0, 1, "a v1", v, 1.0)))
+    assert store.upsert(pa.Table.from_pylist([row, row], schema)) == 2
+    kd = store._read_manifest(store.version())["tombstone_keys"]
+    assert [tuple(r) for r in spark.read.parquet(kd).collect()] == [("a.py",)]
+    assert sorted(r.content for r in store.load().collect()) == [
+        "a v1",
+        "a v1",
+        "b v0",
+    ]
 
 def test_stats_one_action_exact_for_mixed_extensions(spark, monkeypatch):
     """One path under two extensions, NULL extensions ('unknown'),

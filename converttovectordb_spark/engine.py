@@ -26,7 +26,8 @@ from converttovectordb_spark.embeddings import DEFAULT_DIM, hash_embedder
 from converttovectordb_spark.operators.search import (
     DEFAULT_SCORE_THRESHOLD,
     cosine_scores,
-    knn_topk,
+    knn_rank,
+    take_order_rank,
     truncate_content,
     validate_top_k,
 )
@@ -60,17 +61,6 @@ def _row_id():
     joins across the store, the IVF index, and the dedup paths all key
     on this expression and must stay byte-identical."""
     return F.concat_ws("#", F.col("path"), F.col("chunk_index"))
-
-
-def _ranked_one(df: DataFrame, score_col: str, rank_col: str) -> DataFrame:
-    """One query's already-cut candidates → (query_index=0, _rid,
-    rank_col), ranked by (score_col desc, _rid asc)."""
-    w = Window.orderBy(F.col(score_col).desc(), F.col("_rid").asc())
-    return df.select(
-        F.lit(0).alias("query_index"),
-        "_rid",
-        F.row_number().over(w).alias(rank_col),
-    )
 
 
 class VectorEngine:
@@ -1211,18 +1201,58 @@ class VectorEngine:
             .drop("_rn_dedup")
         )
 
-    def _empty_results(self) -> DataFrame:
-        """Result-shaped empty DataFrame — the reference returns empty
-        results (not an error) for a never-ingested database
-        (mock_vector_db_api.py query short-circuit)."""
-        from pyspark.sql.types import DoubleType, StructField, StructType
+    def _corpus(
+        self, corpus: DataFrame | None = None, at_version: int | None = None
+    ) -> DataFrame:
+        """The corpus a search door ranks: ``corpus`` when given, else
+        the store as of ``at_version``. An absent store reads as zero
+        rows in the store's column order (partition columns last), so
+        each door answers a never-ingested database from its populated
+        plan: empty results, not an error (mock_vector_db_api.py query
+        short-circuit), in the columns a populated store gives."""
+        from pyspark.sql.types import StructType
 
         from converttovectordb_spark.schema import DOCUMENTS_SCHEMA
 
-        fields = [
-            f for f in DOCUMENTS_SCHEMA.fields if f.name != "embedding"
-        ] + [StructField("score", DoubleType(), True)]
-        return self.spark.createDataFrame([], StructType(fields))
+        if corpus is not None:
+            return corpus
+        if self.store.exists():
+            return self.load_corpus(at_version)
+        part = list(self.store.partition_by)
+        names = [n for n in DOCUMENTS_SCHEMA.names if n not in part] + part
+        return self.spark.createDataFrame(
+            [], StructType([DOCUMENTS_SCHEMA[n] for n in names])
+        )
+
+    def _embed(self, texts: list) -> list:
+        """Query texts → float64 vectors, one embedder call."""
+        return np.asarray(self.embedder(list(texts)), dtype=np.float64).tolist()
+
+    def _search_vectors(
+        self,
+        query_vectors: list,
+        top_k: int,
+        *,
+        score_threshold: float | None,
+        carry_cols: list[str] | None = None,
+        corpus: DataFrame | None = None,
+        at_version: int | None = None,
+    ) -> DataFrame:
+        """(query_index, *display, score, rank) for each query vector:
+        `knn_rank` over `_corpus`, ties broken by (path, chunk_index)
+        ascending. The one body of the KNN verb behind `search`,
+        `search_vector` and `search_batch`."""
+        if corpus is not None and at_version is not None:
+            raise ValueError("corpus and at_version are mutually exclusive")
+        return knn_rank(
+            self._corpus(corpus, at_version),
+            query_vectors,
+            validate_top_k(top_k),
+            id_cols=["path", "chunk_index"],
+            carry_cols=carry_cols,
+            score_threshold=score_threshold,
+            expected_dim=self.dim,  # engine knows its dim → zero-job Q5 guard
+        )
 
     # -- query -----------------------------------------------------------
     def load_corpus(self, at_version: int | None = None) -> DataFrame:
@@ -1347,30 +1377,23 @@ class VectorEngine:
         corpus: DataFrame | None = None,
     ) -> DataFrame:
         """Encode the query driver-side (one string), then the
-        broadcast-scan top-k with threshold-after-limit semantics.
+        single-probe top-k with threshold-after-limit semantics: a
+        batch of one through `_search_vectors`.
 
         ``truncate_chars`` applies the reference's display truncation
         (T6, query_vector_db.py:204-206) to result content.
         ``at_version`` searches a time-travel snapshot of the store.
         ``corpus`` substitutes an already-loaded (possibly cached /
         prenormed — knn_topk auto-detects ``_emb_norm``) corpus
-        DataFrame for the store read: the serving facade passes its
-        warm cache here so the text door never pays a second
-        store.load(). Mutually exclusive with ``at_version``."""
-        if corpus is not None and at_version is not None:
-            raise ValueError("corpus and at_version are mutually exclusive")
-        if corpus is None and not self.store.exists():
-            return self._empty_results()
-        qv = self.embedder([query_text])
-        qv = np.asarray(qv, dtype=np.float64).reshape(-1).tolist()
-        out = knn_topk(
-            corpus if corpus is not None else self.load_corpus(at_version),
-            qv,
-            validate_top_k(top_k),
-            id_cols=["path", "chunk_index"],
+        DataFrame for the store read. Mutually exclusive with
+        ``at_version``."""
+        out = self._search_vectors(
+            self._embed([query_text]),
+            top_k,
             score_threshold=DEFAULT_SCORE_THRESHOLD,
-            expected_dim=self.dim,  # engine knows its dim → zero-job Q5 guard
-        )
+            corpus=corpus,
+            at_version=at_version,
+        ).drop("query_index", "rank")
         if truncate_chars is not None:
             out = truncate_content(out, max_chars=truncate_chars)
         return out
@@ -1427,7 +1450,7 @@ class VectorEngine:
         """Two-stage diverse retrieval for Q query texts — the one
         implementation behind `search_diverse` (a batch of one) and
         /diverse_batch. ONE embedder call for all texts, ONE
-        `knn_join_blas` pass fetches every query's relevance
+        `knn_rank` pass fetches every query's relevance
         top-``fetch_k`` (the only stage that touches the corpus), then
         `mmr_rerank` (λ=``mmr_lambda``) runs the per-query greedy loops
         as parallel Arrow groups over those bounded candidate sets.
@@ -1455,10 +1478,7 @@ class VectorEngine:
         truncation dial on that indexed stage; on the brute stage they
         raise."""
         from converttovectordb_spark.functions.vector import NORM_COL
-        from converttovectordb_spark.operators.search import (
-            knn_join_blas,
-            mmr_rerank,
-        )
+        from converttovectordb_spark.operators.search import mmr_rerank
 
         if not 0.0 <= mmr_lambda <= 1.0:
             raise ValueError(
@@ -1474,29 +1494,10 @@ class VectorEngine:
                 "brute candidate stage scores full-width"
             )
         top_k = validate_top_k(top_k)
-        if not self.store.exists():
-            empty = (
-                self._empty_results()
-                .withColumn("query_index", F.lit(None).cast("int"))
-                .withColumn("mmr", F.lit(None).cast("double"))
-                .withColumn("mmr_rank", F.lit(None).cast("int"))
-            )
-            display = [
-                c for c in empty.columns
-                if c not in ("query_index", "score", "mmr", "mmr_rank")
-            ]
-            return empty.select(
-                "query_index", "score", "mmr", "mmr_rank", *display
-            )
-        qv = np.asarray(
-            self.embedder(list(query_texts)), dtype=np.float64
-        )
-        query_rows = [
-            (i, [float(x) for x in v]) for i, v in enumerate(qv)
-        ]
-        if use_index:
+        qvs = self._embed(query_texts)
+        if use_index and self.store.exists():
             queries_df = self.spark.createDataFrame(
-                query_rows, "query_index int, query_vec array<double>"
+                list(enumerate(qvs)), "query_index int, query_vec array<double>"
             )
             index = self._require_index(allow_stale=allow_stale)
             # cluster-pruned candidate fetch; embedding joined back for
@@ -1527,24 +1528,16 @@ class VectorEngine:
                 .select("query_index", "_rid", "score", "embedding")
             )
         else:
-            base = corpus if corpus is not None else self.load_corpus()
-            if NORM_COL in base.columns:
-                base = base.drop(NORM_COL)
-            corpus_df = base.withColumn("_rid", _row_id())
-            # BLAS bulk scorer, not knn_join: this candidate stage has
-            # no SQL oracle, and the interpreted per-pair fold measured
-            # 11.2 s at Q=16 × N=13,515 where one matmul per Arrow
-            # chunk is milliseconds (knn_join_blas docstring)
-            cands = knn_join_blas(
-                query_rows,
-                corpus_df.select(
-                    "_rid",
-                    F.col("embedding").cast("array<double>").alias("embedding"),
-                ),
-                top_k=max(int(fetch_k), top_k),
-                query_id_col="query_index",
+            # an absent store ranks zero rows through this stage
+            corpus_df = self._corpus(corpus).withColumn("_rid", _row_id())
+            cands = knn_rank(
+                corpus_df,
+                qvs,
+                max(int(fetch_k), top_k),
+                id_cols=["_rid"],
                 carry_cols=["_rid", "embedding"],
-                order_cols=["_rid"],
+                score_threshold=None,
+                expected_dim=self.dim,
             )
         # collapse duplicate-rid candidates DETERMINISTICALLY (best
         # score wins) before the rerank: mmr_rerank's per-group dict
@@ -1569,7 +1562,7 @@ class VectorEngine:
         )
         joined = picked.filter(
             F.col("score") >= DEFAULT_SCORE_THRESHOLD
-        ).join(corpus_df.drop("embedding", "score"), on="_rid")
+        ).join(corpus_df.drop("embedding", "score", NORM_COL), on="_rid")
         # bounded post-join dedupe, per (query, identity): a plain
         # store can hold repeated (path, chunk_index) rows (blind
         # re-ingest) and the display join fans each pick out per copy
@@ -1650,19 +1643,19 @@ class VectorEngine:
         identifiers the embedding may smooth away; cosine catches
         paraphrase BM25 cannot see.
 
-        Cost shape: ONE embedder call. At Q=1 the arms are the JVM
-        `knn_topk` fold and `bm25_scores`, and the arms and the fused
-        list are cut by TakeOrderedAndProject; for Q>1 ONE corpus pass
-        scores every query's semantic arm (`knn_join_blas`, one matmul
-        per Arrow chunk instead of Q fold scans), ONE corpus tokenize
-        serves all Q BM25 arms (`bm25_scores_batch`, postings filtered
-        to the term union before the shuffle) and per-query windows
-        cut. The batch kernels' Python worker and the per-query
-        windows cost more than they save for one query (measured at
-        13,515 × 384: 558 vs 340 ms semantic, 938 vs 649 ms lexical).
-        Both shapes produce the same ranks under the same (score desc,
-        _rid asc) tie-break; scores agree to ~1e-9 (float summation
-        order only).
+        Cost shape: ONE embedder call. The semantic arm is `knn_rank`
+        (the JVM `knn_topk` fold at Q=1; for Q>1 ONE corpus pass,
+        `knn_join_blas`, one matmul per Arrow chunk instead of Q fold
+        scans). At Q=1 the lexical arm is `bm25_scores`, and it and
+        the fused list are cut by TakeOrderedAndProject; for Q>1 ONE
+        corpus tokenize serves all Q BM25 arms (`bm25_scores_batch`,
+        postings filtered to the term union before the shuffle) and
+        per-query windows cut. The batch kernels' Python worker and
+        the per-query windows cost more than they save for one query
+        (measured at 13,515 × 384: 558 vs 340 ms semantic, 938 vs
+        649 ms lexical). Both shapes produce the same ranks under the
+        same (score desc, _rid asc) tie-break; scores agree to ~1e-9
+        (float summation order only).
 
         ``corpus`` substitutes an already-loaded corpus DataFrame for
         the store read (the serving facade's warm cache) — both arms
@@ -1684,7 +1677,6 @@ class VectorEngine:
         from converttovectordb_spark.operators.search import (
             bm25_scores,
             bm25_scores_batch,
-            knn_join_blas,
         )
 
         if not query_texts:
@@ -1698,17 +1690,9 @@ class VectorEngine:
             )
         top_k = validate_top_k(top_k)
         if corpus is None and not self.store.exists():
-            # same schema as the non-empty path (sem_rank/lex_rank/rrf
-            # included) so callers that branch on columns or union
-            # results never see a store-state-dependent shape
-            return (
-                self._empty_results()
-                .withColumn("query_index", F.lit(None).cast("int"))
-                .withColumn("sem_rank", F.lit(None).cast("int"))
-                .withColumn("lex_rank", F.lit(None).cast("int"))
-                .withColumn("rrf", F.lit(None).cast("double"))
-                .drop("score")
-            )
+            # an absent store has no index: its zero rows rank through
+            # the brute arms
+            use_index = use_lex_index = False
         single = len(query_texts) == 1
         ivf = (
             self._require_index(allow_stale=allow_stale)
@@ -1717,18 +1701,11 @@ class VectorEngine:
         )
         docs = None
         if not (use_index and use_lex_index):
-            docs = (
-                corpus if corpus is not None else self.store.load()
-            ).withColumn("_rid", _row_id())
-        qv = np.asarray(
-            self.embedder(list(query_texts)), dtype=np.float64
-        )
-        query_rows = [
-            (i, [float(x) for x in v]) for i, v in enumerate(qv)
-        ]
+            docs = self._corpus(corpus).withColumn("_rid", _row_id())
+        qvs = self._embed(query_texts)
         if ivf is not None:
             queries_df = self.spark.createDataFrame(
-                query_rows, "query_index int, query_vec array<double>"
+                list(enumerate(qvs)), "query_index int, query_vec array<double>"
             )
             # one probe pass + one pruned scan serves every query;
             # index.search's rank is (score desc, _row_id asc) — the
@@ -1746,33 +1723,16 @@ class VectorEngine:
                 F.col("_row_id").alias("_rid"),
                 F.col("rank").alias("sem_rank"),
             )
-        elif single:
-            sem = knn_topk(
+        else:
+            sem = knn_rank(
                 docs,
-                query_rows[0][1],
+                qvs,
                 validate_top_k(candidates),
                 id_cols=["_rid"],
-                score_threshold=-2.0,  # fusion wants ranks, not a cutoff
-                expected_dim=self.dim,
-            )
-            sem = _ranked_one(sem, "score", "sem_rank")
-        else:
-            # knn_join_blas ranks by (score desc, order_cols asc)
-            sem = knn_join_blas(
-                query_rows,
-                docs.select(
-                    "_rid",
-                    F.col("embedding")
-                    .cast("array<double>")
-                    .alias("embedding"),
-                ),
-                top_k=validate_top_k(candidates),
-                query_id_col="query_index",
                 carry_cols=["_rid"],
-                order_cols=["_rid"],
-            ).select(
-                "query_index", "_rid", F.col("rank").alias("sem_rank")
-            )
+                score_threshold=None,  # fusion wants ranks, not a cutoff
+                expected_dim=self.dim,
+            ).select("query_index", "_rid", F.col("rank").alias("sem_rank"))
         term_lists = [
             [t for t in q.lower().split() if t] for q in query_texts
         ]
@@ -1791,11 +1751,14 @@ class VectorEngine:
                     docs, term_lists[0], id_col="_rid",
                     text_col="content", lowercase=True,
                 )
-            lex = _ranked_one(
+            lex = (
                 lex.orderBy(F.col("bm25").desc(), F.col("_rid").asc())
-                .limit(candidates),
-                "bm25",
-                "lex_rank",
+                .limit(candidates)
+                .select(
+                    F.lit(0).alias("query_index"),
+                    "_rid",
+                    take_order_rank().alias("lex_rank"),
+                )
             )
         else:
             # one corpus tokenize (or one postings probe over the
@@ -1907,9 +1870,9 @@ class VectorEngine:
         """Many-queries-at-once search — the join-shaped bulk operator
         SURVEY §7 phase 4 prescribes (bulk paths are where Spark wins;
         single-query latency is the serving tiers' job). All query
-        texts embed in ONE embedder call, ship as a broadcast side,
-        and the corpus streams through a single join stage with no
-        shuffle (`operators/search.knn_join`). Returns
+        texts embed in ONE embedder call and rank through
+        `_search_vectors` (`knn_rank`: the single-probe plan for one
+        text, one BLAS pass over the corpus for Q>1). Returns
         (query_index, query_text, path, chunk_index, content, score,
         rank) — `query_index` is the position in ``query_texts``.
 
@@ -1924,10 +1887,8 @@ class VectorEngine:
         truncation dial on that indexed path (single/batch symmetry
         with `search_indexed` — same prefix-score→rerank plan, same
         validation); requesting the dial on the brute path raises —
-        its BLAS kernel is full-width by design (knn_join_blas), and a
-        silent full-dim answer would misreport the dial as turned."""
-        from converttovectordb_spark.operators.search import knn_join_blas
-
+        its batch kernel is full-width by design (knn_join_blas), and
+        a silent full-dim answer would misreport the dial as turned."""
         if not query_texts:
             raise ValueError("query_texts must be non-empty")
         if (mrl_dim is not None or mrl_shortlist is not None) and (
@@ -1937,30 +1898,14 @@ class VectorEngine:
                 "mrl_dim/mrl_shortlist require use_index=True — the "
                 "brute batch kernel scores full-width"
             )
-        if not self.store.exists():
-            return (
-                self.spark.createDataFrame(
-                    [], "query_index int, query_text string"
-                )
-                .join(self._empty_results(), how="cross")
-                .withColumn("rank", F.lit(None).cast("int"))
-                .select(
-                    "query_index", "query_text", "path", "chunk_index",
-                    "content", "score", "rank",
-                )
-            )
-        vecs = np.asarray(self.embedder(list(query_texts)), dtype=np.float64)
-        queries = self.spark.createDataFrame(
-            [
-                (i, t, vecs[i].reshape(-1).tolist())
-                for i, t in enumerate(query_texts)
-            ],
-            "query_index int, query_text string, query_vec array<double>",
-        )
-        if use_index:
+        vecs = self._embed(query_texts)
+        if use_index and self.store.exists():
             index = self._require_index(allow_stale=allow_stale)
             hits = index.search(
-                queries.drop("query_text"),
+                self.spark.createDataFrame(
+                    list(enumerate(vecs)),
+                    "query_index int, query_vec array<double>",
+                ),
                 top_k=validate_top_k(top_k),
                 nprobe=nprobe,
                 query_id_col="query_index",
@@ -1973,46 +1918,29 @@ class VectorEngine:
             # _row_id uniqueness is enforced at index-write time
             # (build/heal route through _dedup_row_ids), so this
             # join-back cannot fan out
-            docs = index.corpus().drop("cluster_id", "embedding")
-            return (
-                hits.join(docs, on="_row_id")
-                .join(
-                    F.broadcast(queries.drop("query_vec")),
-                    on="query_index",
-                )
-                .select(
-                    "query_index", "query_text", "path", "chunk_index",
-                    "content", "score", "rank",
-                )
-                .orderBy(F.col("query_index").asc(), F.col("rank").asc())
+            hits = hits.join(
+                index.corpus().drop("cluster_id", "embedding"), on="_row_id"
             )
-        # payload CARRIED through the scoring, never joined back on the
-        # identity: a blind re-push's duplicate (path, chunk_index)
-        # copies would fan each hit out across every same-id copy,
-        # pairing one copy's score with another's content (the same
-        # fix the REST batch door carries). BLAS bulk scorer — this
-        # facade verb has no SQL oracle, and the interpreted per-pair
-        # fold costs ~0.9 ms/pair-core (knn_join_blas docstring).
-        hits = knn_join_blas(
-            [
-                (i, vecs[i].reshape(-1).tolist())
-                for i in range(len(query_texts))
-            ],
-            self.store.load(),
-            validate_top_k(top_k),
-            query_id_col="query_index",
-            score_threshold=score_threshold,
-            carry_cols=["path", "chunk_index", "content"],
-            order_cols=["path", "chunk_index"],
-        )
-        return (
-            hits.join(F.broadcast(queries.drop("query_vec")), on="query_index")
-            .select(
-                "query_index", "query_text", "path", "chunk_index",
-                "content", "score", "rank",
+        else:
+            # payload CARRIED through the scoring, never joined back on
+            # the identity: a blind re-push's duplicate (path,
+            # chunk_index) copies would fan each hit out across every
+            # same-id copy, pairing one copy's score with another's
+            # content (the same fix the REST batch door carries)
+            hits = self._search_vectors(
+                vecs,
+                top_k,
+                score_threshold=score_threshold,
+                carry_cols=["path", "chunk_index", "content"],
             )
-            .orderBy(F.col("query_index").asc(), F.col("rank").asc())
-        )
+        # the texts ride the plan as a literal array: a broadcast join
+        # of them costs a Spark job of its own (~250 ms per call)
+        texts = F.array(*[F.lit(t) for t in query_texts])
+        return hits.select(
+            "query_index",
+            texts[F.col("query_index")].alias("query_text"),
+            "path", "chunk_index", "content", "score", "rank",
+        ).orderBy(F.col("query_index").asc(), F.col("rank").asc())
 
     def search_vector(
         self,
@@ -2021,15 +1949,14 @@ class VectorEngine:
         *,
         at_version: int | None = None,
     ) -> DataFrame:
-        if not self.store.exists():
-            return self._empty_results()
-        return knn_topk(
-            self.load_corpus(at_version),
-            query_vector,
-            validate_top_k(top_k),
-            id_cols=["path", "chunk_index"],
-            expected_dim=self.dim,
-        )
+        """`search` for a caller-embedded vector: a batch of one
+        through `_search_vectors`, threshold 0.1 after the limit."""
+        return self._search_vectors(
+            [query_vector],
+            top_k,
+            score_threshold=DEFAULT_SCORE_THRESHOLD,
+            at_version=at_version,
+        ).drop("query_index", "rank")
 
     # -- ANN index -------------------------------------------------------
     def build_index(

@@ -122,7 +122,7 @@ def knn_topk(
     top_k: int = DEFAULT_TOP_K,
     *,
     embedding_col: str = "embedding",
-    score_threshold: float = DEFAULT_SCORE_THRESHOLD,
+    score_threshold: float | None = DEFAULT_SCORE_THRESHOLD,
     id_cols: list[str] | None = None,
     drop_embedding: bool = True,
     expected_dim: int | None = None,
@@ -130,7 +130,8 @@ def knn_topk(
     mrl_shortlist: int | None = None,
 ) -> DataFrame:
     """Single-probe exact KNN: score every row, keep top-k, then apply
-    the score threshold (threshold-AFTER-limit, reference Q4).
+    the score threshold (threshold-AFTER-limit, reference Q4; ``None``
+    keeps the whole top-k).
 
     ``mrl_dim=d'`` turns the Matryoshka truncation dial (the
     `IVFIndex.search` / `DriverMatrixIndex.query` contract, brute-scan
@@ -234,12 +235,11 @@ def knn_topk(
     order: list[Column] = [F.col("score").desc()]
     for c in id_cols or []:
         order.append(F.col(c).asc())
-    return (
-        scored.orderBy(*order)
-        .limit(top_k)
+    out = scored.orderBy(*order).limit(top_k)
+    if score_threshold is not None:
         # Threshold AFTER limit — observable reference behavior (Q4).
-        .filter(F.col("score") >= score_threshold)
-    )
+        out = out.filter(F.col("score") >= score_threshold)
+    return out
 
 
 def bm25_scores(
@@ -618,6 +618,98 @@ def knn_join_blas(
     if score_threshold is not None:
         out = out.filter(F.col("score") >= score_threshold)
     return out
+
+
+def take_order_rank() -> Column:
+    """A 1-based rank from row position, for a plan whose last cut is
+    ``orderBy(...).limit(k)`` (TakeOrderedAndProject), optionally
+    filtered after it: that operator returns ONE partition holding its
+    rows in sort order, so position + 1 is the rank. A row_number
+    window would have no partition to key on (a literal query index is
+    folded away), and Spark logs a single-partition warning for every
+    such window it plans."""
+    return (F.monotonically_increasing_id() + 1).cast("int")
+
+
+def knn_rank(
+    docs: DataFrame,
+    query_vectors: list,
+    top_k: int = DEFAULT_TOP_K,
+    *,
+    id_cols: list[str],
+    carry_cols: list[str] | None = None,
+    score_threshold: float | None = DEFAULT_SCORE_THRESHOLD,
+    expected_dim: int | None = None,
+    mrl_dim: int | None = None,
+    mrl_shortlist: int | None = None,
+) -> DataFrame:
+    """Exact KNN for Q query vectors → (query_index, *carry_cols,
+    score, rank): the one scorer behind every brute search door,
+    single and batch, engine and REST. ``query_index`` is a vector's
+    position in ``query_vectors``; ``rank`` orders (score desc,
+    ``id_cols`` asc) within a query; the threshold applies AFTER the
+    top-k cut (reference Q4; ``None`` keeps the whole top-k).
+    ``carry_cols`` (default: every column but the embedding and the
+    serving cache's norm) ride the row that scored and must hold
+    ``id_cols``.
+
+    The only place that picks a kernel from Q. At Q=1 it is
+    `knn_topk` (scan → score → TakeOrderedAndProject, with its
+    Matryoshka prefix arm ``mrl_dim``/``mrl_shortlist``): one query
+    pays no Python worker (one vector on /query_batch over the warm
+    13,515 × 384 df-tier cache: 457 ms median through the BLAS kernel,
+    260 ms through this plan; 20 interleaved calls, 4-core VM). For
+    Q>1 it is `knn_join_blas`, one matmul per Arrow chunk for all Q
+    instead of Q scans; that kernel scores full width, so a dial there
+    is a ValueError rather than a silently undialled answer. The two
+    kernels' scores agree to ~1e-9 (summation order only)."""
+    from converttovectordb_spark.functions.vector import NORM_COL
+
+    carry = list(
+        carry_cols
+        if carry_cols is not None
+        else [c for c in docs.columns if c not in ("embedding", NORM_COL)]
+    )
+    if expected_dim is not None:
+        for v in query_vectors:
+            if len(v) != expected_dim:
+                raise ValueError(
+                    f"query dimension {len(v)} != stored dimension "
+                    f"{expected_dim}"
+                )
+    if len(query_vectors) == 1:
+        hits = knn_topk(
+            docs,
+            query_vectors[0],
+            top_k,
+            score_threshold=score_threshold,
+            id_cols=id_cols,
+            drop_embedding="embedding" not in carry,
+            expected_dim=expected_dim,
+            mrl_dim=mrl_dim,
+            mrl_shortlist=mrl_shortlist,
+        )
+        return hits.select(
+            F.lit(0).alias("query_index"),
+            *carry,
+            "score",
+            take_order_rank().alias("rank"),
+        )
+    if mrl_dim is not None or mrl_shortlist is not None:
+        raise ValueError(
+            "mrl_dim scores one query per call here; a batch of "
+            f"{len(query_vectors)} needs the driver matrix tier or the "
+            "IVF index (the batch kernel scores full width)"
+        )
+    return knn_join_blas(
+        list(enumerate(query_vectors)),
+        docs,
+        top_k,
+        query_id_col="query_index",
+        carry_cols=carry,
+        order_cols=id_cols,
+        score_threshold=score_threshold,
+    ).select("query_index", *carry, "score", "rank")
 
 
 def ivf_knn_join(

@@ -109,15 +109,6 @@ def _embedding_rows(column, dim: int):
     return fixed.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
 
 
-def _rows_to_json(rows) -> list[dict]:
-    out = []
-    for r in rows:
-        d = r.asDict(recursive=True)
-        d.pop("embedding", None)  # T5: never ship embeddings back
-        out.append(d)
-    return out
-
-
 class VectorDBApi:
     """The endpoint logic, separated from HTTP plumbing so tests can
     call it directly and alternative transports can reuse it."""
@@ -656,15 +647,11 @@ class VectorDBApi:
         )
 
     def _serve_bits(
-        self, vectors, top_k: int, hamming_shortlist: int, start: float,
-        *, batch: bool,
+        self, vectors, top_k: int, hamming_shortlist: int, start: float
     ) -> dict:
-        """ONE dispatch for both hamming-dialed doors past the matrix
-        budget (/query and /query_batch used to carry near-identical
-        copies of this block — the select_among lesson, server
-        edition): admission/fill errors surface from `_bits_handle`,
-        a mid-request invalidation maps to a retryable 503, dial
-        misuse to a 400."""
+        """The hamming-dialed KNN past the matrix budget: admission/fill
+        errors surface from `_bits_handle`, a mid-request invalidation
+        maps to a retryable 503, dial misuse to a 400."""
         from converttovectordb_spark.operators.serving import (
             BitsTierInvalidated,
             point_query_mode,
@@ -673,20 +660,12 @@ class VectorDBApi:
         bits = self._bits_handle()
         try:
             with point_query_mode(self.engine.spark):
-                if batch:
-                    results = bits.query_batch(
-                        vectors,
-                        top_k,
-                        id_cols=["path", "chunk_index"],
-                        hamming_shortlist=hamming_shortlist,
-                    )
-                else:
-                    results = bits.query(
-                        vectors,
-                        top_k,
-                        id_cols=["path", "chunk_index"],
-                        hamming_shortlist=hamming_shortlist,
-                    )
+                results = bits.query_batch(
+                    vectors,
+                    top_k,
+                    id_cols=["path", "chunk_index"],
+                    hamming_shortlist=hamming_shortlist,
+                )
         except BitsTierInvalidated as e:
             raise _ApiError(503, str(e))
         except ValueError as e:
@@ -714,23 +693,15 @@ class VectorDBApi:
             )
         return vec
 
-    def _snapshot(self, version, hamming_shortlist, *, batch_mrl_dim=None):
+    def _snapshot(self, version, hamming_shortlist):
         """Time travel: the corpus as of commit ``version``. It
         bypasses the warm cache — snapshots are arbitrary and rare, and
         caching every requested version would let history reads evict
-        the serving corpus. Snapshot reads serve distributed, so a dial
-        only an in-memory tier has is a 400, never a silently
-        undialled answer: the Hamming arm always, and ``mrl_dim`` on
-        /query_batch (``batch_mrl_dim``), whose distributed kernel has
-        no prefix arm."""
+        the serving corpus. Snapshot reads serve distributed, so the
+        Hamming dial, which only an in-memory tier has, is a 400, never
+        a silently undialled answer."""
         if not isinstance(version, int) or isinstance(version, bool):
             raise _ApiError(400, "version must be an integer")
-        if batch_mrl_dim is not None:
-            raise _ApiError(
-                400,
-                "mrl_dim on /query_batch requires the matrix "
-                "serving tier; time-travel reads serve distributed",
-            )
         if hamming_shortlist is not None:
             raise _ApiError(
                 400,
@@ -744,41 +715,50 @@ class VectorDBApi:
         except FileNotFoundError:
             raise _ApiError(400, f"no committed version <= {version}")
 
-    # -- POST /query (reference :230-312) -------------------------------
-    def query(self, body: dict) -> dict:
+    def _knn(self, embs: list, body: dict, *, batch: bool) -> dict:
+        """The one body of the KNN verb behind /query, /query_batch,
+        /search and /search_batch (reference :230-312): ``results[i]``
+        answers ``embs[i]``. Empty store → empty results BEFORE
+        validation (mock_vector_db_api.py:259-260 precedes :270-272;
+        ``batch`` names a bad vector's position). Tier choice: a
+        time-travel ``version`` reads its snapshot; otherwise the
+        matrix tier scores all Q in ONE GEMM with no Spark job
+        (`DriverMatrixIndex.query_batch`); past it the sign-bit dial
+        (``hamming_shortlist``) goes to the bits tier; everything else
+        ranks distributed through `knn_rank` (the single-probe plan at
+        Q=1, where ``mrl_dim`` has its prefix arm; one BLAS corpus pass
+        for Q>1, where the dial is a 400). Same Q1/Q3/Q4/Q5 semantics
+        on every tier, threshold 0.1 after the limit."""
+        from pyspark.sql import Observation
+
+        from converttovectordb_spark.operators.search import (
+            knn_rank,
+            validate_top_k,
+        )
+
         start = time.time()
-        emb = body.get("query_embedding")
-        if not emb:
-            raise _ApiError(400, "No query embedding provided")
-        top_k = body.get("top_k", 5)
-        if not isinstance(top_k, int) or isinstance(top_k, bool) or top_k <= 0:
-            top_k = 5
+        top_k = validate_top_k(body.get("top_k", 5))
         mrl_dim, mrl_shortlist = self._mrl_params(body)
         hamming_shortlist = self._hamming_param(body, mrl_dim)
-
-        eng = self.engine
-        if not eng.store.exists():
-            # reference order: empty-db → 200 empty BEFORE validation
-            # (mock_vector_db_api.py:259-260 precedes :270-272)
-            return {"results": [], "query_time": time.time() - start,
-                    "total_documents_searched": 0}
-        emb = self._query_vector(emb)
+        empty = {"results": [[] for _ in embs], "total_documents_searched": 0}
+        if not self.engine.store.exists():
+            return {**empty, "query_time": time.time() - start}
+        vecs = [
+            self._query_vector(emb, f" at index {i}" if batch else "")
+            for i, emb in enumerate(embs)
+        ]
         version = body.get("version")
         if version is not None:
             docs = self._snapshot(version, hamming_shortlist)
         else:
             handle = self._corpus_handle()
             if handle is None:  # store cleared between exists() and load
-                return {"results": [], "query_time": time.time() - start,
-                        "total_documents_searched": 0}
-            kind, corpus = handle
+                return {**empty, "query_time": time.time() - start}
+            kind, docs = handle
             if kind == "matrix":
-                # Matrix tier: the reference's own serving plan (in-
-                # memory scan) with cached norms — no Spark job on the
-                # hot path. Same Q1/Q3/Q4/Q5 semantics as knn_topk.
                 try:
-                    rows = corpus.query(
-                        emb,
+                    results = docs.query_batch(
+                        vecs,
                         top_k,
                         id_cols=["path", "chunk_index"],
                         mrl_dim=mrl_dim,
@@ -788,195 +768,68 @@ class VectorDBApi:
                 except ValueError as e:
                     raise _ApiError(400, str(e))
                 return {
-                    "results": rows,  # already embedding-free dicts
+                    "results": results,  # already embedding-free dicts
                     "query_time": time.time() - start,
-                    "total_documents_searched": corpus.n,
+                    "total_documents_searched": docs.n,
                 }
             if hamming_shortlist is not None:
-                # Past the matrix budget, the sign-bit dial is served
-                # by the tier whose layout justifies it: packed bits
-                # driver-side, bounded sidecar rerank fetch — the
-                # regime where the 64×-smaller bytes, not FLOPs, are
-                # the win (SCALING.md). The distributed scan has no
-                # Hamming arm, so past the bits budgets too it's a
-                # 400, like mrl_dim on the distributed batch door.
-                return self._serve_bits(
-                    emb, top_k, hamming_shortlist, start, batch=False
-                )
-            docs = corpus
-        # One action serves both the rows and the corpus size: count the
-        # scanned docs as an observe metric on the same search job
+                # past the matrix budget the sign-bit dial is served by
+                # the tier whose layout justifies it: packed bits
+                # driver-side, one bounded sidecar fetch (SCALING.md)
+                return self._serve_bits(vecs, top_k, hamming_shortlist, start)
+        # the corpus size rides the search job as an observe metric
         # instead of a second count() pass (reference keeps
-        # len(documents) in memory, :308).
-        from pyspark.sql import Observation
-
-        from converttovectordb_spark.operators.search import knn_topk
-
-        from converttovectordb_spark.operators.serving import (
-            point_query_mode,
-        )
-
+        # len(documents) in memory, :308)
         obs = Observation()
         try:
-            hits = knn_topk(
+            hits = knn_rank(
                 docs.observe(obs, F.count(F.lit(1)).alias("n_docs")),
-                emb,
+                vecs,
                 top_k,
                 id_cols=["path", "chunk_index"],
-                expected_dim=eng.dim,
+                expected_dim=self.engine.dim,
                 mrl_dim=mrl_dim,
                 mrl_shortlist=mrl_shortlist,
             )
         except ValueError as e:
             raise _ApiError(400, str(e))
-        with point_query_mode(eng.spark):
-            rows = _rows_to_json(hits.collect())
         return {
-            "results": rows,
+            "results": self._rows_by_query(hits, len(vecs), rank_col="rank"),
             "query_time": time.time() - start,
             "total_documents_searched": int(obs.get["n_docs"]),
         }
+
+    # -- POST /query (reference :230-312) -------------------------------
+    def query(self, body: dict) -> dict:
+        """One query vector: `_knn` at Q=1."""
+        emb = body.get("query_embedding")
+        if not emb:
+            raise _ApiError(400, "No query embedding provided")
+        out = self._knn([emb], body, batch=False)
+        return {**out, "results": out["results"][0]}
 
     # -- POST /query_batch (API extension: the bulk door) ----------------
     def query_batch(self, body: dict) -> dict:
         """Q query vectors per POST — where Spark (and BLAS) win over
         the reference's one-query-per-request client loop
-        (query_vector_db.py:133-140). Matrix tier: ONE GEMM scores all
-        queries (`DriverMatrixIndex.query_batch`); distributed tier:
-        one broadcast `knn_join` Spark job for the whole batch instead
-        of Q sequential scans. Per-query semantics are IDENTICAL to
-        /query (Q1/Q3/Q4/Q5, threshold after limit); ``results[i]``
-        answers ``query_embeddings[i]``."""
-        start = time.time()
+        (query_vector_db.py:133-140): `_knn`, whose kernel follows Q
+        (one GEMM on the matrix tier; distributed, the single-probe
+        plan for one vector and one BLAS corpus pass for Q>1).
+        Per-query semantics are IDENTICAL to /query;
+        ``results[i]`` answers ``query_embeddings[i]``."""
         embs = body.get("query_embeddings")
         if not embs or not isinstance(embs, list):
             raise _ApiError(400, "No query embeddings provided")
-        top_k = body.get("top_k", 5)
-        if not isinstance(top_k, int) or isinstance(top_k, bool) or top_k <= 0:
-            top_k = 5
-        mrl_dim, mrl_shortlist = self._mrl_params(body)
-        hamming_shortlist = self._hamming_param(body, mrl_dim)
-        eng = self.engine
-        if not eng.store.exists():
-            return {
-                "results": [[] for _ in embs],
-                "query_time": time.time() - start,
-                "total_documents_searched": 0,
-            }
-        clean = [
-            self._query_vector(emb, f" at index {i}")
-            for i, emb in enumerate(embs)
-        ]
-        version = body.get("version")
-        if version is not None:
-            snap = self._snapshot(
-                version, hamming_shortlist, batch_mrl_dim=mrl_dim
-            )
-            return self._query_batch_distributed(snap, clean, top_k, start)
-        handle = self._corpus_handle()
-        if handle is None:
-            return {
-                "results": [[] for _ in embs],
-                "query_time": time.time() - start,
-                "total_documents_searched": 0,
-            }
-        kind, corpus = handle
-        if kind == "matrix":
-            try:
-                results = corpus.query_batch(
-                    clean,
-                    top_k,
-                    id_cols=["path", "chunk_index"],
-                    mrl_dim=mrl_dim,
-                    mrl_shortlist=mrl_shortlist,
-                    hamming_shortlist=hamming_shortlist,
-                )
-            except ValueError as e:
-                raise _ApiError(400, str(e))
-            return {
-                "results": results,
-                "query_time": time.time() - start,
-                "total_documents_searched": corpus.n,
-            }
-        if hamming_shortlist is not None:
-            # same tier rule as /query: past the matrix budget the
-            # sign-bit dial is the bits tier's job (one sidecar fetch
-            # for the whole batch), never a silent undialled answer
-            return self._serve_bits(
-                clean, top_k, hamming_shortlist, start, batch=True
-            )
-        if mrl_dim is not None:
-            # the distributed batch door scores with a full-width BLAS
-            # kernel (knn_join_blas) — no prefix arm there yet; a
-            # silent full-dim answer to an mrl_dim request would
-            # misreport the dial as turned
-            raise _ApiError(
-                400,
-                "mrl_dim on /query_batch requires the matrix serving "
-                "tier; this corpus exceeds its admission budget — use "
-                "/query per query or the indexed search door",
-            )
-        return self._query_batch_distributed(corpus, clean, top_k, start)
+        return self._knn(embs, body, batch=True)
 
-    def _query_batch_distributed(
-        self, corpus, clean: list, top_k: int, start: float
-    ) -> dict:
-        """One BLAS-scored corpus pass for the whole batch
-        (`knn_join_blas`: each Arrow chunk matmuls against all Q
-        queries and keeps chunk-local top-k — the interpreted per-pair
-        fold `knn_join` costs ~0.9 ms per pair-core and grows
-        linearly in Q (5.8 s vs 0.47 s measured at Q=16 over
-        13,515 × 384) — seconds of scoring per POST this door cannot
-        afford;
-        the graded queries keep the fold for oracle bit-parity).
-        Per-query tie-break is the same (path asc, chunk_index asc)
-        order the single-query door uses; payload columns are CARRIED
-        through the scoring — a join-back on the identity would fan
-        out across duplicate-identity copies from a blind re-push,
-        pairing one copy's score with another's content. Only the
-        ≤ Q·(k + boundary ties) chunk survivors reach the final
-        exchange, never the Q×N pair stream."""
-        eng = self.engine
-        from pyspark.sql import Observation
-
-        from converttovectordb_spark.functions.vector import NORM_COL
-        from converttovectordb_spark.operators.search import knn_join_blas
-        from converttovectordb_spark.operators.serving import (
-            point_query_mode,
-        )
-
-        obs = Observation()
-        docs = corpus.observe(obs, F.count(F.lit(1)).alias("n_docs"))
-        carry = [
-            c for c in docs.columns if c not in ("embedding", NORM_COL)
-        ]
-        hits = knn_join_blas(
-            list(enumerate(clean)),
-            docs,
-            top_k,
-            query_id_col="query_index",
-            score_threshold=0.1,
-            carry_cols=carry,
-            order_cols=["path", "chunk_index"],
-        )
-        with point_query_mode(eng.spark):
-            rows = hits.collect()
-        results = [[] for _ in clean]
-        for r in sorted(rows, key=lambda r: (r["query_index"], r["rank"])):
-            d = r.asDict(recursive=True)
-            d.pop("query_index"), d.pop("rank")
-            results[r["query_index"]].append(d)
-        return {
-            "results": results,
-            "query_time": time.time() - start,
-            "total_documents_searched": int(obs.get["n_docs"]),
-        }
+    def _text_vectors(self, texts: list) -> list:
+        """Query texts → vectors in ONE embedder call (the embed seam
+        is Arrow/model-batched — Q strings cost barely more than one)."""
+        return [[float(x) for x in v] for v in self.engine.embedder(texts)]
 
     # -- POST /search_batch (API extension: bulk text door) --------------
     def search_batch(self, body: dict) -> dict:
-        """Q query TEXTS per POST: ONE embedder call for the whole
-        batch (the embed seam is Arrow/model-batched — Q strings cost
-        barely more than one), then the /query_batch path end to end.
+        """Q query TEXTS per POST, embedded together, then `_knn`.
         ``results[i]`` answers ``queries[i]`` with /query semantics."""
         queries = body.get("queries")
         if (
@@ -985,61 +838,25 @@ class VectorDBApi:
             or not all(isinstance(q, str) and q for q in queries)
         ):
             raise _ApiError(400, "No queries provided")
-        embs = [
-            [float(x) for x in v] for v in self.engine.embedder(queries)
-        ]
-        return self.query_batch(
-            {"query_embeddings": embs, "top_k": body.get("top_k", 5)}
+        return self._knn(
+            self._text_vectors(queries),
+            {"top_k": body.get("top_k", 5)},
+            batch=True,
         )
 
     # -- engine-native verbs --------------------------------------------
     def search_text(self, body: dict) -> dict:
-        start = time.time()
+        """One query text, embedded driver-side, then `_knn` at Q=1 —
+        the same tiered cache as /query."""
         query = body.get("query")
         if not query:
             raise _ApiError(400, "No query provided")
-        # Text door rides the same tiered cache as /query: the query
-        # embeds DRIVER-side (one string through the embedder seam), so
-        # when the corpus sits in the matrix tier no Spark job runs at
-        # all. engine.search stays the cold-path / snapshot fallback.
-        top_k = body.get("top_k", 5)
-        handle = self._corpus_handle()
-        if handle is not None and handle[0] == "matrix":
-            import numpy as np
-
-            from converttovectordb_spark.operators.search import (
-                validate_top_k,
-            )
-
-            eng = self.engine
-            qv = np.asarray(
-                eng.embedder([query]), dtype=np.float64
-            ).reshape(-1).tolist()
-            if eng.dim is not None and len(qv) != eng.dim:
-                raise _ApiError(400, "Query embedding dimension mismatch")
-            try:
-                rows = handle[1].query(
-                    qv,
-                    validate_top_k(top_k),
-                    id_cols=["path", "chunk_index"],
-                )
-            except ValueError as e:
-                raise _ApiError(400, str(e))
-            return {"results": rows,
-                    "query_time": time.time() - start}
-        # Distributed tier: the cache fill already paid the load + norm
-        # precompute — hand the cached prenormed DataFrame to the engine
-        # so the fallback does NOT re-load the store cold per query.
-        corpus = handle[1] if handle is not None else None
-        hits = self.engine.search(query, top_k, corpus=corpus)
-        from converttovectordb_spark.operators.serving import (
-            point_query_mode,
+        out = self._knn(
+            self._text_vectors([query]),
+            {"top_k": body.get("top_k", 5)},
+            batch=False,
         )
-
-        with point_query_mode(self.engine.spark):
-            rows = _rows_to_json(hits.collect())
-        return {"results": rows,
-                "query_time": time.time() - start}
+        return {"results": out["results"][0], "query_time": out["query_time"]}
 
     def hybrid(self, body: dict) -> dict:
         """One hybrid query: /hybrid_batch's path at Q=1."""
@@ -1123,20 +940,24 @@ class VectorDBApi:
             raise _ApiError(400, str(e))
         return self._rows_by_query(hits, len(queries))
 
-    def _rows_by_query(self, hits, n: int) -> list:
+    def _rows_by_query(self, hits, n: int, *, rank_col=None) -> list:
         """Collect a batch door's rows into ``n`` per-query lists by
-        their ``query_index``, embeddings stripped (T5)."""
+        their ``query_index`` (in ``rank_col`` order when given, which
+        is then dropped), embeddings stripped (T5)."""
         from converttovectordb_spark.operators.serving import (
             point_query_mode,
         )
 
         with point_query_mode(self.engine.spark):
             rows = hits.collect()
+        if rank_col is not None:
+            rows.sort(key=lambda r: r[rank_col])
         results: list = [[] for _ in range(n)]
         for r in rows:
             d = r.asDict(recursive=True)
             qi = d.pop("query_index")
             d.pop("embedding", None)
+            d.pop(rank_col, None)
             results[qi].append(d)
         return results
 

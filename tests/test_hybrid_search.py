@@ -72,8 +72,8 @@ def test_hybrid_empty_store_column_order(spark, tmp_path):
         spark, str(tmp_path / "nostore"), embedder=hash_embedder(16), dim=16
     )
     assert eng.search_hybrid("anything").columns == [
-        "path", "extension", "chunk_index", "total_chunks", "content",
-        "timestamp", "sem_rank", "lex_rank", "rrf",
+        "sem_rank", "lex_rank", "rrf", "path", "chunk_index",
+        "total_chunks", "content", "timestamp", "extension",
     ]
 
 

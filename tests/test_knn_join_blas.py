@@ -153,3 +153,39 @@ def test_ragged_embeddings_raise_named_error(spark):
             top_k=2,
             carry_cols=["vec_id"],
         ).collect()
+
+
+def test_knn_rank_single_and_batch_kernels_agree(spark, docs):
+    """knn_rank picks `knn_topk` at Q=1 and `knn_join_blas` for Q>1:
+    a query ranks the same rows in the same order either way (exact
+    ties broken by id), scores agree to 1e-9, the threshold cuts after
+    the limit, and the prefix dial is refused for Q>1."""
+    from converttovectordb_spark.operators.search import knn_rank
+
+    qv = docs.filter(F.col("vec_id") == 5).first()["embedding"]
+    other = _q(spark, 1)[0][1]
+
+    def ranked(vectors, k=4, **kw):
+        rows = knn_rank(docs, vectors, k, id_cols=["vec_id"], **kw).collect()
+        return sorted(
+            (r.query_index, r.rank, r.vec_id, r.score) for r in rows
+        )
+
+    one = ranked([qv], score_threshold=None)
+    both = ranked([other, qv], score_threshold=None)
+    # rows repeat every 11 ids: the top 4 tie exactly, ids ascending
+    assert [r[2] for r in one] == [5, 16, 27, 38]
+    assert len({r[3] for r in one}) == 1
+    assert [(1, *r[1:3]) for r in one] == [r[:3] for r in both if r[0] == 1]
+    for a, b in zip(one, [r for r in both if r[0] == 1]):
+        assert a[3] == pytest.approx(b[3], abs=1e-9)
+    # threshold after the limit: fewer rows, never replaced
+    top = ranked([other], k=20, score_threshold=None)
+    t = (top[0][3] + top[-1][3]) / 2
+    cut = ranked([other], k=20, score_threshold=t)
+    assert 0 < len(cut) < len(top)
+    assert cut == [r for r in top if r[3] >= t]
+    with pytest.raises(ValueError, match="matrix"):
+        knn_rank(docs, [qv, other], 4, id_cols=["vec_id"], mrl_dim=4)
+    with pytest.raises(ValueError, match="dimension"):
+        knn_rank(docs, [qv[:3]], 4, id_cols=["vec_id"], expected_dim=8)

@@ -122,8 +122,8 @@ def test_engine_search_diverse_truncates_and_keeps_empty_shape(
 
     empty = VectorEngine(spark, str(tmp_path / "none"), dim=16)
     assert empty.search_diverse("anything").columns == [
-        "score", "mmr", "mmr_rank", "path", "extension", "chunk_index",
-        "total_chunks", "content", "timestamp",
+        "score", "mmr", "mmr_rank", "path", "chunk_index",
+        "total_chunks", "content", "timestamp", "extension",
     ]
 
     repo = tmp_path / "repo"

@@ -462,9 +462,10 @@ def test_rest_query_mrl_dim_both_tiers(spark, tmp_path):
 
 
 def test_rest_query_batch_mrl_dim_matrix_only(spark, tmp_path):
-    """/query_batch turns the dial on the matrix tier and refuses
-    (400, named reason) on the distributed tier rather than silently
-    serving full-dim answers to an mrl_dim request."""
+    """/query_batch turns the dial on the matrix tier; on the
+    distributed tier it answers one vector as /query does and refuses
+    (400, named reason) a batch of more rather than silently serving
+    full-dim answers to an mrl_dim request."""
     from converttovectordb_spark.embeddings import hash_embedder
     from converttovectordb_spark.engine import VectorEngine
     from converttovectordb_spark.server import VectorDBServer
@@ -498,9 +499,22 @@ def test_rest_query_batch_mrl_dim_matrix_only(spark, tmp_path):
         _seed(srv2)
         st, err = _call(
             srv2, "POST", "/query_batch",
-            {"query_embeddings": [_unit(2)], "top_k": 3, "mrl_dim": 4},
+            {"query_embeddings": [_unit(2), _unit(5)], "top_k": 3,
+             "mrl_dim": 4},
         )
         assert st == 400 and "matrix" in err["error"]
+        # one vector is the single-probe plan, whose prefix arm /query
+        # shares
+        st, one = _call(
+            srv2, "POST", "/query_batch",
+            {"query_embeddings": [_unit(2)], "top_k": 3, "mrl_dim": 4},
+        )
+        st2, single = _call(
+            srv2, "POST", "/query",
+            {"query_embedding": _unit(2), "top_k": 3, "mrl_dim": 4},
+        )
+        assert st == st2 == 200
+        assert one["results"] == [single["results"]]
     finally:
         srv2.stop()
 

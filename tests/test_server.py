@@ -152,6 +152,28 @@ def test_query_roundtrip_and_envelope(server):
     assert len(out["results"]) == 1
 
 
+def test_search_embedder_width_mismatch_is_400_on_both_tiers(
+    spark, tmp_path
+):
+    """A /search whose embedder yields vectors of another width than
+    the engine's ``dim`` is a client-visible 400 on the matrix tier and
+    on the distributed tier alike, not a 500 from the scan."""
+    for name, cells in (("matrix", None), ("df", 0)):
+        eng = VectorEngine(
+            spark, str(tmp_path / name), embedder=hash_embedder(DIM), dim=DIM
+        )
+        srv = VectorDBServer(eng, port=0, matrix_max_cells=cells).start()
+        try:
+            _seed(srv)
+            eng.embedder = hash_embedder(DIM + 1)
+            status, out = _call(
+                srv, "POST", "/search", {"query": "document", "top_k": 3}
+            )
+            assert status == 400 and "dimension mismatch" in out["error"]
+        finally:
+            srv.stop()
+
+
 def test_query_error_semantics(server):
     # empty store → 200 with empty results (reference :259-260)
     status, out = _call(server, "POST", "/query", {"query_embedding": _unit(0)})

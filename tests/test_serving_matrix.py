@@ -262,6 +262,53 @@ def test_hybrid_query_matches_engine_on_varied_corpus(spark, tmp_path):
         assert abs(r["rrf"] - w["rrf"]) < 1e-9
 
 
+def test_hybrid_query_boundary_ties_rank_like_a_full_sort():
+    """Both hybrid arms cut to ``candidates`` before sorting; with more
+    rows tied at the cut than ``candidates``, each arm's ranks must
+    still equal a (score desc, rid asc) sort of every row."""
+    import numpy as np
+
+    from converttovectordb_spark.operators.search import cosine_scores
+
+    rng = np.random.default_rng(5)
+    n, candidates = 60, 10
+    q = np.zeros(8)
+    q[0] = 1.0
+    tied = np.full(8, 0.5)
+    groups = ["top"] * 4 + ["tied"] * 36 + ["rest"] * 20
+    vecs = np.array(
+        [q if g == "top" else tied if g == "tied" else -rng.random(8)
+         for g in groups]
+    )
+    texts = {"top": "alpha alpha gamma", "tied": "alpha beta gamma",
+             "rest": "delta epsilon zeta"}
+    # rid order differs from matrix order
+    paths = [f"d{j:02d}.txt" for j in rng.permutation(n)]
+    payload = [
+        {"path": p, "chunk_index": 0, "content": texts[g]}
+        for p, g in zip(paths, groups)
+    ]
+    norms = np.sqrt((vecs * vecs).sum(axis=1))
+    idx = DriverMatrixIndex(vecs, norms, payload, 8)
+    got = idx.hybrid_query(
+        q.tolist(), ["alpha"], 2 * candidates, candidates=candidates,
+        id_cols=["path", "chunk_index"],
+    )
+
+    rid = [f"{p}#0" for p in paths]
+    sem = cosine_scores(vecs, norms, q[None, :])[:, 0]
+    tf = [texts[g].split().count("alpha") for g in groups]
+    touched = [i for i in range(n) if tf[i]]
+    want_sem = sorted(range(n), key=lambda i: (-sem[i], rid[i]))
+    want_lex = sorted(touched, key=lambda i: (-tf[i], rid[i]))
+    want = {
+        paths[i]: (r + 1, None) for r, i in enumerate(want_sem[:candidates])
+    }
+    for r, i in enumerate(want_lex[:candidates]):
+        want[paths[i]] = (want.get(paths[i], (None,))[0], r + 1)
+    assert {r["path"]: (r["sem_rank"], r["lex_rank"]) for r in got} == want
+
+
 def test_serving_scan_partitions_bounds():
     from converttovectordb_spark.operators.serving import (
         SERVING_SCAN_TARGET_ROWS,

@@ -271,3 +271,66 @@ def test_engine_search_batch_indexed(spark, tmp_path):
         )
         > 0
     )
+
+
+_TEXTS = [
+    "def alpha():\n    return 'first'\n" * 3,
+    "# beta\nsecond topic entirely\n" * 3,
+]
+
+#: every search door of the engine facade, answered for one or two
+#: texts (the batch doors at Q>1 run their batch kernels)
+_DOORS = {
+    "search": lambda e: e.search(_TEXTS[0], top_k=3),
+    "search_vector": lambda e: e.search_vector(
+        [float(x) for x in e.embedder(_TEXTS[:1])[0]], top_k=3
+    ),
+    "search_batch": lambda e: e.search_batch(_TEXTS, top_k=3),
+    "search_hybrid": lambda e: e.search_hybrid(_TEXTS[0], top_k=3),
+    "search_hybrid_batch": lambda e: e.search_hybrid_batch(_TEXTS, top_k=3),
+    "search_diverse": lambda e: e.search_diverse(_TEXTS[0], top_k=3),
+    "search_diverse_batch": lambda e: e.search_diverse_batch(
+        _TEXTS, top_k=3
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def ingested_pair(spark, tmp_path_factory):
+    """An ingested (extension-partitioned) engine and a never-ingested
+    one with the same embedder."""
+    from converttovectordb_spark.embeddings import hash_embedder
+    from converttovectordb_spark.engine import VectorEngine
+
+    root = tmp_path_factory.mktemp("doors")
+    repo = root / "repo"
+    repo.mkdir()
+    (repo / "a.py").write_text("def alpha():\n    return 'first'\n" * 15)
+    (repo / "b.md").write_text("# beta\nsecond topic entirely\n" * 10)
+
+    def engine(name):
+        return VectorEngine(
+            spark, str(root / name), embedder=hash_embedder(32), dim=32,
+            chunk_size=300, overlap=50,
+        )
+
+    full = engine("store")
+    full.ingest(str(repo))
+    return full, engine("none")
+
+
+@pytest.mark.parametrize("door", sorted(_DOORS))
+def test_empty_store_result_unions_positionally(ingested_pair, door):
+    """An empty store answers each door with the populated columns in
+    the populated order, so a positional ``union`` (not
+    ``unionByName``) with a populated answer keeps every value under
+    its own column."""
+    full_eng, empty_eng = ingested_pair
+    full = _DOORS[door](full_eng)
+    empty = _DOORS[door](empty_eng)
+    assert empty.collect() == []
+    assert empty.columns == full.columns
+    want = full.collect()
+    assert want
+    got = empty.union(full).collect()
+    assert sorted(map(repr, got)) == sorted(map(repr, want))
